@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .operators import annotate, frame_stats, sinks
 from .schemas import TOPIC_WHITELIST
 from .sources import frames_source
+from .sources.rosbag_format import FRAME_COLUMNS, MESSAGE_COLUMNS
 from .streaming import pipeline as sp
 
 
@@ -35,7 +36,7 @@ class PipelineConfig:
     manifest_dir: str
     # the reference's acceptable_topics whitelist (engine.py:200-209);
     # keeps sensor_msgs/Image blobs out of the message landing table
-    # (frames take the decode_bag_frames path). None = decode everything.
+    # (they land as PNG frames instead). None = decode everything.
     topics: list[str] | None = field(
         default_factory=lambda: list(TOPIC_WHITELIST)
     )
@@ -47,20 +48,22 @@ class PipelineConfig:
 def process_bags(
     spark: SparkSession, cfg: PipelineConfig, batch: DataFrame
 ) -> list[str]:
-    """One batch of bag blobs through the full E2+E1 computation.
+    """One batch of bags (rows with a ``path``) through the full E2+E1
+    computation.
 
-    Both bag outputs (topic tables AND frames) come from the same scan —
-    the reference needs two full bag passes plus a realtime replay
-    (engine.py:96-137); here each is one ``mapInPandas`` decode over the
-    already-loaded blobs. Appends (not overwrites) so each incremental tick
-    adds its bags to the landing tables.
+    Both bag outputs (topic tables AND frames) come from ONE read of each
+    bag — the reference needs two full bag passes plus a realtime replay
+    (engine.py:96-137); here ``frames_source.decode_bags`` opens each bag
+    by path inside its task and parses it once. The decoded rows are
+    persisted and split into the topic landing and the frames. Appends (not
+    overwrites) so each incremental tick adds its bags to the landing tables.
 
-    Failure isolation is the quarantine pattern: the decoders run with
-    ``on_error="quarantine"`` so a corrupt bag becomes one error row, the
-    whole batch is ONE set of Spark jobs regardless of bag count, and the
-    failed paths ride back on the write job's ``observe()`` metrics (no
-    extra pass, no driver-side per-bag loop). Returns the failed bag paths
-    (O2: the caller records them as ``failure`` in the manifest).
+    Failure isolation is the quarantine pattern: a corrupt bag becomes one
+    error row, the whole batch is ONE set of Spark jobs regardless of bag
+    count, and the failed paths ride back on the landing write's
+    ``observe()`` metrics (no extra pass, no driver-side per-bag loop).
+    Returns the failed bag paths (O2: the caller records them as
+    ``failure`` in the manifest).
 
     REPLAY-IDEMPOTENT sinks: every landing table partitions by bag_id and
     writes as a DYNAMIC partition overwrite, so a bag re-run after
@@ -72,57 +75,48 @@ def process_bags(
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    is_msg = F.col("topic").isNotNull()
     bad = F.col("decode_error").isNotNull()
-    failed_set = F.collect_set(F.when(bad, F.col("bag_path")))
 
+    # persist: the bag parse + per-frame PNG encode is the most expensive
+    # stage, and its rows feed the landing AND three frame sinks (stats,
+    # labels, annotated) — uncached it would re-decode every bag per sink
+    decoded = frames_source.decode_bags(batch, cfg.topics).persist()
+    frames = decoded.filter(F.col("camera").isNotNull()).select(FRAME_COLUMNS)
+    labels = annotate.infer_labels(frames, model_fn=cfg.model_fn).persist()
     # A3: pipeline counters via observe() — collected from the write job
     # itself, no extra pass over the data (the reference counts uploads in a
     # Python loop, engine.py:282-300).
     obs = Observation("decode_metrics")
-    msgs = frames_source.decode_bag_blobs(
-        batch, cfg.topics, on_error="quarantine"
-    ).observe(
-        obs,
-        F.count(F.when(~bad, F.lit(1))).alias("n_messages"),
-        # observe() forbids DISTINCT aggregates; HLL is exact at topic-count
-        # cardinalities
-        F.approx_count_distinct(F.when(~bad, F.col("topic"))).alias("n_topics"),
-        failed_set.alias("failed_paths"),
+    msgs = (
+        decoded.observe(
+            obs,
+            F.count(F.when(is_msg, F.lit(1))).alias("n_messages"),
+            # observe() forbids DISTINCT aggregates; HLL is exact at
+            # topic-count cardinalities
+            F.approx_count_distinct("topic").alias("n_topics"),
+            F.collect_set(F.when(bad, F.col("bag_path"))).alias("failed_paths"),
+        )
+        .filter(is_msg)
+        .select(MESSAGE_COLUMNS)
     )
     prev_mode = spark.conf.get(
         "spark.sql.sources.partitionOverwriteMode", "static"
     )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    msgs.filter(~bad).drop("bag_path", "decode_error").write.partitionBy(
-        "bag_id", "topic"
-    ).mode("overwrite").option("compression", "snappy").parquet(
-        f"{cfg.output_dir}/topic_messages"
-    )
-    cfg.extra["last_metrics"] = obs.get
-    failed = list(obs.get["failed_paths"])
-
-    good = batch
-    if failed:
-        good = batch.filter(~F.col("path").isin(failed))
-    frames_obs = Observation("frame_decode")
-    # persist: the bag parse + per-frame PNG encode is the most expensive
-    # stage, and frames feeds THREE sinks (stats, labels, annotated) —
-    # uncached it would re-decode every bag once per sink
-    frames = (
-        frames_source.decode_bag_frames(good, on_error="quarantine")
-        .observe(frames_obs, failed_set.alias("failed_paths"))
-        .filter(~bad)
-        .drop("bag_path", "decode_error")
-    ).persist()
-    labels = annotate.infer_labels(frames, model_fn=cfg.model_fn).persist()
     try:
+        msgs.write.partitionBy(
+            "bag_id", "topic"
+        ).mode("overwrite").option("compression", "snappy").parquet(
+            f"{cfg.output_dir}/topic_messages"
+        )
+        cfg.extra["last_metrics"] = obs.get
+        failed = list(obs.get["failed_paths"])
+
         stats = frame_stats.pivot_stats(labels)
         stats.write.partitionBy("bag_id").mode("overwrite").parquet(
             f"{cfg.output_dir}/frame_stats"
         )
-        failed += [
-            p for p in frames_obs.get["failed_paths"] if p not in failed
-        ]
         labels.write.partitionBy("bag_id", "camera").mode("overwrite").json(
             f"{cfg.output_dir}/labels"
         )
@@ -142,7 +136,7 @@ def process_bags(
         spark.conf.set(
             "spark.sql.sources.partitionOverwriteMode", prev_mode
         )
-        frames.unpersist()
+        decoded.unpersist()
         labels.unpersist()
     return failed
 
@@ -163,7 +157,12 @@ def run_once(spark: SparkSession, cfg: PipelineConfig) -> dict[str, str]:
 
 def run_stream_tick(spark: SparkSession, cfg: PipelineConfig, checkpoint_dir: str) -> None:
     """One ``Trigger.AvailableNow`` streaming tick (exactly-once discovery
-    via checkpoint; the O4 form of the reference's 30-minute cron)."""
+    via checkpoint; the O4 form of the reference's 30-minute cron).
+
+    Known limit: the ``binaryFile`` stream rejects a schema without
+    ``content``, so this tick still reads each bag through the JVM and
+    fails on a bag over ``spark.sql.sources.binaryFile.maxLength``; only
+    the batch tick (``run_once``) reads bags by path alone."""
     sp.run_available_now(
         spark,
         cfg.bags_dir,

@@ -1,7 +1,8 @@
 """Bag files as a first-class Spark data source (Python Data Source API).
 
-The SURVEY §4 "optional custom piece": instead of the two-step
-``binaryFile`` + ``mapInPandas`` decode, bags read like any other format —
+The SURVEY §4 "optional custom piece": instead of a ``binaryFile``
+listing plus a ``mapInPandas`` decode by path
+(sources/frames_source.py), bags read like any other format —
 
     spark.dataSource.register(BagDataSource)
     df = (spark.read.format("rosbag")
@@ -26,9 +27,9 @@ bags a landing prefix holds; at data-lake scale the ``binaryFile`` stream
 in streaming/pipeline.py (engine-side file index) is the workhorse and
 this source is the API-complete custom form.
 
-The record parser is the real ROS bag 2.0 codec
-(sources/rosbag_format.rosbag_decoder) — the same pluggable contract as
-sources/frames_source.py.
+Each partition opens its bag with ``rosbag_format.open_bag`` and parses it
+with the real ROS bag 2.0 codec (``rosbag_format.rosbag_decoder``) — the
+same open, unwrap and decode as sources/frames_source.py.
 """
 
 from __future__ import annotations
@@ -42,10 +43,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-TOPIC_MESSAGES_DDL = (
-    "bag_id string, topic string, rosbagTimestamp long, seq int, "
-    "payload map<string,string>"
-)
+from .frames_source import TOPIC_MESSAGES_DDL
 
 # Quarantine row for a bag whose decode raises: the reserved topic marks
 # it, payload carries the error. Without this, one corrupt bag fails the
@@ -55,17 +53,14 @@ DECODE_ERROR_TOPIC = "__decode_error__"
 
 
 def _decode_or_quarantine(path: str, topics):
-    from .rosbag_format import rosbag_decoder
+    from .rosbag_format import bag_id_from_path, open_bag, rosbag_decoder
 
-    with open(path, "rb") as f:
-        content = f.read()
     try:
-        pdf = rosbag_decoder(path, content, topics)
+        pdf = rosbag_decoder(path, open_bag(path), topics)
     except Exception as exc:  # noqa: BLE001 — quarantine boundary (same
-        import os  # contract as frames_source._quarantined)
-
-        stem = os.path.basename(path).split(".bag")[0]
-        yield (stem, DECODE_ERROR_TOPIC, None, None, {"error": str(exc)[:500]})
+        # contract as frames_source.decode_bags)
+        error = {"error": str(exc)[:500]}
+        yield (bag_id_from_path(path), DECODE_ERROR_TOPIC, None, None, error)
         return
     for row in pdf.itertuples(index=False):
         yield tuple(row)
@@ -80,22 +75,15 @@ class BagDataSourceReader(DataSourceReader):
     def __init__(self, options: dict):
         self.root = options.get("path")
         if not self.root:
-            raise ValueError("fixturebag: option 'path' is required")
+            raise ValueError("rosbag: option 'path' is required")
         topics = options.get("topics")
         self.topics = [t.strip() for t in topics.split(",")] if topics else None
 
     def partitions(self) -> list[InputPartition]:
         """One bag = one partition (the reference's unit of work)."""
-        import os
-
-        paths = []
-        for dirpath, _dirs, files in os.walk(self.root):
-            for f in sorted(files):
-                if ".bag" in f:
-                    paths.append(os.path.join(dirpath, f))
+        paths = _list_bags(self.root)
         if not paths:
             raise FileNotFoundError(f"no bag files under {self.root}")
-        _check_unique_stems(paths)
         return [BagInputPartition(p) for p in paths]
 
     def read(self, partition: BagInputPartition) -> Iterator[tuple]:

@@ -10,8 +10,6 @@ from __future__ import annotations
 import datetime as dt
 import hashlib
 import json
-import struct
-import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -111,81 +109,6 @@ def topic_messages(
 ) -> DataFrame:
     rows = [r for b in range(n_bags) for r in _bag_rows(b, duration_s, gap_pct)]
     return spark.createDataFrame(rows, TOPIC_MESSAGES_SCHEMA)
-
-
-BAG_MAGIC = b"#AADSBAG V1\n"
-
-
-def bag_bytes(
-    b: int,
-    duration_s: int = 4,
-    gap_pct: float = 0.005,
-    frames_per_camera: int = 12,
-) -> bytes:
-    """Serialize one bag in the LEGACY json-lines fixture format.
-
-    Retained as a *test helper* proving the decoder contract in
-    sources/frames_source.py is format-agnostic (``fixture_bag_decoder``
-    below plugs in where the real ROS bag codec is the default). Production
-    bags use ``rosbag_bytes`` — the genuine record format.
-    """
-    import base64
-
-    lines = [BAG_MAGIC.decode().rstrip("\n")]
-    for bag_id, topic, ts, seq, payload in _bag_rows(b, duration_s, gap_pct):
-        lines.append(
-            json.dumps(
-                {"bag_id": bag_id, "topic": topic, "t": ts, "seq": seq, "payload": payload},
-                sort_keys=True,
-            )
-        )
-    for bag_id, camera, idx, fname, ftime, w, h, png in _frame_rows(
-        b, frames_per_camera
-    ):
-        lines.append(
-            json.dumps(
-                {
-                    "bag_id": bag_id,
-                    "camera": camera,
-                    "idx": idx,
-                    "filename": fname,
-                    "t_us": int(ftime.timestamp() * 1_000_000),
-                    "w": w,
-                    "h": h,
-                    "png": base64.b64encode(png).decode(),
-                },
-                sort_keys=True,
-            )
-        )
-    return ("\n".join(lines) + "\n").encode()
-
-
-def fixture_bag_decoder(path: str, content: bytes, topics: list[str] | None):
-    """Json-fixture-format decoder (test helper): proves any parser matching
-    ``(path, bytes, topics) -> DataFrame[bag_id, topic, rosbagTimestamp,
-    seq, payload]`` plugs into ``decode_bag_blobs`` unchanged."""
-    import pandas as pd
-
-    from .frames_source import GZIP_MAGIC, untar_bag
-
-    if content[:2] == GZIP_MAGIC:
-        content = untar_bag(content)
-    if not content.startswith(BAG_MAGIC):
-        raise ValueError(f"not a fixture bag (bad magic) at {path}")
-    want = set(topics) if topics else None
-    rows = []
-    for line in content.decode().splitlines()[1:]:
-        if not line:
-            continue
-        m = json.loads(line)
-        if "topic" not in m:  # frame record
-            continue
-        if want is not None and m["topic"] not in want:
-            continue
-        rows.append((m["bag_id"], m["topic"], m["t"], m["seq"], m["payload"]))
-    return pd.DataFrame(
-        rows, columns=["bag_id", "topic", "rosbagTimestamp", "seq", "payload"]
-    )
 
 
 def rosbag_bytes(

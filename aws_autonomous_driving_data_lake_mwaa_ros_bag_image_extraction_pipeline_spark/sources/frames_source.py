@@ -5,24 +5,31 @@ listing, pushes the path glob down) + identity derivation — replaces the
 reference's "replay bag through ROS at 0.5× and save PNGs" (engine.py:96-99)
 with a deterministic one-pass scan.
 
-``read_bag_messages`` is the bag-decode contract (S4): binary bag blobs →
-long ``topic_messages``. The default decoder is the real pure-Python ROS
-bag 2.0 codec (sources/rosbag_format.py — record parser + definition-driven
-message deserializer, the format the reference reads via ``rosbag.Bag`` /
-``importRosbag``); the decoder stays pluggable for other container formats.
+``decode_bags`` is the bag-decode contract (S4/S10): bag paths → one row
+set per bag holding its topic messages AND its PNG frames. Each task opens
+its bags by path (sources/rosbag_format.open_bag) and parses each once with
+the real pure-Python ROS bag 2.0 codec (the format the reference reads via
+``rosbag.Bag`` / ``importRosbag``), so a bag never travels as a Spark row
+and ``binaryFile``'s row-size cap never applies. ``read_bag_messages`` is
+the messages-only form of the same read.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.frames import with_frame_identity
-from ..schemas import TOPIC_MESSAGES_SCHEMA
-from .rosbag_format import rosbag_decoder, rosbag_frame_decoder
+from .rosbag_format import (
+    FRAME_COLUMNS,
+    MESSAGE_COLUMNS,
+    decode_bag,
+    open_bag,
+    rosbag_decoder,
+)
 
 TOPIC_MESSAGES_DDL = (
     "bag_id string, topic string, rosbagTimestamp long, seq int, "
@@ -41,130 +48,84 @@ def read_frames(spark: SparkSession, path: str) -> DataFrame:
     return with_frame_identity(df, "path")
 
 
-GZIP_MAGIC = b"\x1f\x8b"
-
-
-def untar_bag(content: bytes) -> bytes:
-    """S6: unwrap a ``.tar.gz``-packed bag; asserts exactly one ``.bag``
-    member (engine.py:35-51 semantics — a tarball is one bag, never more)."""
-    import io
-    import tarfile
-
-    with tarfile.open(fileobj=io.BytesIO(content), mode="r:gz") as tf:
-        members = [m for m in tf.getmembers() if m.name.endswith(".bag")]
-        if len(members) != 1:
-            raise ValueError(
-                f"expected exactly one .bag in archive, found {len(members)}"
-            )
-        f = tf.extractfile(members[0])
-        assert f is not None
-        return f.read()
-
-
 FRAMES_DDL = (
     "bag_id string, camera string, frame_index int, filename string, "
     "frame_time timestamp, width int, height int, content binary"
 )
 
-# Quarantine columns appended by ``on_error="quarantine"``: every decoded
-# row carries its source path; a failed bag yields exactly one row with
-# ``decode_error`` set and all data columns null. This keeps per-bag
-# failure isolation inside ONE Spark job per tick (the O2 contract) —
-# no driver-side per-bag loop launching a filtered job per key.
-QUARANTINE_DDL = ", bag_path string, decode_error string"
+# ``decode_bags`` output: the message and frame columns side by side (a
+# message row leaves the frame columns null and vice versa) plus the
+# quarantine pair. Every row carries its source path; a failed bag yields
+# exactly one row with ``decode_error`` set and all data columns null. This
+# keeps per-bag failure isolation inside ONE Spark job per tick (the O2
+# contract) — no driver-side per-bag loop launching a filtered job per key.
+BAG_ROWS_DDL = (
+    TOPIC_MESSAGES_DDL
+    + FRAMES_DDL.removeprefix("bag_id string")
+    + ", bag_path string, decode_error string"
+)
+_BAG_ROWS_COLUMNS = [c.split()[0] for c in BAG_ROWS_DDL.split(", ")]
 
 
-def _quarantined(
-    decode_one: Callable[[pd.Series], pd.DataFrame],
-    columns: list[str],
-    on_error: str,
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """Wrap a per-row decode in the quarantine contract (shared by the
-    message and frame paths)."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error must be raise|quarantine, got {on_error!r}")
-    quarantine = on_error == "quarantine"
+def decode_bags(paths: DataFrame, topics: list[str] | None) -> DataFrame:
+    """Bag paths (any DataFrame with a ``path`` column) → ``BAG_ROWS_DDL``
+    rows: the messages on ``topics`` (None = all), a PNG frame row per
+    sensor_msgs/Image message, or one quarantine row for a bag that fails
+    to open or parse.
+
+    The decode runs over ``paths``' own partitions — a ``binaryFile``
+    listing scan gives one task per bag — and each bag is read once, by
+    path, inside its task (the reference needs two full bag passes plus a
+    realtime replay, engine.py:96-137). Tell the row kinds apart by
+    ``topic`` (message), ``camera`` (frame) or ``decode_error``.
+    """
+    want = set(topics) if topics else None
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for _, row in pdf.iterrows():
-                if not quarantine:
-                    yield decode_one(row)
-                    continue
+            for path in pdf["path"]:
                 try:
-                    out = decode_one(row)
+                    msgs, imgs = decode_bag(path, open_bag(path), want, True)
                 except Exception as exc:  # noqa: BLE001 — quarantine boundary
                     yield pd.DataFrame(
-                        [[None] * len(columns) + [row["path"], repr(exc)]],
-                        columns=columns + ["bag_path", "decode_error"],
+                        [[None] * (len(_BAG_ROWS_COLUMNS) - 2) + [path, repr(exc)]],
+                        columns=_BAG_ROWS_COLUMNS,
                     )
                     continue
-                out = out.copy()
-                out["bag_path"] = row["path"]
-                out["decode_error"] = None
-                yield out
+                # one pandas frame per row kind: mixing kinds would turn
+                # null-padded int columns into float64, and a float64
+                # rosbagTimestamp loses nanoseconds
+                for rows, cols in ((msgs, MESSAGE_COLUMNS), (imgs, FRAME_COLUMNS)):
+                    out = pd.DataFrame(rows, columns=cols).assign(bag_path=path)
+                    nulls = {c: None for c in _BAG_ROWS_COLUMNS if c not in out}
+                    yield out.assign(**nulls)[_BAG_ROWS_COLUMNS]
 
-    return _decode
-
-
-def decode_bag_frames(
-    blobs: DataFrame,
-    decoder: Callable[[str, bytes], pd.DataFrame] = rosbag_frame_decoder,
-    on_error: str = "raise",
-) -> DataFrame:
-    """Binary bag rows → frames table (S10 via bag decode; multimodal
-    column). Default: sensor_msgs/Image messages from real .bag bytes,
-    PNG-encoded. Same batching contract as ``decode_bag_blobs``."""
-    schema = FRAMES_DDL + (QUARANTINE_DDL if on_error == "quarantine" else "")
-    cols = [c.split()[0] for c in FRAMES_DDL.split(", ")]
-    _decode = _quarantined(
-        lambda row: decoder(row["path"], row["content"]), cols, on_error
-    )
-    return blobs.select("path", "content").mapInPandas(_decode, schema=schema)
-
-
-def decode_bag_blobs(
-    blobs: DataFrame,
-    topics: list[str] | None = None,
-    decoder: Callable[[str, bytes, list[str] | None], pd.DataFrame] = rosbag_decoder,
-    on_error: str = "raise",
-) -> DataFrame:
-    """Binary bag rows (path, content) → long topic_messages (S4/S6).
-
-    One bag = one input split = one Arrow batch through the decoder; the
-    topic predicate is pushed into the decoder (messages on unrequested
-    connections are skipped before deserialization) rather than filtered
-    after. Accepts any DataFrame with (path, content) — a batch scan, a
-    streaming micro-batch, or a test frame.
-
-    ``on_error="quarantine"`` appends (bag_path, decode_error) columns and
-    converts a corrupt bag into one error row instead of a task failure.
-    """
-    schema = TOPIC_MESSAGES_DDL + (
-        QUARANTINE_DDL if on_error == "quarantine" else ""
-    )
-    cols = [c.split()[0] for c in TOPIC_MESSAGES_DDL.split(", ")]
-    _decode = _quarantined(
-        lambda row: decoder(row["path"], row["content"], topics), cols, on_error
-    )
-    return blobs.select("path", "content").mapInPandas(_decode, schema=schema)
+    return paths.select("path").mapInPandas(_decode, schema=BAG_ROWS_DDL)
 
 
 def read_bag_messages(
-    spark: SparkSession,
-    path: str,
-    topics: list[str] | None = None,
-    decoder: Callable[[str, bytes, list[str] | None], pd.DataFrame] = rosbag_decoder,
+    spark: SparkSession, path: str, topics: list[str] | None = None
 ) -> DataFrame:
     """Bag files under ``path`` → long topic_messages (S4/S6).
 
-    The glob accepts both bare ``.bag`` and ``.bag.tar.gz`` objects — the
-    decoder sniffs the gzip magic and unwraps (S6).
+    The glob accepts both bare ``.bag`` and ``.bag.tar.gz`` objects
+    (``open_bag`` sniffs the gzip magic and unwraps, S6). The ``binaryFile``
+    scan only lists (no ``content`` column is read); each task opens its
+    bags by path and pushes the topic predicate into the parse.
     """
-    blobs = spark.read.format("binaryFile").option(
-        "pathGlobFilter", "*.bag*"
-    ).load(path)
-    return decode_bag_blobs(blobs, topics, decoder)
+    paths = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.bag*")
+        .load(path)
+        .select("path")
+    )
+
+    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for p in pdf["path"]:
+                yield rosbag_decoder(p, open_bag(p), topics)
+
+    return paths.mapInPandas(_decode, schema=TOPIC_MESSAGES_DDL)
 
 
 def bag_info(messages: DataFrame) -> DataFrame:

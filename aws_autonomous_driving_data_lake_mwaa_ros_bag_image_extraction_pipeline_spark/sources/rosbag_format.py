@@ -22,10 +22,11 @@ Decoded fields flatten to dotted names (``pose.position.x``,
 ``orientation_covariance.0``) — exactly the reference's per-topic CSV
 columns (bag_to_csv.py:114-136 stringifies ``name: value`` lines).
 
-Scale posture: one bag decodes inside one Arrow batch on one executor
-(sources/frames_source.py contract); the topic predicate skips message
-records *before* deserialization (only the 8-byte record header is read),
-so an image-heavy bag scanned for /imu never touches the pixel bytes.
+Scale posture: each bag is opened by path and decoded inside one task
+(``open_bag`` + ``decode_bag``, driven by sources/frames_source.py); the
+topic predicate skips message records *before* deserialization (only the
+8-byte record header is read), so an image-heavy bag scanned for /imu
+never touches the pixel bytes.
 """
 
 from __future__ import annotations
@@ -884,13 +885,42 @@ IMAGE_TOPIC_FMT = "/camera/{camera}/image_raw"
 
 
 # ---------------------------------------------------------------------------
-# decoder-contract functions (sources/frames_source.py plugs these in)
+# bag-level decode: open by URI, unwrap, one pass to message + frame rows
 # ---------------------------------------------------------------------------
+
+GZIP_MAGIC = b"\x1f\x8b"
+IMAGE_TYPE = "sensor_msgs/Image"
+MESSAGE_COLUMNS = ["bag_id", "topic", "rosbagTimestamp", "seq", "payload"]
+FRAME_COLUMNS = [
+    "bag_id",
+    "camera",
+    "frame_index",
+    "filename",
+    "frame_time",
+    "width",
+    "height",
+    "content",
+]
+
+
+def untar_bag(content: bytes) -> bytes:
+    """S6: unwrap a ``.tar.gz``-packed bag; asserts exactly one ``.bag``
+    member (engine.py:35-51 semantics — a tarball is one bag, never more)."""
+    import io
+    import tarfile
+
+    with tarfile.open(fileobj=io.BytesIO(content), mode="r:gz") as tf:
+        members = [m for m in tf.getmembers() if m.name.endswith(".bag")]
+        if len(members) != 1:
+            raise ValueError(
+                f"expected exactly one .bag in archive, found {len(members)}"
+            )
+        f = tf.extractfile(members[0])
+        assert f is not None
+        return f.read()
 
 
 def _maybe_unwrap(path: str, content: bytes) -> bytes:
-    from .frames_source import GZIP_MAGIC, untar_bag
-
     if content[:2] == GZIP_MAGIC:
         content = untar_bag(content)
     if not content.startswith(ROSBAG_MAGIC):
@@ -898,30 +928,110 @@ def _maybe_unwrap(path: str, content: bytes) -> bytes:
     return content
 
 
+def open_bag(path: str) -> bytes:
+    """A bag's bytes by path or URI (``file:/…``, ``s3://…``, a plain local
+    path), unwrapped and magic-checked. Read inside the task that decodes
+    it, so the bytes never cross the JVM and no ``binaryFile`` row-size cap
+    applies. ``open_input_file`` rather than ``open_input_stream``: the
+    stream form gunzips ``*.gz`` by extension, which would hide the gzip
+    magic from the unwrap. ``binaryFile`` paths are not percent-encoded
+    (``file:/a b.bag``), so a URI is quoted before pyarrow parses it."""
+    from urllib.parse import quote, urlsplit
+
+    from pyarrow import fs
+
+    uri = quote(path, safe=":/") if urlsplit(path).scheme else path
+    filesystem, inner = fs.FileSystem.from_uri(uri)
+    with filesystem.open_input_file(inner) as f:
+        return _maybe_unwrap(path, f.readall())
+
+
+def _frame_row(path: str, bag_id: str, topic: str, flat: dict) -> tuple:
+    import numpy as np
+    import pandas as pd
+
+    from ..functions import png
+
+    h, w = int(flat["height"]), int(flat["width"])
+    enc = str(flat["encoding"])
+    data = flat["data"]
+    if enc == "rgb8":
+        arr = np.frombuffer(data, dtype=np.uint8).reshape(h, w, 3)
+    elif enc == "mono8":
+        arr = np.frombuffer(data, dtype=np.uint8).reshape(h, w)
+    else:
+        raise ValueError(f"unsupported image encoding {enc!r} at {path}")
+    segs = topic.strip("/").split("/")
+    # '/camera/left/image_raw' -> 'left'; a single-segment topic
+    # ('/image_raw', common on single-camera rigs) keys on that
+    # segment instead of IndexError-quarantining the whole bag
+    camera = segs[1] if len(segs) > 1 else segs[0]
+    seq = int(flat.get("header.seq", 0))
+    stamp_us = (
+        int(flat.get("header.stamp.secs", 0)) * 1_000_000
+        + int(flat.get("header.stamp.nsecs", 0)) // 1000
+    )
+    return (
+        bag_id,
+        camera,
+        seq,
+        f"{camera}{seq:04d}.png",
+        pd.Timestamp(stamp_us, unit="us"),
+        w,
+        h,
+        png.encode(arr),
+    )
+
+
+def decode_bag(
+    path: str, content: bytes, want: set[str] | None, frames: bool
+) -> tuple[list[tuple], list[tuple]]:
+    """One ``read_messages`` pass over a bag → (message rows, frame rows),
+    shaped as ``MESSAGE_COLUMNS`` / ``FRAME_COLUMNS``.
+
+    ``want`` selects the message topics (None = every topic, empty = none).
+    ``frames`` adds one PNG frame row per sensor_msgs/Image message. Image
+    connections are found by type, not topic, so only a messages-only pass
+    can push ``want`` into the parse (the chunk-info whole-chunk skip).
+    """
+    content = _maybe_unwrap(path, content)
+    bag_id = bag_id_from_path(path)
+    msgs: list[tuple] = []
+    imgs: list[tuple] = []
+    for conn, t_ns, raw in read_messages(content, None if frames else want):
+        is_image = frames and conn.msg_type == IMAGE_TYPE
+        keep = want is None or conn.topic in want
+        if not (keep or is_image):
+            continue
+        flat: dict[str, object] = {}
+        conn.reader(raw, 0, "", flat)
+        if keep:
+            seq = flat.get("header.seq")
+            payload = {k: stringify(v) for k, v in flat.items()}
+            msgs.append(
+                (
+                    bag_id,
+                    conn.topic,
+                    t_ns,
+                    int(seq) if seq is not None else None,
+                    payload,
+                )
+            )
+        if is_image:
+            imgs.append(_frame_row(path, bag_id, conn.topic, flat))
+    return msgs, imgs
+
+
 def rosbag_decoder(path: str, content: bytes, topics: list[str] | None):
     """S4/S5: real .bag bytes → DataFrame[bag_id, topic, rosbagTimestamp,
-    seq, payload] (the ``decode_bag_blobs`` contract; replaces the json
-    fixture decoder). ``seq`` lifts ``header.seq`` when the type carries a
+    seq, payload]. ``seq`` lifts ``header.seq`` when the type carries a
     std_msgs/Header; the full flattened message (header included — matching
     ``str(msg)`` in bag_to_csv.py:116) lands in the payload map.
     """
     import pandas as pd
 
-    content = _maybe_unwrap(path, content)
-    bag_id = bag_id_from_path(path)
-    want = set(topics) if topics else None
-    rows = []
-    for conn, t_ns, raw in read_messages(content, want):
-        flat: dict[str, object] = {}
-        conn.reader(raw, 0, "", flat)
-        seq = flat.get("header.seq")
-        payload = {k: stringify(v) for k, v in flat.items()}
-        rows.append(
-            (bag_id, conn.topic, t_ns, int(seq) if seq is not None else None, payload)
-        )
-    return pd.DataFrame(
-        rows, columns=["bag_id", "topic", "rosbagTimestamp", "seq", "payload"]
-    )
+    msgs, _ = decode_bag(path, content, set(topics) if topics else None, False)
+    return pd.DataFrame(msgs, columns=MESSAGE_COLUMNS)
 
 
 def rosbag_frame_decoder(path: str, content: bytes):
@@ -933,63 +1043,10 @@ def rosbag_frame_decoder(path: str, content: bytes):
     second path segment; ``frame_index`` = header.seq (capture order,
     surviving drops); filename = ``{camera}{seq:04d}.png``.
     """
-    import numpy as np
     import pandas as pd
 
-    from ..functions import png
-
-    content = _maybe_unwrap(path, content)
-    bag_id = bag_id_from_path(path)
-    rows = []
-    for conn, t_ns, raw in read_messages(content, None):
-        if conn.msg_type != "sensor_msgs/Image":
-            continue
-        flat: dict[str, object] = {}
-        conn.reader(raw, 0, "", flat)
-        h, w = int(flat["height"]), int(flat["width"])
-        enc = str(flat["encoding"])
-        data = flat["data"]
-        if enc == "rgb8":
-            arr = np.frombuffer(data, dtype=np.uint8).reshape(h, w, 3)
-        elif enc == "mono8":
-            arr = np.frombuffer(data, dtype=np.uint8).reshape(h, w)
-        else:
-            raise ValueError(f"unsupported image encoding {enc!r} at {path}")
-        segs = conn.topic.strip("/").split("/")
-        # '/camera/left/image_raw' -> 'left'; a single-segment topic
-        # ('/image_raw', common on single-camera rigs) keys on that
-        # segment instead of IndexError-quarantining the whole bag
-        camera = segs[1] if len(segs) > 1 else segs[0]
-        seq = int(flat.get("header.seq", 0))
-        stamp_us = (
-            int(flat.get("header.stamp.secs", 0)) * 1_000_000
-            + int(flat.get("header.stamp.nsecs", 0)) // 1000
-        )
-        rows.append(
-            (
-                bag_id,
-                camera,
-                seq,
-                f"{camera}{seq:04d}.png",
-                pd.Timestamp(stamp_us, unit="us"),
-                w,
-                h,
-                png.encode(arr),
-            )
-        )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "bag_id",
-            "camera",
-            "frame_index",
-            "filename",
-            "frame_time",
-            "width",
-            "height",
-            "content",
-        ],
-    )
+    _, imgs = decode_bag(path, content, set(), True)
+    return pd.DataFrame(imgs, columns=FRAME_COLUMNS)
 
 
 def _connection_record(

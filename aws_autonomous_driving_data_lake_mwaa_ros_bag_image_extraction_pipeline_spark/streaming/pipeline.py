@@ -582,7 +582,13 @@ def run_available_now(
     """One streaming tick: process every file not yet seen by the checkpoint
     (exactly-once), recording manifest transitions. Swap
     ``trigger(availableNow=True)`` for ``processingTime='30 minutes'`` to get
-    the reference's cron cadence as a long-running query."""
+    the reference's cron cadence as a long-running query.
+
+    Known limit: a ``binaryFile`` stream rejects any schema without
+    ``content``, so each micro-batch reads its bags' bytes through the JVM
+    and a bag over ``spark.sql.sources.binaryFile.maxLength`` (at most
+    2 GiB) fails the tick. ``process_pending``'s batch listing reads no
+    content; use it for such bags."""
     stream = (
         spark.readStream.format("binaryFile")
         .schema(BINARY_FILE_SCHEMA)
@@ -866,7 +872,8 @@ def process_pending(
     discoverable again regardless of the streaming checkpoint. Returns
     {key: "complete" | "failure"} for this tick's keys ({} = no work) so
     callers get a programmatic failure signal without scanning the
-    manifest."""
+    manifest. The batch is the ``binaryFile`` listing: its ``content``
+    column is read only if ``process_fn`` selects it."""
     listing = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)

@@ -1,8 +1,9 @@
 """S4-S6, S8, S11, K1 end-to-end: bag decode → flatten → partitioned write.
 
 The bag files are genuine ROS bag 2.0 bytes (sources/rosbag_format.py
-writer) decoded by the real record parser; binaryFile scan, mapInPandas
-batching, tar.gz unwrap, and topic pushdown are the same production path.
+writer) decoded by the real record parser; the metadata-only binaryFile
+listing, the by-path open inside each mapInPandas task, tar.gz unwrap and
+topic pushdown are the same production path.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spa
     csv_source,
     fixtures,
     frames_source,
+    rosbag_format,
 )
 
 
@@ -59,12 +61,12 @@ def test_untar_rejects_multi_bag_archives():
     buf = io.BytesIO()
     with tarfile.open(fileobj=buf, mode="w:gz") as tf:
         for name in ("a.bag", "b.bag"):
-            data = fixtures.bag_bytes(0)
+            data = fixtures.rosbag_bytes(0, duration_s=1, frames_per_camera=0)
             info = tarfile.TarInfo(name=name)
             info.size = len(data)
             tf.addfile(info, io.BytesIO(data))
     with pytest.raises(ValueError, match="exactly one"):
-        frames_source.untar_bag(buf.getvalue())
+        rosbag_format.untar_bag(buf.getvalue())
 
 
 def test_bag_info(spark, bag_dir):

@@ -11,6 +11,7 @@ from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spa
 )
 from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.sources import (
     fixtures,
+    frames_source,
 )
 from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.streaming import (
     pipeline as sp,
@@ -169,3 +170,37 @@ def test_replay_is_idempotent_no_duplicate_rows(spark, tmp_path):
     sp.clear_status(spark, manifest, [key])
     assert runner.run_once(spark, cfg) == {key: "complete"}
     assert counts() == before  # rewrote its partitions; zero duplicates
+
+
+def test_bags_over_binaryfile_max_length_complete(spark, tmp_path):
+    """Bags are read by path inside the decode task, never as a
+    ``binaryFile`` content row, so a bag larger than
+    ``spark.sql.sources.binaryFile.maxLength`` (at most 2 GiB) still
+    completes: here every fixture bag, the ``.tar.gz`` one included, is
+    over the cap (regression: the tick used to fail)."""
+    bags = str(tmp_path / "bags")
+    paths = fixtures.write_bag_dir(bags, n_bags=2, tar_gz=(1,))
+    cap = min(os.path.getsize(p) for p in paths) - 1
+    cfg = runner.PipelineConfig(
+        bags_dir=bags,
+        output_dir=str(tmp_path / "out"),
+        manifest_dir=str(tmp_path / "manifest"),
+    )
+    key = "spark.sql.sources.binaryFile.maxLength"
+    spark.conf.set(key, str(cap))
+    try:
+        processed = runner.run_once(spark, cfg)
+        msgs = frames_source.read_bag_messages(
+            spark, bags, topics=list(fixtures._TOPIC_RATES)
+        )
+        n_msgs = msgs.count()
+    finally:
+        spark.conf.unset(key)
+    assert sorted(k.split("/")[-1] for k in processed) == [
+        "bag0000.bag",
+        "bag0001.bag.tar.gz",
+    ]
+    assert set(processed.values()) == {"complete"}
+    want = fixtures.topic_messages(spark, n_bags=2).count()
+    assert n_msgs == want
+    assert spark.read.parquet(f"{cfg.output_dir}/topic_messages").count() == want

@@ -1,7 +1,7 @@
 #!/bin/sh
-# Full verification battery: unit/integration suites, the physical-plan
-# audit, every runnable tour in examples/ executed headless (so the tours
-# can't rot), then — MANDATORY LAST — regeneration of this round's full
+# Full verification battery: unit/integration suites, the benchmark
+# self-tests, the physical-plan audit, every runnable tour in examples/
+# executed headless (so the tours can't rot), then — MANDATORY LAST — regeneration of this round's full
 # Spark-vs-DuckDB oracle artifact, the freshness gate over both committed
 # full artifacts (CORRECTNESS_full must cover every registered query,
 # BENCH_full must time every headline query), and a git-diff gate proving
@@ -17,6 +17,9 @@
 set -e
 cd "$(dirname "$0")/.."
 python -m pytest tests/ -q
+# the benchmark's self-tests: its probes and drivers call the bag decoders
+# and runner.run_once directly
+python -m pytest perfbench -q
 python tools/audit_plans.py
 for ex in examples/*.py; do
     echo "== $ex"
