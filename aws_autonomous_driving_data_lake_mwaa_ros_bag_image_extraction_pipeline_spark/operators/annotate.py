@@ -11,13 +11,21 @@ Arrow-batched pandas UDFs over ``mapInPandas`` so a 1000-executor cluster
 processes frames in vectorized batches instead of one network call per frame.
 The annotate kernel is real — functions/png decodes, rasterizes the green
 outlines pixel-identically to the reference's PIL draw (verified against
-``outputs/left0193_labeled.png``), and re-encodes, all numpy+zlib. The
-default detection model is likewise real and content-derived: a pure-numpy
-color-blob detector (``detect_color_blobs``) that segments the decoded
-pixels by dominant-channel class and emits one Instance per connected
-component — labels change when pixels change. It is deliberately simple
-(no learned weights ship in this container); swap in a real network via
-``infer_labels(model_fn=...)`` — the Arrow-batched contract is the same.
+``outputs/left0193_labeled.png``), and re-encodes, all numpy+zlib.
+
+One model contract everywhere: ``model_fn(list[np.ndarray]) ->
+list[list[dict]]`` over uint8 pixel arrays shaped as ``png.decode``
+returns them ((h,w) grey, (h,w,ch) otherwise; read-only — a model must not
+write into them), one Rekognition-shaped label list per image. The E1 bag
+decode (sources/frames_source.decode_bags) calls it on the raw frames and
+draws with ``label_boxes`` + ``png.draw_boxes`` in the same task, so the
+pipeline itself never runs ``infer_labels`` or ``annotate_frames``; those
+are the same steps over an existing PNG ``content`` column. The default
+model is real and content-derived: a pure-numpy color-blob detector
+(``detect_blobs``) that segments the pixels by dominant-channel class and
+emits one Instance per connected component — labels change when pixels
+change. It is deliberately simple (no learned weights ship in this
+container); swap in a real network via ``model_fn``.
 """
 
 from __future__ import annotations
@@ -30,11 +38,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import png
-from ..schemas import LABELS_ARRAY_SCHEMA
 
 ANNOTATED_SCHEMA = (
     "bag_id string, camera string, frame_index int, annotated binary"
 )
+# the Rekognition label list (schemas.LABELS_ARRAY_SCHEMA) as a DDL type
+LABELS_TYPE = (
+    "array<struct<Name:string,Confidence:double,"
+    "Instances:array<struct<BoundingBox:struct<Width:double,Height:double,"
+    "`Left`:double,Top:double>,Confidence:double>>,"
+    "Parents:array<struct<Name:string>>>>"
+)
+LABELS_SCHEMA = f"bag_id string, camera string, frame_index int, labels {LABELS_TYPE}"
 
 
 def scale_box(box: Column, width: Column, height: Column) -> Column:
@@ -46,6 +61,24 @@ def scale_box(box: Column, width: Column, height: Column) -> Column:
         ((box["Left"] + box["Width"]) * width).alias("x1"),
         ((box["Top"] + box["Height"]) * height).alias("y1"),
     )
+
+
+def label_boxes(labels: list[dict] | None) -> list[tuple[float, ...]]:
+    """One model output's relative (Left, Top, Width, Height) boxes, every
+    Instance of every label: the Python twin of ``annotate_frames``' box
+    column. A missing or NULL label, Instance list, BoundingBox or
+    coordinate draws no box; coordinates are read as doubles, as the
+    labels column stores them."""
+    out = []
+    for lab in labels or ():
+        for inst in (lab or {}).get("Instances") or ():
+            box = (inst or {}).get("BoundingBox")
+            if box is None:
+                continue
+            rel = [box.get(k) for k in ("Left", "Top", "Width", "Height")]
+            if None not in rel:
+                out.append(tuple(float(v) for v in rel))
+    return out
 
 
 def annotate_frames(frames_with_labels: DataFrame) -> DataFrame:
@@ -93,35 +126,39 @@ def annotate_frames(frames_with_labels: DataFrame) -> DataFrame:
     return slim.mapInPandas(_annotate, schema=ANNOTATED_SCHEMA)
 
 
+def _labels_of(model_fn, contents: list) -> list[list[dict]]:
+    """PNG ``content`` cells → one ``model_fn`` call on the decoded arrays;
+    a NULL or empty cell has no pixels and gets no labels."""
+    idx = [i for i, c in enumerate(contents) if c]
+    out: list[list[dict]] = [[] for _ in contents]
+    if idx:
+        arrays = [png.decode(bytes(contents[i])) for i in idx]
+        for i, labels in zip(idx, model_fn(arrays)):
+            out[i] = labels
+    return out
+
+
 def infer_labels(frames: DataFrame, model_fn=None) -> DataFrame:
     """P13: pluggable batch object-detection enrich — ``frames → labels``.
 
     The operator contract matches the Rekognition call site
-    (processing.py:320-327) but batches: each Arrow batch is one model
-    invocation. ``model_fn(list[bytes]) -> list[list[dict]]`` plugs in a real
-    model (ONNX/YOLO-class); the default is ``detect_color_blobs`` — a
-    genuine numpy detector over the decoded pixels, so frames → labels is
-    content-derived out of the box.
+    (processing.py:320-327) but batches: each Arrow batch's PNG ``content``
+    is decoded and handed to ONE model invocation. ``model_fn`` takes the
+    pixel arrays (the module's contract, the same one E1 calls on raw bag
+    frames) and plugs in a real model (ONNX/YOLO-class); the default is
+    ``detect_blobs`` — a genuine numpy detector over the pixels, so
+    frames → labels is content-derived out of the box.
     """
-    if model_fn is None:
-        model_fn = detect_color_blobs
-
-    out_schema = (
-        "bag_id string, camera string, frame_index int, "
-        f"labels array<struct<Name:string,Confidence:double,"
-        f"Instances:array<struct<BoundingBox:struct<Width:double,Height:double,"
-        f"`Left`:double,Top:double>,Confidence:double>>,"
-        f"Parents:array<struct<Name:string>>>>"
-    )
+    model_fn = model_fn or detect_blobs
 
     def _infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = pdf[["bag_id", "camera", "frame_index"]].copy()
-            out["labels"] = model_fn(list(pdf["content"]))
+            out["labels"] = _labels_of(model_fn, list(pdf["content"]))
             yield out
 
     return frames.select("bag_id", "camera", "frame_index", "content").mapInPandas(
-        _infer, schema=out_schema
+        _infer, schema=LABELS_SCHEMA
     )
 
 
@@ -131,29 +168,20 @@ def infer_labels_by_camera(frames: DataFrame, model_fn=None) -> DataFrame:
     Use when the model is camera-specific (per-sensor calibration /
     resolution) or when batches must be homogeneous: each group arrives as
     ONE pandas frame per camera instead of arbitrary partition slices. Same
-    output contract as ``infer_labels`` (tested equivalent for a
-    camera-agnostic model). Grouping shuffles on camera — prefer
+    ``model_fn`` contract and output as ``infer_labels`` (tested equivalent
+    for a camera-agnostic model). Grouping shuffles on camera — prefer
     ``infer_labels`` when the model doesn't care."""
-    if model_fn is None:
-        model_fn = detect_color_blobs
-
-    out_schema = (
-        "bag_id string, camera string, frame_index int, "
-        f"labels array<struct<Name:string,Confidence:double,"
-        f"Instances:array<struct<BoundingBox:struct<Width:double,Height:double,"
-        f"`Left`:double,Top:double>,Confidence:double>>,"
-        f"Parents:array<struct<Name:string>>>>"
-    )
+    model_fn = model_fn or detect_blobs
 
     def _infer_group(pdf: pd.DataFrame) -> pd.DataFrame:
         out = pdf[["bag_id", "camera", "frame_index"]].copy()
-        out["labels"] = model_fn(list(pdf["content"]))
+        out["labels"] = _labels_of(model_fn, list(pdf["content"]))
         return out
 
     return (
         frames.select("bag_id", "camera", "frame_index", "content")
         .groupBy("camera")
-        .applyInPandas(_infer_group, schema=out_schema)
+        .applyInPandas(_infer_group, schema=LABELS_SCHEMA)
     )
 
 
@@ -218,14 +246,14 @@ def _components(mask: np.ndarray) -> list[tuple[int, int, int, int, int]]:
     return [(y0, x0, y1 + 1, x1, area) for y0, x0, y1, x1, area in agg.values()]
 
 
-def detect_color_blobs(
-    images: list[bytes],
+def detect_blobs(
+    arrays: list[np.ndarray],
     min_area_frac: float = 0.02,
     sat_threshold: int = 16,
 ) -> list[list[dict]]:
     """Default P13 model: genuine content-derived detection, pure numpy.
 
-    Per image: PNG decode → per-pixel color class (dominant channel where
+    Per image array: per-pixel color class (dominant channel where
     saturation ≥ ``sat_threshold``, else the low-saturation class) →
     4-connected components per class → one Instance per component covering
     ≥ ``min_area_frac`` of the frame, bounding box in relative coords
@@ -235,11 +263,7 @@ def detect_color_blobs(
     the downstream aggregation pipeline is exactly testable — and unlike
     a digest-keyed fake, editing pixels moves the boxes."""
     out = []
-    for img in images:
-        if not img:
-            out.append([])
-            continue
-        arr = png.decode(bytes(img))
+    for arr in arrays:
         if arr.ndim == 2:
             arr = np.stack([arr] * 3, axis=2)
         elif arr.shape[2] == 2:  # grey+alpha
@@ -283,3 +307,18 @@ def detect_color_blobs(
             )
         out.append(labels)
     return out
+
+
+def detect_color_blobs(
+    images: list[bytes],
+    min_area_frac: float = 0.02,
+    sat_threshold: int = 16,
+) -> list[list[dict]]:
+    """``detect_blobs`` over PNG bytes: decode, then detect. An empty or
+    NULL image gets no labels."""
+    return [
+        detect_blobs([png.decode(bytes(img))], min_area_frac, sat_threshold)[0]
+        if img
+        else []
+        for img in images
+    ]

@@ -87,10 +87,12 @@ def pivot_stats(
     frame_cols: list[str] | None = None,
     vocabulary: list[str] | None = None,
 ) -> DataFrame:
-    """A1+A2 in one job: the DynamoDB wide row as a pivot.
+    """A1+A2 as one DataFrame: the DynamoDB wide row as a pivot, joined to
+    the instance counts.
 
-    Passing ``vocabulary`` (pre-computed distinct label names) skips Spark's
-    extra distinct pass inside ``pivot`` — at scale, compute it once from a
+    Without ``vocabulary`` Spark runs an extra job for the distinct label
+    names before the pivot's own; passing ``vocabulary`` (pre-computed
+    distinct names) skips it — at scale, compute it once from a
     sample/dictionary table.
     """
     frame_cols = frame_cols or ["bag_id", "camera", "frame_index"]

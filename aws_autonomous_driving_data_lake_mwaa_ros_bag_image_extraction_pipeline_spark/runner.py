@@ -5,10 +5,12 @@ draw → tag complete (rosbag_processing.py:131-136, processing.py:30-50,
 141-173) — collapses into one incremental Spark job per tick:
 
     discover (manifest anti-join / stream checkpoint)
-      → decode bags → topic landing (K1)
-      → frames → infer labels (P13) → frame_stats pivot (A1+A2, K4)
-      → annotate (P12) → binary sink (K7)
-      → manifest transitions in progress → complete | failure (O1/O2, K8)
+      → decode bags: messages + frames → infer (P13) → draw (P12), in
+        one Python task per bag
+      → topic landing (K1) · labels → frame_stats pivot (A1+A2, K4)
+        · labels JSON · annotated binary sink (K7)
+      → manifest transitions in progress → complete | failure (O1/O2, K8),
+        committed driver-side
 
 The empty-discovery branch (O1 ``no_work``) is a no-op tick; failures mark
 ``failure`` per bag instead of the reference's silent container-STOP=success
@@ -22,10 +24,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .operators import annotate, frame_stats, sinks
+from .operators import frame_stats, sinks
 from .schemas import TOPIC_WHITELIST
 from .sources import frames_source
-from .sources.rosbag_format import FRAME_COLUMNS, MESSAGE_COLUMNS
+from .sources.rosbag_format import MESSAGE_COLUMNS
 from .streaming import pipeline as sp
 
 
@@ -40,7 +42,9 @@ class PipelineConfig:
     topics: list[str] | None = field(
         default_factory=lambda: list(TOPIC_WHITELIST)
     )
-    model_fn: object = None  # P13 plug; None = numpy color-blob detector
+    # P13 plug, operators/annotate's contract: list of uint8 pixel arrays →
+    # one label list per array. None = the numpy color-blob detector
+    model_fn: object = None
     sync_dir: str | None = None  # optional K2 file-tree export
     extra: dict = field(default_factory=dict)
 
@@ -51,19 +55,25 @@ def process_bags(
     """One batch of bags (rows with a ``path``) through the full E2+E1
     computation.
 
-    Both bag outputs (topic tables AND frames) come from ONE read of each
-    bag — the reference needs two full bag passes plus a realtime replay
-    (engine.py:96-137); here ``frames_source.decode_bags`` opens each bag
-    by path inside its task and parses it once. The decoded rows are
-    persisted and split into the topic landing and the frames. Appends (not
-    overwrites) so each incremental tick adds its bags to the landing tables.
+    Every bag output (topic tables, frame stats, labels, annotated frames)
+    comes from ONE read of each bag in ONE Python task — the reference
+    needs two full bag passes plus a realtime replay (engine.py:96-137) and
+    a Rekognition round trip per PNG; here ``frames_source.decode_bags``
+    opens each bag by path, parses it once, runs ``cfg.model_fn`` on the
+    raw frames and draws their boxes, so no raw frame is ever PNG-encoded
+    and no PNG is decoded again. The decoded rows are persisted and split
+    into the topic landing and the three frame sinks; the slim labels
+    projection is persisted too, so the stats and labels sinks never
+    re-read the annotated PNGs. Appends (not overwrites) so each
+    incremental tick adds its bags to the landing tables.
 
-    Failure isolation is the quarantine pattern: a corrupt bag becomes one
-    error row, the whole batch is ONE set of Spark jobs regardless of bag
-    count, and the failed paths ride back on the landing write's
-    ``observe()`` metrics (no extra pass, no driver-side per-bag loop).
-    Returns the failed bag paths (O2: the caller records them as
-    ``failure`` in the manifest).
+    Failure isolation is the quarantine pattern: a bag that fails to open
+    or parse becomes one error row, the whole batch is ONE set of Spark
+    jobs regardless of bag count, and the failed paths ride back on the
+    landing write's ``observe()`` metrics (no extra pass, no driver-side
+    per-bag loop); the frame sinks drop those bags' rows by path. An
+    exception from ``cfg.model_fn`` fails the tick. Returns the failed bag
+    paths (O2: the caller records them as ``failure`` in the manifest).
 
     REPLAY-IDEMPOTENT sinks: every landing table partitions by bag_id and
     writes as a DYNAMIC partition overwrite, so a bag re-run after
@@ -78,12 +88,11 @@ def process_bags(
     is_msg = F.col("topic").isNotNull()
     bad = F.col("decode_error").isNotNull()
 
-    # persist: the bag parse + per-frame PNG encode is the most expensive
-    # stage, and its rows feed the landing AND three frame sinks (stats,
-    # labels, annotated) — uncached it would re-decode every bag per sink
-    decoded = frames_source.decode_bags(batch, cfg.topics).persist()
-    frames = decoded.filter(F.col("camera").isNotNull()).select(FRAME_COLUMNS)
-    labels = annotate.infer_labels(frames, model_fn=cfg.model_fn).persist()
+    # persist: the bag parse + inference + annotated PNG encode is the most
+    # expensive stage, and its rows feed the landing AND the three frame
+    # sinks — uncached it would re-run every bag per sink
+    decoded = frames_source.decode_bags(batch, cfg.topics, cfg.model_fn).persist()
+    labels = None
     # A3: pipeline counters via observe() — collected from the write job
     # itself, no extra pass over the data (the reference counts uploads in a
     # Python loop, engine.py:282-300).
@@ -113,6 +122,11 @@ def process_bags(
         cfg.extra["last_metrics"] = obs.get
         failed = list(obs.get["failed_paths"])
 
+        frames = decoded.filter(F.col("camera").isNotNull())
+        if failed:  # frame chunks a bag emitted before its parse failed
+            frames = frames.filter(~F.col("bag_path").isin(failed))
+        keys = ["bag_id", "camera", "frame_index"]
+        labels = frames.select(*keys, "labels").persist()
         stats = frame_stats.pivot_stats(labels)
         stats.write.partitionBy("bag_id").mode("overwrite").parquet(
             f"{cfg.output_dir}/frame_stats"
@@ -121,9 +135,7 @@ def process_bags(
             f"{cfg.output_dir}/labels"
         )
 
-        annotated = annotate.annotate_frames(
-            frames.join(labels, ["bag_id", "camera", "frame_index"])
-        )
+        annotated = frames.select(*keys, "annotated")
         annotated.write.partitionBy("bag_id", "camera").mode(
             "overwrite"
         ).parquet(f"{cfg.output_dir}/annotated")
@@ -137,7 +149,8 @@ def process_bags(
             "spark.sql.sources.partitionOverwriteMode", prev_mode
         )
         decoded.unpersist()
-        labels.unpersist()
+        if labels is not None:
+            labels.unpersist()
     return failed
 
 

@@ -23,7 +23,7 @@ Decoded fields flatten to dotted names (``pose.position.x``,
 columns (bag_to_csv.py:114-136 stringifies ``name: value`` lines).
 
 Scale posture: each bag is opened by path and decoded inside one task
-(``open_bag`` + ``decode_bag``, driven by sources/frames_source.py); the
+(``open_bag`` + ``iter_bag``, driven by sources/frames_source.py); the
 topic predicate skips message records *before* deserialization (only the
 8-byte record header is read), so an image-heavy bag scanned for /imu
 never touches the pixel bytes.
@@ -947,10 +947,11 @@ def open_bag(path: str) -> bytes:
 
 
 def _frame_row(path: str, bag_id: str, topic: str, flat: dict) -> tuple:
+    """A ``FRAME_COLUMNS`` row whose last cell holds the raw pixels: a
+    read-only uint8 array shaped as ``png.decode`` returns it ((h,w,3)
+    for ``rgb8``, (h,w) for ``mono8``), not PNG bytes."""
     import numpy as np
     import pandas as pd
-
-    from ..functions import png
 
     h, w = int(flat["height"]), int(flat["width"])
     enc = str(flat["encoding"])
@@ -979,25 +980,26 @@ def _frame_row(path: str, bag_id: str, topic: str, flat: dict) -> tuple:
         pd.Timestamp(stamp_us, unit="us"),
         w,
         h,
-        png.encode(arr),
+        arr,
     )
 
 
-def decode_bag(
+def iter_bag(
     path: str, content: bytes, want: set[str] | None, frames: bool
-) -> tuple[list[tuple], list[tuple]]:
-    """One ``read_messages`` pass over a bag → (message rows, frame rows),
-    shaped as ``MESSAGE_COLUMNS`` / ``FRAME_COLUMNS``.
+) -> Iterator[tuple[bool, tuple]]:
+    """One ``read_messages`` pass over a bag, yielding ``(is_frame, row)``
+    in bag order: message rows shaped as ``MESSAGE_COLUMNS``, frame rows
+    as ``FRAME_COLUMNS`` with the raw pixel array in the ``content`` slot
+    (see ``_frame_row``). Rows come one at a time, so a consumer can
+    bound how many frames it holds.
 
     ``want`` selects the message topics (None = every topic, empty = none).
-    ``frames`` adds one PNG frame row per sensor_msgs/Image message. Image
+    ``frames`` adds one frame row per sensor_msgs/Image message. Image
     connections are found by type, not topic, so only a messages-only pass
     can push ``want`` into the parse (the chunk-info whole-chunk skip).
     """
     content = _maybe_unwrap(path, content)
     bag_id = bag_id_from_path(path)
-    msgs: list[tuple] = []
-    imgs: list[tuple] = []
     for conn, t_ns, raw in read_messages(content, None if frames else want):
         is_image = frames and conn.msg_type == IMAGE_TYPE
         keep = want is None or conn.topic in want
@@ -1008,18 +1010,15 @@ def decode_bag(
         if keep:
             seq = flat.get("header.seq")
             payload = {k: stringify(v) for k, v in flat.items()}
-            msgs.append(
-                (
-                    bag_id,
-                    conn.topic,
-                    t_ns,
-                    int(seq) if seq is not None else None,
-                    payload,
-                )
+            yield False, (
+                bag_id,
+                conn.topic,
+                t_ns,
+                int(seq) if seq is not None else None,
+                payload,
             )
         if is_image:
-            imgs.append(_frame_row(path, bag_id, conn.topic, flat))
-    return msgs, imgs
+            yield True, _frame_row(path, bag_id, conn.topic, flat)
 
 
 def rosbag_decoder(path: str, content: bytes, topics: list[str] | None):
@@ -1030,7 +1029,8 @@ def rosbag_decoder(path: str, content: bytes, topics: list[str] | None):
     """
     import pandas as pd
 
-    msgs, _ = decode_bag(path, content, set(topics) if topics else None, False)
+    want = set(topics) if topics else None
+    msgs = [row for _, row in iter_bag(path, content, want, False)]
     return pd.DataFrame(msgs, columns=MESSAGE_COLUMNS)
 
 
@@ -1045,8 +1045,13 @@ def rosbag_frame_decoder(path: str, content: bytes):
     """
     import pandas as pd
 
-    _, imgs = decode_bag(path, content, set(), True)
-    return pd.DataFrame(imgs, columns=FRAME_COLUMNS)
+    from ..functions import png
+
+    rows = [
+        (*r[:-1], png.encode(r[-1]))
+        for _, r in iter_bag(path, content, set(), True)
+    ]
+    return pd.DataFrame(rows, columns=FRAME_COLUMNS)
 
 
 def _connection_record(

@@ -220,7 +220,9 @@ def append_status(
     call = one commit = one new readable version. Safe under CONCURRENT
     writers (see the commit-protocol note above); with ``spark=None`` the
     rows are staged driver-side via pyarrow."""
-    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    # tz-aware: Spark reads a naive datetime as process-local time, pyarrow
+    # as UTC; an aware one is the same instant to both stagers
+    now = dt.datetime.now(dt.timezone.utc)
     rows = [(k, status, now) for k in keys]
     if not rows:
         return
@@ -516,7 +518,6 @@ def vacuum_manifest(
 
 
 def _process_batch(
-    spark: SparkSession,
     batch: DataFrame,
     manifest_dir: str,
     process_fn: Callable[[DataFrame], list[str] | None],
@@ -533,26 +534,31 @@ def _process_batch(
     container STOP as success, processing.py:154-173). A tick discovering
     10k bags therefore runs a constant number of jobs, not 10k.
 
+    The status commits are staged driver-side (``append_status(None, …)``):
+    the ledger lives on a local filesystem anyway (``_claim_commit`` links),
+    so a transition costs no Spark job, and the failure mark still lands
+    when the Spark session itself broke.
+
     Returns {key: "complete" | "failure"} for the batch.
     """
     keys = [r.path for r in batch.select("path").distinct().collect()]
     if not keys:
         return {}
-    append_status(spark, manifest_dir, keys, "in progress")
+    append_status(None, manifest_dir, keys, "in progress")
     try:
         failed = set(process_fn(batch) or [])
     except Exception:
         # infrastructure failure (not a per-bag decode error): the whole
         # batch is unaccounted-for → mark everything failed and surface it
-        append_status(spark, manifest_dir, keys, "failure")
+        append_status(None, manifest_dir, keys, "failure")
         raise
     if failed and not per_bag:
         failed = set(keys)  # all-or-nothing accounting
     statuses = {k: "failure" if k in failed else "complete" for k in keys}
     append_status(
-        spark, manifest_dir, [k for k in keys if k not in failed], "complete"
+        None, manifest_dir, [k for k in keys if k not in failed], "complete"
     )
-    append_status(spark, manifest_dir, sorted(failed), "failure")
+    append_status(None, manifest_dir, sorted(failed), "failure")
     return statuses
 
 
@@ -597,7 +603,7 @@ def run_available_now(
     )
 
     def _fb(batch: DataFrame, _epoch: int) -> None:
-        _process_batch(spark, batch, manifest_dir, process_fn, per_bag)
+        _process_batch(batch, manifest_dir, process_fn, per_bag)
 
     q = (
         stream.writeStream.foreachBatch(_fb)
@@ -884,7 +890,7 @@ def process_pending(
     new = discover_new(listing, manifest, key_col="key").withColumnRenamed(
         "key", "path"
     )
-    return _process_batch(spark, new, manifest_dir, process_fn, per_bag)
+    return _process_batch(new, manifest_dir, process_fn, per_bag)
 
 
 def dedup_within_watermark(

@@ -204,3 +204,190 @@ def test_bags_over_binaryfile_max_length_complete(spark, tmp_path):
     want = fixtures.topic_messages(spark, n_bags=2).count()
     assert n_msgs == want
     assert spark.read.parquet(f"{cfg.output_dir}/topic_messages").count() == want
+
+# Spark jobs in a warm E1 tick over fixture bags (local[4], 4 shuffle
+# partitions). 21 while labels and annotations were separate Python stages
+# joined back to the frames and the ledger commits were Spark writes.
+JOBS_PER_TICK = 18
+
+
+def _fixture_cfg(tmp_path, name: str, **kw) -> runner.PipelineConfig:
+    base = tmp_path / name
+    return runner.PipelineConfig(
+        bags_dir=str(tmp_path / "bags"),
+        output_dir=str(base / "out"),
+        manifest_dir=str(base / "manifest"),
+        **kw,
+    )
+
+
+def _frame_outputs(spark, out: str) -> dict:
+    """Every frame sink of one tick, keyed by frame: labels as dicts, stats
+    rows and annotated PNG bytes."""
+
+    def rows(df):
+        return {
+            (r.bag_id, r.camera, r.frame_index): r.asDict(recursive=True)
+            for r in df.collect()
+        }
+
+    return {
+        "labels": rows(spark.read.json(f"{out}/labels")),
+        "frame_stats": rows(spark.read.parquet(f"{out}/frame_stats")),
+        "annotated": rows(spark.read.parquet(f"{out}/annotated")),
+    }
+
+
+def test_model_fn_reaches_e1(spark, tmp_path):
+    """``PipelineConfig.model_fn`` is the model E1 runs: it receives the
+    raw frames as uint8 arrays at the frame shape, its label lands in the
+    labels JSON and as a frame_stats column, and its box is drawn on the
+    annotated PNG. An exception it raises fails the tick and marks every
+    key ``failure`` (it is not a per-bag quarantine)."""
+    import numpy as np
+    import pytest
+
+    from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.functions import (
+        png,
+    )
+
+    fixtures.write_bag_dir(str(tmp_path / "bags"), n_bags=1, tar_gz=())
+    box = {"Left": 0.25, "Top": 0.25, "Width": 0.5, "Height": 0.5}
+    shape = (fixtures.FRAME_H, fixtures.FRAME_W, 3)
+
+    def stub(arrays):
+        for a in arrays:  # a wrong input fails the tick, and this test
+            assert a.dtype == np.uint8 and a.shape == shape, (a.dtype, a.shape)
+        label = {
+            "Name": "Stub Cone",
+            "Confidence": 77.0,
+            "Instances": [{"BoundingBox": box, "Confidence": 77.0}],
+            "Parents": [],
+        }
+        return [[label] for _ in arrays]
+
+    cfg = _fixture_cfg(tmp_path, "stub", model_fn=stub)
+    assert set(runner.run_once(spark, cfg).values()) == {"complete"}
+    got = _frame_outputs(spark, cfg.output_dir)
+    assert got["labels"]
+    for lab in got["labels"].values():
+        assert [(x["Name"], x["Instances"][0]["BoundingBox"]) for x in lab["labels"]] == [
+            ("Stub Cone", box)
+        ]
+    assert {r["Stub_Cone"] for r in got["frame_stats"].values()} == {77.0}
+    x0, y0 = int(0.25 * shape[1]), int(0.25 * shape[0])
+    x1 = int(0.75 * shape[1])
+    for r in got["annotated"].values():
+        img = png.decode(bytes(r["annotated"]))
+        assert (img[y0, x0 : x1 + 1] == png.GREEN).all()  # top edge
+
+    def broken(arrays):
+        raise RuntimeError("model down")
+
+    cfg = _fixture_cfg(tmp_path, "broken", model_fn=broken)
+    with pytest.raises(Exception, match="model down"):
+        runner.run_once(spark, cfg)
+    statuses = sp.current_manifest(spark, cfg.manifest_dir).collect()
+    assert statuses and {r.status for r in statuses} == {"failure"}
+
+
+def test_e1_frames_match_infer_and_annotate(spark, tmp_path):
+    """Parity: E1's fused decode writes the same labels and the same
+    annotated PNG bytes as ``infer_labels`` + ``annotate_frames`` over the
+    PNG frames ``rosbag_frame_decoder`` extracts from the same bags."""
+    from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.operators import (
+        annotate,
+    )
+    from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.schemas import (
+        FRAMES_SCHEMA,
+    )
+    from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.sources import (
+        rosbag_format as rb,
+    )
+
+    paths = fixtures.write_bag_dir(str(tmp_path / "bags"), n_bags=2, tar_gz=(1,))
+    cfg = _fixture_cfg(tmp_path, "e1")
+    assert set(runner.run_once(spark, cfg).values()) == {"complete"}
+    got = _frame_outputs(spark, cfg.output_dir)
+
+    rows = [
+        (*r[:4], r[4].to_pydatetime(), *r[5:])
+        for p in paths
+        for r in rb.rosbag_frame_decoder(p, rb.open_bag(p)).itertuples(index=False)
+    ]
+    frames = spark.createDataFrame(rows, FRAMES_SCHEMA)
+    labels = annotate.infer_labels(frames)
+    key = ["bag_id", "camera", "frame_index"]
+    want_labels = {
+        (r.bag_id, r.camera, r.frame_index): r.labels
+        for r in labels.collect()
+    }
+    want_png = {
+        (r.bag_id, r.camera, r.frame_index): bytes(r.annotated)
+        for r in annotate.annotate_frames(frames.join(labels, key)).collect()
+    }
+    assert len(want_png) == len(rows) > 0
+    assert {
+        k: [x.asDict(recursive=True) for x in v] for k, v in want_labels.items()
+    } == {k: r["labels"] for k, r in got["labels"].items()}
+    assert want_png == {
+        k: bytes(r["annotated"]) for k, r in got["annotated"].items()
+    }
+
+
+def test_bounded_frame_chunks_same_outputs(spark, tmp_path):
+    """With ``spark.sql.execution.arrow.maxRecordsPerBatch`` at 2 the
+    decode labels a bag's frames two at a time, and the tick writes the
+    same outputs as with the default. A bag truncated mid-frames has
+    emitted frame chunks before its parse fails; the tick still marks it
+    ``failure`` and writes none of its frames."""
+    bags = str(tmp_path / "bags")
+    paths = fixtures.write_bag_dir(bags, n_bags=2, tar_gz=())
+    with open(paths[0], "rb") as f:
+        data = f.read()
+    cut = os.path.join(bags, "cut.bag")
+    with open(cut, "wb") as f:
+        f.write(data[: len(data) * 3 // 4])
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(key, "2")
+    try:
+        decoded = frames_source.decode_bags(
+            spark.createDataFrame([(cut,)], "path string"), None
+        ).collect()
+        chunked = _fixture_cfg(tmp_path, "chunked")
+        chunked_result = runner.run_once(spark, chunked)
+    finally:
+        spark.conf.unset(key)
+    assert any(r.camera for r in decoded)  # frames went out before the error
+    assert [r.decode_error is not None for r in decoded].count(True) == 1
+
+    default = _fixture_cfg(tmp_path, "default")
+    result = runner.run_once(spark, default)
+    assert chunked_result == result
+    assert result[f"file:{cut}"] == "failure"
+    got = _frame_outputs(spark, chunked.output_dir)
+    assert got == _frame_outputs(spark, default.output_dir)
+    assert "cut" not in {k[0] for table in got.values() for k in table}
+
+    def msgs(out):
+        return sorted(map(str, spark.read.parquet(f"{out}/topic_messages").collect()))
+
+    assert msgs(chunked.output_dir) == msgs(default.output_dir)
+
+
+def test_warm_tick_job_count_pinned(spark, tmp_path):
+    """A warm E1 tick runs a fixed, small number of Spark jobs: discovery,
+    the landing write and the three frame sinks over one persisted decode,
+    with driver-side ledger commits. A stage added back to the tick (a
+    second Python pass over the frames, a join, a Spark ledger commit)
+    fails here, not only in the benchmark."""
+    sc = spark.sparkContext
+    fixtures.write_bag_dir(str(tmp_path / "bags"), n_bags=2, tar_gz=(1,))
+    runner.run_once(spark, _fixture_cfg(tmp_path, "cold"))
+    sc.setJobGroup("warm-tick", "warm-tick")
+    try:
+        runner.run_once(spark, _fixture_cfg(tmp_path, "warm"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("warm-tick")) <= JOBS_PER_TICK
