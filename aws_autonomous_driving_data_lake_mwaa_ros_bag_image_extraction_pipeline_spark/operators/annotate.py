@@ -38,18 +38,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import png
+from ..schemas import LABELS_TABLE_SCHEMA
 
 ANNOTATED_SCHEMA = (
     "bag_id string, camera string, frame_index int, annotated binary"
 )
-# the Rekognition label list (schemas.LABELS_ARRAY_SCHEMA) as a DDL type
-LABELS_TYPE = (
-    "array<struct<Name:string,Confidence:double,"
-    "Instances:array<struct<BoundingBox:struct<Width:double,Height:double,"
-    "`Left`:double,Top:double>,Confidence:double>>,"
-    "Parents:array<struct<Name:string>>>>"
-)
-LABELS_SCHEMA = f"bag_id string, camera string, frame_index int, labels {LABELS_TYPE}"
 
 
 def scale_box(box: Column, width: Column, height: Column) -> Column:
@@ -63,16 +56,18 @@ def scale_box(box: Column, width: Column, height: Column) -> Column:
     )
 
 
-def label_boxes(labels: list[dict] | None) -> list[tuple[float, ...]]:
-    """One model output's relative (Left, Top, Width, Height) boxes, every
-    Instance of every label: the Python twin of ``annotate_frames``' box
-    column. A missing or NULL label, Instance list, BoundingBox or
-    coordinate draws no box; coordinates are read as doubles, as the
-    labels column stores them."""
+def label_boxes(labels) -> list[tuple[float, ...]]:
+    """The box rule: one label list's relative (Left, Top, Width, Height)
+    boxes, every Instance of every label in order. Takes a model's output
+    or a ``labels`` cell as ``mapInPandas`` delivers it (arrays of dicts).
+    A missing or NULL label, Instance list, BoundingBox or coordinate
+    draws no box; coordinates are read as doubles, as the labels column
+    stores them."""
     out = []
-    for lab in labels or ():
-        for inst in (lab or {}).get("Instances") or ():
-            box = (inst or {}).get("BoundingBox")
+    for lab in () if labels is None else labels:
+        insts = None if lab is None else lab.get("Instances")
+        for inst in () if insts is None else insts:
+            box = None if inst is None else inst.get("BoundingBox")
             if box is None:
                 continue
             rel = [box.get(k) for k in ("Left", "Top", "Width", "Height")]
@@ -84,43 +79,29 @@ def label_boxes(labels: list[dict] | None) -> list[tuple[float, ...]]:
 def annotate_frames(frames_with_labels: DataFrame) -> DataFrame:
     """P12/K7: frames + labels → annotated image column.
 
-    Input needs (bag_id, camera, frame_index, content, labels). The per-box
-    extraction (flatten all Instances' BoundingBoxes) is a narrow JVM
-    expression; only the pixel work crosses into Python, Arrow-batched via
-    ``mapInPandas``. The draw is the real kernel: PNG decode → green
-    2-px outlines at relative-coords × image-dims (pixel-identical to
-    processing.py:366-384's PIL draw) → PNG encode.
+    Input needs (bag_id, camera, frame_index, content, labels). Only the
+    pixel work and the box rule (``label_boxes``, the one E1 uses) run in
+    Python, Arrow-batched via ``mapInPandas``. The draw is the real
+    kernel: PNG decode → green 2-px outlines at relative-coords ×
+    image-dims (pixel-identical to processing.py:366-384's PIL draw) →
+    PNG encode.
     """
-    boxes = F.flatten(
-        F.transform(
-            F.coalesce(F.col("labels"), F.array()),
-            lambda l: F.transform(
-                F.coalesce(l["Instances"], F.array()), lambda i: i["BoundingBox"]
-            ),
-        )
-    )
     slim = frames_with_labels.select(
-        "bag_id", "camera", "frame_index", "content", boxes.alias("boxes")
+        "bag_id", "camera", "frame_index", "content", "labels"
     )
 
     def _annotate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = pdf[["bag_id", "camera", "frame_index"]].copy()
-            annotated = []
-            for content, bxs in zip(pdf["content"], pdf["boxes"]):
-                if content is None:  # quarantined decode: no pixels to draw
-                    annotated.append(None)
-                    continue
-                arr = png.decode(bytes(content))
-                rel = [
-                    (b["Left"], b["Top"], b["Width"], b["Height"])
-                    for b in bxs
-                    # NULL BoundingBox struct or NULL coordinate: no box
-                    if b is not None
-                    and None not in (b["Left"], b["Top"], b["Width"], b["Height"])
-                ]
-                annotated.append(png.encode(png.draw_boxes(arr, rel)))
-            out["annotated"] = annotated
+            out["annotated"] = [
+                # NULL content is a quarantined decode: no pixels to draw
+                None
+                if content is None
+                else png.encode(
+                    png.draw_boxes(png.decode(bytes(content)), label_boxes(labels))
+                )
+                for content, labels in zip(pdf["content"], pdf["labels"])
+            ]
             yield out
 
     return slim.mapInPandas(_annotate, schema=ANNOTATED_SCHEMA)
@@ -158,7 +139,7 @@ def infer_labels(frames: DataFrame, model_fn=None) -> DataFrame:
             yield out
 
     return frames.select("bag_id", "camera", "frame_index", "content").mapInPandas(
-        _infer, schema=LABELS_SCHEMA
+        _infer, schema=LABELS_TABLE_SCHEMA
     )
 
 
@@ -181,7 +162,7 @@ def infer_labels_by_camera(frames: DataFrame, model_fn=None) -> DataFrame:
     return (
         frames.select("bag_id", "camera", "frame_index", "content")
         .groupBy("camera")
-        .applyInPandas(_infer_group, schema=LABELS_SCHEMA)
+        .applyInPandas(_infer_group, schema=LABELS_TABLE_SCHEMA)
     )
 
 

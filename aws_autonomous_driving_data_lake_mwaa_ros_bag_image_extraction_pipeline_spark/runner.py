@@ -71,9 +71,9 @@ def process_bags(
     or parse becomes one error row, the whole batch is ONE set of Spark
     jobs regardless of bag count, and the failed paths ride back on the
     landing write's ``observe()`` metrics (no extra pass, no driver-side
-    per-bag loop); the frame sinks drop those bags' rows by path. An
-    exception from ``cfg.model_fn`` fails the tick. Returns the failed bag
-    paths (O2: the caller records them as ``failure`` in the manifest).
+    per-bag loop). An exception from ``cfg.model_fn`` fails the tick.
+    Returns the failed bag paths (O2: the caller records them as
+    ``failure`` in the manifest).
 
     REPLAY-IDEMPOTENT sinks: every landing table partitions by bag_id and
     writes as a DYNAMIC partition overwrite, so a bag re-run after
@@ -92,7 +92,9 @@ def process_bags(
     # expensive stage, and its rows feed the landing AND the three frame
     # sinks — uncached it would re-run every bag per sink
     decoded = frames_source.decode_bags(batch, cfg.topics, cfg.model_fn).persist()
-    labels = None
+    frames = decoded.filter(F.col("camera").isNotNull())
+    keys = ["bag_id", "camera", "frame_index"]
+    labels = frames.select(*keys, "labels").persist()
     # A3: pipeline counters via observe() — collected from the write job
     # itself, no extra pass over the data (the reference counts uploads in a
     # Python loop, engine.py:282-300).
@@ -122,11 +124,6 @@ def process_bags(
         cfg.extra["last_metrics"] = obs.get
         failed = list(obs.get["failed_paths"])
 
-        frames = decoded.filter(F.col("camera").isNotNull())
-        if failed:  # frame chunks a bag emitted before its parse failed
-            frames = frames.filter(~F.col("bag_path").isin(failed))
-        keys = ["bag_id", "camera", "frame_index"]
-        labels = frames.select(*keys, "labels").persist()
         stats = frame_stats.pivot_stats(labels)
         stats.write.partitionBy("bag_id").mode("overwrite").parquet(
             f"{cfg.output_dir}/frame_stats"
@@ -149,8 +146,7 @@ def process_bags(
             "spark.sql.sources.partitionOverwriteMode", prev_mode
         )
         decoded.unpersist()
-        if labels is not None:
-            labels.unpersist()
+        labels.unpersist()
     return failed
 
 

@@ -23,14 +23,16 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from ..functions import png
 from ..operators import annotate
 from ..operators.frames import with_frame_identity
+from ..schemas import FRAMES_SCHEMA, LABELS_ARRAY_SCHEMA, TOPIC_MESSAGES_SCHEMA
 from .rosbag_format import (
     FRAME_COLUMNS,
     MESSAGE_COLUMNS,
-    iter_bag,
+    decode_bag,
     open_bag,
     rosbag_decoder,
 )
@@ -56,108 +58,80 @@ def read_frames(spark: SparkSession, path: str) -> DataFrame:
 # message row leaves the frame columns null and vice versa) plus the
 # quarantine pair. A frame row carries the model's ``labels`` and the
 # ``annotated`` PNG in place of the raw ``content``. Every row carries its
-# source path; a failed bag yields one row with ``decode_error`` set and all
-# data columns null. This keeps per-bag failure isolation inside ONE Spark
-# job per tick (the O2 contract) — no driver-side per-bag loop launching a
-# filtered job per key.
-BAG_ROWS_DDL = (
-    TOPIC_MESSAGES_DDL
-    + ", camera string, frame_index int, filename string, "
-    "frame_time timestamp, width int, height int, "
-    f"labels {annotate.LABELS_TYPE}, annotated binary, "
-    "bag_path string, decode_error string"
+# source path; a failed bag yields exactly one row with ``decode_error`` set
+# and all data columns null. This keeps per-bag failure isolation inside ONE
+# Spark job per tick (the O2 contract) — no driver-side per-bag loop
+# launching a filtered job per key.
+BAG_ROWS = StructType(
+    TOPIC_MESSAGES_SCHEMA.fields
+    + [f for f in FRAMES_SCHEMA.fields if f.name not in ("bag_id", "content")]
+    + [
+        StructField("labels", LABELS_ARRAY_SCHEMA),
+        StructField("annotated", BinaryType()),
+        StructField("bag_path", StringType()),
+        StructField("decode_error", StringType()),
+    ]
 )
-_BAG_ROWS_COLUMNS = [c.split()[0] for c in BAG_ROWS_DDL.split(", ")]
+_BAG_ROWS_COLUMNS = BAG_ROWS.fieldNames()
 
 
 def decode_bags(
     paths: DataFrame, topics: list[str] | None, model_fn=None
 ) -> DataFrame:
-    """Bag paths (any DataFrame with a ``path`` column) → ``BAG_ROWS_DDL``
-    rows: the messages on ``topics`` (None = all), a frame row per
-    sensor_msgs/Image message, or one quarantine row for a bag that fails
-    to open or parse (including an unsupported image encoding).
+    """Bag paths (any DataFrame with a ``path`` column) → ``BAG_ROWS``
+    rows: the messages on ``topics`` (None = all), a labeled, annotated
+    frame row per sensor_msgs/Image message, or one quarantine row for a
+    bag that fails to open or parse (including an unsupported image
+    encoding).
 
     The decode runs over ``paths``' own partitions — a ``binaryFile``
     listing scan gives one task per bag — and each bag is read once, by
     path, inside its task (the reference needs two full bag passes plus a
-    realtime replay, engine.py:96-137). Frames are labeled in chunks of at
-    most ``spark.sql.execution.arrow.maxRecordsPerBatch`` (read here, on
-    the driver): one ``model_fn`` call per chunk on the raw pixel arrays
-    (the operators/annotate contract; None = ``annotate.detect_blobs``),
-    then each frame's boxes are drawn on its array and only the annotated
-    image is PNG-encoded. Each chunk is its own pandas frame, so a task
-    never holds a whole bag's raw frames; a bag's messages follow its last
-    chunk. A bag that fails after some chunks went out still ends in its
-    quarantine row; consumers drop its frame rows by ``bag_path``. An
-    exception raised by ``model_fn`` is not a bag error: it fails the task.
-    Tell the row kinds apart by ``topic`` (message), ``camera`` (frame) or
+    realtime replay, engine.py:96-137). The task then makes one
+    ``model_fn`` call on the bag's raw pixel arrays (the operators/annotate
+    contract; None = ``annotate.detect_blobs``), draws each frame's boxes
+    on its array and PNG-encodes only the annotated image. An exception
+    raised by ``model_fn`` is not a bag error: it fails the task. Tell the
+    row kinds apart by ``topic`` (message), ``camera`` (frame) or
     ``decode_error``.
     """
     want = set(topics) if topics else None
     model_fn = model_fn or annotate.detect_blobs
-    chunk_size = int(
-        paths.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    )
-    if chunk_size <= 0:  # Spark's "no limit"
-        chunk_size = None
 
     def _rows(out: pd.DataFrame, path: str) -> pd.DataFrame:
         out = out.assign(bag_path=path)
         nulls = {c: None for c in _BAG_ROWS_COLUMNS if c not in out}
         return out.assign(**nulls)[_BAG_ROWS_COLUMNS]
 
-    def _frames(rows: list[tuple], path: str) -> pd.DataFrame:
-        pixels = [r[-1] for r in rows]
-        labels = model_fn(pixels)
-        out = pd.DataFrame([r[:-1] for r in rows], columns=FRAME_COLUMNS[:-1])
+    def _frames(imgs: list[tuple]) -> pd.DataFrame:
+        pixels = [r[-1] for r in imgs]
+        labels = model_fn(pixels) if pixels else []
+        out = pd.DataFrame([r[:-1] for r in imgs], columns=FRAME_COLUMNS[:-1])
         out["labels"] = labels
         out["annotated"] = [
             png.encode(png.draw_boxes(arr, annotate.label_boxes(lab)))
             for arr, lab in zip(pixels, labels, strict=True)
         ]
-        return _rows(out, path)
-
-    def _parse(path: str):
-        yield from iter_bag(path, open_bag(path), want, True)
-
-    def _bag(path: str) -> Iterator[pd.DataFrame]:
-        parsed = _parse(path)
-        msgs: list[tuple] = []
-        chunk: list[tuple] = []
-        while True:
-            try:
-                item = next(parsed, None)
-            except Exception as exc:  # noqa: BLE001 — quarantine boundary:
-                # open and parse only; model_fn runs outside it
-                yield pd.DataFrame(
-                    [[None] * (len(_BAG_ROWS_COLUMNS) - 2) + [path, repr(exc)]],
-                    columns=_BAG_ROWS_COLUMNS,
-                )
-                return
-            if item is None:
-                break
-            is_frame, row = item
-            if not is_frame:
-                msgs.append(row)
-                continue
-            chunk.append(row)
-            if len(chunk) == chunk_size:
-                yield _frames(chunk, path)
-                chunk = []
-        if chunk:
-            yield _frames(chunk, path)
-        # one pandas frame per row kind: mixing kinds would turn
-        # null-padded int columns into float64, and a float64
-        # rosbagTimestamp loses nanoseconds
-        yield _rows(pd.DataFrame(msgs, columns=MESSAGE_COLUMNS), path)
+        return out
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for path in pdf["path"]:
-                yield from _bag(path)
+                try:
+                    msgs, imgs = decode_bag(path, open_bag(path), want, True)
+                except Exception as exc:  # noqa: BLE001 — quarantine boundary
+                    yield pd.DataFrame(
+                        [[None] * (len(_BAG_ROWS_COLUMNS) - 2) + [path, repr(exc)]],
+                        columns=_BAG_ROWS_COLUMNS,
+                    )
+                    continue
+                # one pandas frame per row kind: mixing kinds would turn
+                # null-padded int columns into float64, and a float64
+                # rosbagTimestamp loses nanoseconds
+                yield _rows(pd.DataFrame(msgs, columns=MESSAGE_COLUMNS), path)
+                yield _rows(_frames(imgs), path)
 
-    return paths.select("path").mapInPandas(_decode, schema=BAG_ROWS_DDL)
+    return paths.select("path").mapInPandas(_decode, schema=BAG_ROWS)
 
 
 def read_bag_messages(

@@ -23,7 +23,7 @@ Decoded fields flatten to dotted names (``pose.position.x``,
 columns (bag_to_csv.py:114-136 stringifies ``name: value`` lines).
 
 Scale posture: each bag is opened by path and decoded inside one task
-(``open_bag`` + ``iter_bag``, driven by sources/frames_source.py); the
+(``open_bag`` + ``decode_bag``, driven by sources/frames_source.py); the
 topic predicate skips message records *before* deserialization (only the
 8-byte record header is read), so an image-heavy bag scanned for /imu
 never touches the pixel bytes.
@@ -984,14 +984,12 @@ def _frame_row(path: str, bag_id: str, topic: str, flat: dict) -> tuple:
     )
 
 
-def iter_bag(
+def decode_bag(
     path: str, content: bytes, want: set[str] | None, frames: bool
-) -> Iterator[tuple[bool, tuple]]:
-    """One ``read_messages`` pass over a bag, yielding ``(is_frame, row)``
-    in bag order: message rows shaped as ``MESSAGE_COLUMNS``, frame rows
-    as ``FRAME_COLUMNS`` with the raw pixel array in the ``content`` slot
-    (see ``_frame_row``). Rows come one at a time, so a consumer can
-    bound how many frames it holds.
+) -> tuple[list[tuple], list[tuple]]:
+    """One ``read_messages`` pass over a bag → (message rows, frame rows),
+    shaped as ``MESSAGE_COLUMNS`` / ``FRAME_COLUMNS``; a frame row holds
+    the raw pixel array in the ``content`` slot (see ``_frame_row``).
 
     ``want`` selects the message topics (None = every topic, empty = none).
     ``frames`` adds one frame row per sensor_msgs/Image message. Image
@@ -1000,6 +998,8 @@ def iter_bag(
     """
     content = _maybe_unwrap(path, content)
     bag_id = bag_id_from_path(path)
+    msgs: list[tuple] = []
+    imgs: list[tuple] = []
     for conn, t_ns, raw in read_messages(content, None if frames else want):
         is_image = frames and conn.msg_type == IMAGE_TYPE
         keep = want is None or conn.topic in want
@@ -1010,15 +1010,18 @@ def iter_bag(
         if keep:
             seq = flat.get("header.seq")
             payload = {k: stringify(v) for k, v in flat.items()}
-            yield False, (
-                bag_id,
-                conn.topic,
-                t_ns,
-                int(seq) if seq is not None else None,
-                payload,
+            msgs.append(
+                (
+                    bag_id,
+                    conn.topic,
+                    t_ns,
+                    int(seq) if seq is not None else None,
+                    payload,
+                )
             )
         if is_image:
-            yield True, _frame_row(path, bag_id, conn.topic, flat)
+            imgs.append(_frame_row(path, bag_id, conn.topic, flat))
+    return msgs, imgs
 
 
 def rosbag_decoder(path: str, content: bytes, topics: list[str] | None):
@@ -1029,8 +1032,7 @@ def rosbag_decoder(path: str, content: bytes, topics: list[str] | None):
     """
     import pandas as pd
 
-    want = set(topics) if topics else None
-    msgs = [row for _, row in iter_bag(path, content, want, False)]
+    msgs, _ = decode_bag(path, content, set(topics) if topics else None, False)
     return pd.DataFrame(msgs, columns=MESSAGE_COLUMNS)
 
 
@@ -1047,10 +1049,8 @@ def rosbag_frame_decoder(path: str, content: bytes):
 
     from ..functions import png
 
-    rows = [
-        (*r[:-1], png.encode(r[-1]))
-        for _, r in iter_bag(path, content, set(), True)
-    ]
+    _, imgs = decode_bag(path, content, set(), True)
+    rows = [(*r[:-1], png.encode(r[-1])) for r in imgs]
     return pd.DataFrame(rows, columns=FRAME_COLUMNS)
 
 

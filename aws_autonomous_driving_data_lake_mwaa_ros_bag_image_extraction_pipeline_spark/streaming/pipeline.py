@@ -176,21 +176,17 @@ def _stage_rows(
     spark: SparkSession | None, manifest_dir: str, rows_or_df
 ) -> str:
     """Write commit rows to a unique staging dir; returns the relative
-    pointer for the log entry. With ``spark=None`` the parquet is written
-    driver-side via pyarrow — the manifest is tiny metadata (a handful of
-    rows per transition), so status writers (e.g. non-Spark orchestration
-    processes) don't need a JVM, exactly as Delta's log writes aren't
-    Spark jobs."""
+    pointer for the log entry. A DataFrame (the Spark compactor's snapshot)
+    is written by Spark; row tuples are written driver-side via pyarrow —
+    the manifest is tiny metadata (a handful of rows per transition), so
+    status writers don't need a JVM or a Spark job, exactly as Delta's log
+    writes aren't Spark jobs."""
     import uuid
 
     rel = f"data/c-{uuid.uuid4().hex}"
     path = os.path.join(manifest_dir, rel)
-    if spark is not None and isinstance(rows_or_df, DataFrame):
+    if isinstance(rows_or_df, DataFrame):
         rows_or_df.write.mode("overwrite").parquet(path)
-    elif spark is not None:
-        spark.createDataFrame(rows_or_df, MANIFEST_LOG_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(path)
     else:
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -218,11 +214,10 @@ def append_status(
 ) -> None:
     """Record a status transition for each key (append-only; K8). One
     call = one commit = one new readable version. Safe under CONCURRENT
-    writers (see the commit-protocol note above); with ``spark=None`` the
-    rows are staged driver-side via pyarrow."""
-    # tz-aware: Spark reads a naive datetime as process-local time, pyarrow
-    # as UTC; an aware one is the same instant to both stagers
-    now = dt.datetime.now(dt.timezone.utc)
+    writers (see the commit-protocol note above). The rows are always
+    staged driver-side via pyarrow (no Spark job); ``spark`` is accepted
+    for call-site compatibility and may be None."""
+    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     rows = [(k, status, now) for k in keys]
     if not rows:
         return
@@ -230,7 +225,9 @@ def append_status(
     _claim_commit(manifest_dir, "append", rel)
 
 
-def clear_status(spark: SparkSession, manifest_dir: str, keys: list[str]) -> None:
+def clear_status(
+    spark: SparkSession | None, manifest_dir: str, keys: list[str]
+) -> None:
     """Replay hook: clearing the status re-enqueues the key on the next
     ``process_pending`` tick (reference README.md:90-100)."""
     append_status(spark, manifest_dir, keys, None)
@@ -534,8 +531,8 @@ def _process_batch(
     container STOP as success, processing.py:154-173). A tick discovering
     10k bags therefore runs a constant number of jobs, not 10k.
 
-    The status commits are staged driver-side (``append_status(None, …)``):
-    the ledger lives on a local filesystem anyway (``_claim_commit`` links),
+    The status commits are staged driver-side (``append_status``): the
+    ledger lives on a local filesystem anyway (``_claim_commit`` links),
     so a transition costs no Spark job, and the failure mark still lands
     when the Spark session itself broke.
 

@@ -335,47 +335,6 @@ def test_e1_frames_match_infer_and_annotate(spark, tmp_path):
     }
 
 
-def test_bounded_frame_chunks_same_outputs(spark, tmp_path):
-    """With ``spark.sql.execution.arrow.maxRecordsPerBatch`` at 2 the
-    decode labels a bag's frames two at a time, and the tick writes the
-    same outputs as with the default. A bag truncated mid-frames has
-    emitted frame chunks before its parse fails; the tick still marks it
-    ``failure`` and writes none of its frames."""
-    bags = str(tmp_path / "bags")
-    paths = fixtures.write_bag_dir(bags, n_bags=2, tar_gz=())
-    with open(paths[0], "rb") as f:
-        data = f.read()
-    cut = os.path.join(bags, "cut.bag")
-    with open(cut, "wb") as f:
-        f.write(data[: len(data) * 3 // 4])
-
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    spark.conf.set(key, "2")
-    try:
-        decoded = frames_source.decode_bags(
-            spark.createDataFrame([(cut,)], "path string"), None
-        ).collect()
-        chunked = _fixture_cfg(tmp_path, "chunked")
-        chunked_result = runner.run_once(spark, chunked)
-    finally:
-        spark.conf.unset(key)
-    assert any(r.camera for r in decoded)  # frames went out before the error
-    assert [r.decode_error is not None for r in decoded].count(True) == 1
-
-    default = _fixture_cfg(tmp_path, "default")
-    result = runner.run_once(spark, default)
-    assert chunked_result == result
-    assert result[f"file:{cut}"] == "failure"
-    got = _frame_outputs(spark, chunked.output_dir)
-    assert got == _frame_outputs(spark, default.output_dir)
-    assert "cut" not in {k[0] for table in got.values() for k in table}
-
-    def msgs(out):
-        return sorted(map(str, spark.read.parquet(f"{out}/topic_messages").collect()))
-
-    assert msgs(chunked.output_dir) == msgs(default.output_dir)
-
-
 def test_warm_tick_job_count_pinned(spark, tmp_path):
     """A warm E1 tick runs a fixed, small number of Spark jobs: discovery,
     the landing write and the three frame sinks over one persisted decode,

@@ -683,32 +683,3 @@ def test_chunk_store_probe_reraises_non_absence_failures(spark, tmp_path):
         )
     # and the damaged path was NOT appended to
     assert set(spark.read.parquet(bad).columns) == {"a", "b"}
-
-
-def test_spark_and_driver_commits_agree_off_utc(spark, tmp_path):
-    """A Spark-staged commit and a driver-staged (pyarrow) one order by
-    the same clock whatever the process time zone: E1 commits its
-    transitions driver-side while ``clear_status`` may go through Spark,
-    and a replayed key must not stay cleared because the Spark rows read
-    a naive UTC time as local (regression: west of UTC the clear
-    outranked the later ``complete``)."""
-    import os
-    import time
-
-    m = str(tmp_path / "manifest")
-    prev = os.environ.get("TZ")
-    os.environ["TZ"] = "America/New_York"
-    time.tzset()
-    try:
-        sp.clear_status(spark, m, ["k"])
-        sp.append_status(None, m, ["k"], "complete")
-        sp.append_status(None, m, ["j"], "in progress")
-        sp.append_status(spark, m, ["j"], "complete")
-    finally:
-        if prev is None:
-            os.environ.pop("TZ")
-        else:
-            os.environ["TZ"] = prev
-        time.tzset()
-    got = {r.key: r.status for r in sp.current_manifest(spark, m).collect()}
-    assert got == {"k": "complete", "j": "complete"}
