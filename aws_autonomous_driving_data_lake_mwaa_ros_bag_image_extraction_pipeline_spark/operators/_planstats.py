@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 def input_size_bytes(df: DataFrame) -> int | None:
     """Total Catalyst size estimate (bytes) of the base relations feeding
     ``df`` — leaf nodes of the analyzed plan — or ``None`` when the JVM
-    call fails (callers then keep their measured local default)."""
+    call fails."""
     try:
         leaves = df._jdf.queryExecution().analyzed().collectLeaves()
         total = 0
@@ -44,12 +44,3 @@ def broadcast_threshold_bytes(spark) -> int:
     except Exception:
         return 10 << 20
 
-
-# Sentinel default for operators' spread knobs: "spread to
-# defaultParallelism" — the measured-right single-box default (a compact
-# parquet arrives as ONE scan split and a CPU-bound Python pass would run
-# single-threaded). Callers that MEASURE the input layout pass an int
-# (spread to that) or None (skip the exchange — the 100 TB case, where the
-# scan already carries thousands of splits and the repartition would be a
-# pure full-corpus shuffle tax).
-SPREAD_DEFAULT = object()

@@ -28,21 +28,6 @@ from ..functions import text as T
 from ._caching import finish
 
 
-def _spread(docs: DataFrame, id_col: str, repartition_to: int | None) -> DataFrame:
-    """Optionally hash-repartition on the id before a CPU-bound narrow
-    token pass. A compact single-file input arrives as ONE scan split, so
-    the tokenize/gram stage runs single-threaded (measured: dup_spans'
-    two gram passes were 0.8 s + 1.1 s single-task stages at sf0.1) —
-    the same trap ``similarity.lsh_buckets`` and ``dedup.simhash`` guard
-    against. Hash on the id (deterministic, skew-free for unique ids;
-    keyless round-robin would pay sort-before-repartition) and leave the
-    default OFF: a 100 TB source already has thousands of splits, where
-    this exchange would be a pure corpus-shuffle tax."""
-    if repartition_to:
-        return docs.repartition(repartition_to, F.col(id_col))
-    return docs
-
-
 # ---------------------------------------------------------------------------
 # Sequence packing
 # ---------------------------------------------------------------------------
@@ -246,16 +231,11 @@ def passage_hashes(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """Explode each document into md5 hashes of its non-overlapping n-token
     passages (chunk i = tokens [i·n, i·n + n)); trailing partial chunks are
     dropped. Documents shorter than ``n`` tokens yield no rows.
-
-    ``repartition_to``: spread the corpus before the tokenize+hash pass
-    (see ``_spread`` — single-split inputs otherwise run it one-threaded).
     """
-    docs = _spread(docs, id_col, repartition_to)
     toks = T.tokens(F.lower(F.col(text_col)))
 
     def _passages(tk):
@@ -276,7 +256,6 @@ def passage_dup_stats(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """Per-document cross-document contamination: the fraction of a doc's
     passages that also appear in at least one *other* document (boilerplate /
@@ -289,7 +268,7 @@ def passage_dup_stats(
     Two shuffles total (passage key, then doc key); both keys are md5s —
     uniformly distributed, no skew at 100 TB.
     """
-    p = passage_hashes(docs, n, id_col, text_col, repartition_to).distinct()
+    p = passage_hashes(docs, n, id_col, text_col).distinct()
     w = Window.partitionBy("passage_md5")
     flagged = p.withColumn("n_docs", F.count(F.lit(1)).over(w))
     n_dup = F.sum(F.when(F.col("n_docs") > 1, 1).otherwise(0)).alias(
@@ -316,7 +295,6 @@ def duplicated_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     eager: bool = False,
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """MAXIMAL exactly-duplicated token spans at ANY alignment — the
     ExactSubstr detector of Lee et al., "Deduplicating Training Data Makes
@@ -369,7 +347,6 @@ def duplicated_spans(
     want the plan, and the eager result carries ``localCheckpoint``'s
     executor-loss durability caveat (see ``_caching``).
     """
-    docs = _spread(docs, id_col, repartition_to)
     toks = T.tokens(F.lower(F.col(text_col)))
 
     def _grams(tk):
@@ -415,7 +392,6 @@ def scrub_duplicated_spans(
     text_col: str = "text",
     spans: DataFrame | None = None,
     eager: bool = False,
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """Remove duplicated spans keeping ONE occurrence corpus-wide — the
     scrub ExactSubstr dedup actually applies (Lee et al., ACL 2022 remove
@@ -461,7 +437,6 @@ def scrub_duplicated_spans(
     membership scan. The corpus itself is touched once more for the
     rebuild join.
     """
-    docs = _spread(docs, id_col, repartition_to)
     toks = T.tokens(F.lower(F.col(text_col)))
     if spans is None:
         spans = duplicated_spans(docs, k, min_count, id_col, text_col, eager)
@@ -534,7 +509,6 @@ def scrub_until_clean(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_passes: int = 4,
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """Iterate detect→scrub until :func:`duplicated_spans` on the scrubbed
     corpus is empty (or ``max_passes`` scrub passes have run) — the bounded
@@ -590,10 +564,7 @@ def scrub_until_clean(
     converged = False
     cur, cur_text = docs, text_col
     for _ in range(max_passes):
-        spans = duplicated_spans(
-            cur, k, min_count, id_col, cur_text, eager=True,
-            repartition_to=repartition_to,
-        )
+        spans = duplicated_spans(cur, k, min_count, id_col, cur_text, eager=True)
         dirty = not spans.isEmpty()
         if result is not None and not dirty:
             converged = True
@@ -657,7 +628,6 @@ def scrub_duplicate_passages(
     max_df: int = 1,
     id_col: str = "doc_id",
     text_col: str = "text",
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """Boilerplate REMOVAL — the scrub counterpart of the measure-only
     :func:`passage_dup_stats`: delete every n-token passage whose corpus
@@ -681,7 +651,6 @@ def scrub_duplicate_passages(
     only). Two shuffles on uniform keys; no window over the corpus, no
     Python.
     """
-    docs = _spread(docs, id_col, repartition_to)
     toks = T.tokens(F.lower(F.col(text_col)))
 
     def _parts(tk):
@@ -745,7 +714,6 @@ def trim_repeated_passages(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """WITHIN-document repetition trimming — the removal counterpart of
     ``textstats.repetition_scores`` (which only measures): keep the FIRST
@@ -765,7 +733,6 @@ def trim_repeated_passages(
     reassembly reuses the id partitioning. No corpus-wide state at all —
     this one scales embarrassingly.
     """
-    docs = _spread(docs, id_col, repartition_to)
     toks = T.tokens(F.lower(F.col(text_col)))
 
     def _parts(tk):

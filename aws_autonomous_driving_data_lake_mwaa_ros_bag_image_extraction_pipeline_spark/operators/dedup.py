@@ -25,11 +25,6 @@ from ..functions import vectors as V
 from ._caching import finish, share
 from ._planstats import broadcast_threshold_bytes, input_size_bytes
 
-# "Caller didn't say" marker for spread knobs whose None already means
-# "measured: don't spread" (see embedding_dup_pairs).
-_UNSET = object()
-
-
 def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Groups of byte-identical (normalized) documents: fingerprint, member
     count, canonical (min) id. Map-side partial agg → tiny shuffle."""
@@ -70,20 +65,17 @@ def _shingle_long(
     id_col: str,
     text_col: str,
     shingle_len: int,
-    repartition_to: int | None,
 ) -> DataFrame:
     """(id, sh) long-format word-shingle table — fully relational.
 
     posexplode tokens → window ``lead`` chain → concat: every step is
     whole-stage codegen. The HOF formulation (``transform`` over an index
     sequence with ``slice``+``array_join``) evaluates interpreted at
-    ~13 ms/doc — 100× this plan. The window's sort piggybacks on the id
-    hash-partitioning (from ``repartition_to`` or the upstream layout), so
-    no extra exchange. Output may contain duplicate shingles (min-hash
-    doesn't care; set consumers dedup with collect_set).
+    ~13 ms/doc — 100× this plan. The window's sort piggybacks on an
+    upstream id hash-partitioning, so a spread input pays no extra
+    exchange. Output may contain duplicate shingles (min-hash doesn't
+    care; set consumers dedup with collect_set).
     """
-    if repartition_to:
-        docs = docs.repartition(repartition_to, F.col(id_col))
     tok = docs.select(
         F.col(id_col),
         F.posexplode(T.tokens(F.lower(F.col(text_col)))).alias("p", "t"),
@@ -105,12 +97,11 @@ def _shingle_table(
     id_col: str,
     text_col: str,
     shingle_len: int,
-    repartition_to: int | None,
 ) -> DataFrame:
     """(id, sh: array<string>) distinct word-shingle table (from the long
     form — collect_set dedups)."""
     return (
-        _shingle_long(docs, id_col, text_col, shingle_len, repartition_to)
+        _shingle_long(docs, id_col, text_col, shingle_len)
         .groupBy(id_col)
         .agg(F.collect_set("sh").alias("sh"))
     )
@@ -145,18 +136,13 @@ def minhash_signatures(
     text_col: str = "text",
     shingle_len: int = 3,
     num_hashes: int = 12,
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """k independent min-hashes per document (see ``_signatures_from``).
 
     Documents with fewer than ``shingle_len`` tokens have no shingles and are
     absent from the output (they can't near-dup-match anything).
-
-    ``repartition_to``: spread docs over N partitions before the CPU-bound
-    shingle+hash stage — needed when the input is a handful of big files;
-    omit when the source already has enough splits.
     """
-    sh_long = _shingle_long(docs, id_col, text_col, shingle_len, repartition_to)
+    sh_long = _shingle_long(docs, id_col, text_col, shingle_len)
     return _signatures_from(sh_long, id_col, num_hashes)
 
 
@@ -208,10 +194,9 @@ def lsh_candidate_pairs(
     shingle_len: int = 3,
     num_hashes: int = 12,
     bands: int = 4,
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """Band-bucket candidates from raw documents (see ``_candidates_from``)."""
-    sh_long = _shingle_long(docs, id_col, text_col, shingle_len, repartition_to)
+    sh_long = _shingle_long(docs, id_col, text_col, shingle_len)
     return _candidates_from(sh_long, id_col, num_hashes, bands)
 
 
@@ -240,14 +225,13 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_len: int = 3,
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """Exact shingle-Jaccard for candidate pairs (verification step).
 
     Joins the (small — broadcast by AQE) candidate set back to shingle
     arrays; intersection and union computed JVM-side with array intrinsics.
     """
-    sh_tbl = _shingle_table(docs, id_col, text_col, shingle_len, repartition_to)
+    sh_tbl = _shingle_table(docs, id_col, text_col, shingle_len)
     return _jaccard_from(sh_tbl, pairs, id_col)
 
 
@@ -259,7 +243,6 @@ def minhash_dedup_pairs(
     shingle_len: int = 3,
     num_hashes: int = 12,
     bands: int = 4,
-    repartition_to: int | None = None,
     eager: bool = False,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: candidates → exact Jaccard ≥ t.
@@ -283,7 +266,7 @@ def minhash_dedup_pairs(
     construction. ``eager=True`` additionally materializes the result
     before returning (``_caching.finish``).
     """
-    sh_long = _shingle_long(docs, id_col, text_col, shingle_len, repartition_to)
+    sh_long = _shingle_long(docs, id_col, text_col, shingle_len)
     cands = share(_candidates_from(sh_long, id_col, num_hashes, bands))
     cand_ids = (
         cands.select(F.col("id_a").alias(id_col))
@@ -291,7 +274,7 @@ def minhash_dedup_pairs(
         .distinct()
     )
     cand_docs = docs.join(cand_ids, id_col, "left_semi")
-    sh_small = _shingle_table(cand_docs, id_col, text_col, shingle_len, None)
+    sh_small = _shingle_table(cand_docs, id_col, text_col, shingle_len)
     out = _jaccard_from(sh_small, cands, id_col).filter(
         F.col("jaccard") >= threshold
     )
@@ -307,7 +290,6 @@ def ngram_jaccard_pairs(
     n: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """EXACT character-n-gram Jaccard pairs ≥ threshold via the prefix
     filter (AllPairs/PPJoin family) — no hashing, no recall loss.
@@ -328,11 +310,6 @@ def ngram_jaccard_pairs(
     """
     from ..functions.text import char_ngrams
 
-    # The gram explode is the CPU-bound stage; a compact corpus file arrives
-    # as one scan split, so spread it before fanning out (same knob as
-    # minhash_signatures).
-    if repartition_to:
-        docs = docs.repartition(repartition_to, F.col(id_col))
     grams = docs.select(
         F.col(id_col), F.explode(F.array_distinct(char_ngrams(F.col(text_col), n))).alias("g")
     )
@@ -397,7 +374,6 @@ def simhash(
     id_col: str = "doc_id",
     text_col: str = "text",
     bits: int = 32,
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """``bits``-bit SimHash as a BIGINT: bit b = majority vote of bit b of
     md5(token) over the document's distinct tokens.
@@ -409,8 +385,6 @@ def simhash(
     ``bit_count(xor)`` instead of per-character string compares, and both
     expressions are bit-identical in the DuckDB oracle.
     """
-    if repartition_to:
-        docs = docs.repartition(repartition_to, F.col(id_col))
     # plain explode: token-less docs get no signature either way (the
     # previous explode_outer + isNotNull filter was exactly equivalent
     # but read as if empty docs were meant to survive)
@@ -455,7 +429,6 @@ def simhash_near_pairs(
     bits: int = 32,
     bands: int = 4,
     max_hamming: int | None = None,
-    repartition_to: int | None = None,
     eager: bool = False,
     band_join: str = "auto",
 ) -> DataFrame:
@@ -471,7 +444,7 @@ def simhash_near_pairs(
     (The exact-signature grouping in ``simhash_dup_groups`` is the distance-0
     special case; this is the real near-dup pass.)
     """
-    sig = simhash(docs, id_col, text_col, bits, repartition_to)
+    sig = simhash(docs, id_col, text_col, bits)
     return hash_near_pairs(
         sig, "simhash", id_col=id_col, bits=bits, bands=bands,
         max_hamming=max_hamming, eager=eager, band_join=band_join,
@@ -488,7 +461,6 @@ def embedding_dup_pairs(
     vec_col: str = "embedding",
     n_tables: int = 8,
     n_bits: int = 6,
-    repartition_to=_UNSET,
 ) -> DataFrame:
     """Cosine-similar pairs above threshold — LSH-bucketed (the scale path).
 
@@ -498,23 +470,11 @@ def embedding_dup_pairs(
     pairs; vectors are joined back afterwards for the exact cosine verify.
     Recall is tunable via (n_tables, n_bits) — more tables → higher recall,
     fewer bits → bigger buckets. For an exact (oracle-checkable) answer use
-    ``embedding_dup_pairs_exact``.
-
-    ``repartition_to`` spreads the two CPU-bound stages (the bucket matmul
-    pass, via ``lsh_buckets``, and the candidate verify — see below) for
-    callers that MEASURED an underfilled input layout
-    (plans.registry._spread_par): an int spreads both to that width,
-    ``None`` skips both exchanges (the 100 TB layout — the scan already
-    has the splits). Unset keeps the legacy local behavior: bucket pass
-    spread to ``defaultParallelism`` by ``lsh_buckets``' own default,
-    candidate verify left to AQE."""
+    ``embedding_dup_pairs_exact``."""
     from . import similarity
 
     bk = similarity.lsh_buckets(
-        emb, dim, n_tables, n_bits, id_col, vec_col, include_vec=False,
-        repartition_to=similarity._SPREAD_DEFAULT
-        if repartition_to is _UNSET
-        else repartition_to,
+        emb, dim, n_tables, n_bits, id_col, vec_col, include_vec=False
     )
     a = bk.select(F.col(id_col).alias("id_a"), "table", "bucket")
     b = bk.select(F.col(id_col).alias("id_b"), "table", "bucket")
@@ -531,21 +491,18 @@ def embedding_dup_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
     )
-    if repartition_to is not _UNSET and repartition_to:
-        # The exact-cosine verify below is CPU-bound PER ROW (a dim-wide
-        # fold per candidate), but AQE coalesces the dedup exchange by
-        # BYTES — measured at sf0.1: 252k id-pairs ≈ 2 MB → 2 post-AQE
-        # partitions, so the verify ran on 2 of 32 cores (0.86 s of a 1.6 s
-        # query). An explicit numbered repartition on the SAME keys BEFORE
-        # the distinct becomes the aggregation's own exchange (same single
-        # shuffle — the distinct reuses the partitioning) but is exempt
-        # from AQE coalescing, so the verify keeps the parallelism.
-        # (Placed after distinct it is elided entirely: the planner sees
-        # the partitioning already satisfied, and AQE re-coalesces.)
-        # Default OFF: at 100 TB the candidate table is large enough that
-        # AQE's byte-sizing is already right.
-        cand = cand.repartition(repartition_to, "id_a", "id_b")
-    cand = cand.distinct()
+    # The exact-cosine verify below is CPU-bound PER ROW (a dim-wide fold
+    # per candidate), but AQE coalesces the dedup exchange by BYTES —
+    # measured at sf0.1: 252k id-pairs ≈ 2 MB → 2 post-AQE partitions, so
+    # the verify ran on 2 of 32 cores (0.86 s of a 1.6 s query). A numbered
+    # repartition on the SAME keys BEFORE the distinct becomes the
+    # aggregation's own exchange (same single shuffle — the distinct reuses
+    # the partitioning) but is exempt from AQE coalescing, so the verify
+    # keeps the parallelism without adding a shuffle at any scale. (Placed
+    # after distinct it is elided entirely: the planner sees the
+    # partitioning already satisfied, and AQE re-coalesces.)
+    par = emb.sparkSession.sparkContext.defaultParallelism
+    cand = cand.repartition(par, "id_a", "id_b").distinct()
     # Norms are computed ONCE PER VECTOR on the join-back tables, not per
     # candidate pair — cosine folds are the verify stage's whole cost, and
     # each pair was paying 2 norm folds it shares with every other pair of
@@ -829,7 +786,6 @@ def hash_near_pairs(
     max_hamming: int | None = None,
     eager: bool = False,
     band_join: str = "auto",
-    n_salt: int | None = None,
 ) -> DataFrame:
     """Generic integer-signature Hamming near-dup pairs — the banding core
     of ``simhash_near_pairs`` exposed for ANY precomputed ``bits``-wide
@@ -866,12 +822,11 @@ def hash_near_pairs(
       streams the hot bucket's probe side across ALL partitions.
     - ``"salted"`` (the 100 TB form — a corpus-sized banded table cannot
       broadcast): SHUFFLE_HASH join on ``(bucket, salt)`` where the
-      probe side's salt is ``pmod(xxhash64(id), n_salt)`` (deterministic —
-      guide §2.5's retry-safety rule) and the build side is exploded
-      ``n_salt`` ways, so a hot bucket's pair generation spreads over
-      ``n_salt`` tasks instead of one. Cost: build-side shuffle bytes ×
-      ``n_salt`` (rows are three longs). ``n_salt`` defaults to
-      ``defaultParallelism``.
+      probe side's salt is ``pmod(xxhash64(id), n)`` for ``n =
+      defaultParallelism`` (deterministic — guide §2.5's retry-safety
+      rule) and the build side is exploded ``n`` ways, so a hot bucket's
+      pair generation spreads over ``n`` tasks instead of one. Cost:
+      build-side shuffle bytes × ``n`` (rows are three longs).
     - ``"auto"`` (default): salted when ``bands ×`` Catalyst's size
       estimate of the base relations feeding the signature plan
       (``_planstats.input_size_bytes`` — storage-grounded, unlike the
@@ -879,7 +834,8 @@ def hash_near_pairs(
       session's autoBroadcastJoinThreshold — the same line past which the
       planner itself would stop broadcasting — else broadcast. The input
       bytes overestimate the banded table (text ≫ signature rows), so the
-      switch errs toward the scale-safe form.
+      switch errs toward the scale-safe form — and an unknown size (the
+      estimate failed) picks salted too.
     """
     if max_hamming is None:
         max_hamming = bands - 1
@@ -888,9 +844,7 @@ def hash_near_pairs(
     if band_join == "auto":
         est = input_size_bytes(df)
         thr = broadcast_threshold_bytes(df.sparkSession)
-        band_join = (
-            "salted" if est is not None and est * bands > thr else "broadcast"
-        )
+        band_join = "salted" if est is None or est * bands > thr else "broadcast"
     buckets = F.array(
         *[
             F.lit(b * (1 << width))
@@ -908,7 +862,7 @@ def hash_near_pairs(
         F.col(id_col).alias("id_b"), F.col("__sig").alias("sig_b"), "__bkt"
     )
     if band_join == "salted":
-        k = n_salt or df.sparkSession.sparkContext.defaultParallelism
+        k = df.sparkSession.sparkContext.defaultParallelism
         a = a.withColumn(
             "__salt", F.pmod(F.xxhash64(F.col("id_a")), F.lit(k)).cast("int")
         )
@@ -981,7 +935,6 @@ def exact_shingle_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_len: int = 3,
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """GROUND-TRUTH word-shingle Jaccard pairs — no banding, no prefix
     filter: every pair SHARING at least one shingle is scored exactly.
@@ -996,7 +949,7 @@ def exact_shingle_jaccard_pairs(
     boilerplate shingles, prefer the df-capped n-gram or banded MinHash
     paths; this exists to be exhaustive, not cheap.
     """
-    long = _shingle_long(docs, id_col, text_col, shingle_len, repartition_to)
+    long = _shingle_long(docs, id_col, text_col, shingle_len)
     dist = long.distinct()
     sizes = dist.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = dist.select(F.col(id_col).alias("id_a"), "sh")

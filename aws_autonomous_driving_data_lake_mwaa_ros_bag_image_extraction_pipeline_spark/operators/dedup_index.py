@@ -99,13 +99,10 @@ def build_minhash_index(
     shingle_len: int = 3,
     num_hashes: int = 12,
     bands: int = 4,
-    repartition_to: int | None = None,
 ) -> None:
     """Materialize the signature + bucket store for ``docs``."""
     spark = docs.sparkSession
-    sig = dedup.minhash_signatures(
-        docs, id_col, text_col, shingle_len, num_hashes, repartition_to
-    )
+    sig = dedup.minhash_signatures(docs, id_col, text_col, shingle_len, num_hashes)
     sig.write.mode("overwrite").parquet(f"{index_path}/signatures")
     # buckets derive from the WRITTEN signatures — the shingle pipeline
     # above ran once, materialized by the write; this read is store-sized

@@ -52,17 +52,7 @@ def _segment_bounds(l: Column, i: Column, k: int) -> tuple[Column, Column]:
     return start, width
 
 
-def _prepared(
-    docs: DataFrame, id_col: str, text: Column, repartition_to: int | None = None
-) -> DataFrame:
-    # Optional spread before the normalize/segment passes: this projected
-    # base feeds SIX consumers (index, probe, tiny×2, both verify sides),
-    # and a compact single-file input arrives as ONE scan split, so every
-    # pass would otherwise run single-threaded (the curation._spread /
-    # lsh_buckets trap). Hash on the id — deterministic, skew-free. Default
-    # OFF: a 100 TB source already has enough splits.
-    if repartition_to:
-        docs = docs.repartition(repartition_to, F.col(id_col))
+def _prepared(docs: DataFrame, id_col: str, text: Column) -> DataFrame:
     return docs.select(
         F.col(id_col).alias("__id"), text.alias("__s")
     ).filter(F.col("__s").isNotNull()).withColumn("__l", F.length("__s"))
@@ -73,7 +63,6 @@ def edit_distance_pairs(
     id_col: str = "doc_id",
     text: Column | str = "text",
     k: int = 2,
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """All pairs with ``levenshtein(text_a, text_b) <= k`` →
     ``(id_a, id_b, dist)``, ``id_a < id_b`` — without an all-pairs join.
@@ -85,7 +74,7 @@ def edit_distance_pairs(
         raise ValueError("k must be >= 1; use exact_dedup_groups for k=0")
     kp1 = k + 1
     text_c = F.col(text) if isinstance(text, str) else text
-    base = _prepared(docs, id_col, text_c, repartition_to)
+    base = _prepared(docs, id_col, text_c)
 
     # --- index side: k+1 segments per string of length >= k+1 -------------
     idx = (
@@ -216,12 +205,11 @@ def edit_distance_survivors(
     id_col: str = "doc_id",
     text: Column | str = "text",
     k: int = 2,
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """Canonical-survivor view: drop every doc that has a lower-id partner
     within edit distance ``k`` (min-id survivor per near-dup neighborhood,
     matching the exact-dedup ``keep_id`` convention)."""
-    dupped = edit_distance_pairs(docs, id_col, text, k, repartition_to).select(
+    dupped = edit_distance_pairs(docs, id_col, text, k).select(
         F.col("id_b").alias(id_col)
     )
     return docs.join(dupped, id_col, "left_anti")

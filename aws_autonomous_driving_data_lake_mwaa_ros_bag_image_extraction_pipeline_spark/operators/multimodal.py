@@ -31,8 +31,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._planstats import SPREAD_DEFAULT
-
 
 def frame_sample(
     frames: DataFrame,
@@ -200,7 +198,6 @@ def audio_windows(
     hop_ms: int = 10,
     id_col: str = "clip_id",
     content_col: str = "content",
-    repartition_to=SPREAD_DEFAULT,
 ) -> DataFrame:
     """Opaque PCM16-LE audio blobs → framed analysis windows:
     ``(id, win_idx, t0_ms, n_samples, samples: binary)``.
@@ -242,12 +239,7 @@ def audio_windows(
         f"{id_col} {dtypes[id_col]}, win_idx int, t0_ms int, "
         "n_samples int, samples binary"
     )
-    if repartition_to is SPREAD_DEFAULT:
-        repartition_to = clips.sparkSession.sparkContext.defaultParallelism
-    sel = clips.select(id_col, content_col)
-    if repartition_to:
-        sel = sel.repartition(repartition_to)
-    return sel.mapInPandas(_frame, schema=schema)
+    return clips.select(id_col, content_col).mapInPandas(_frame, schema=schema)
 
 
 def audio_features(
@@ -327,7 +319,6 @@ def dhash_frames(
     content_col: str = "content",
     hash_w: int = 9,
     hash_h: int = 8,
-    repartition_to=SPREAD_DEFAULT,
 ) -> DataFrame:
     """Difference-hash (dHash) per image → ``(id, dhash: bigint)`` — the
     standard perceptual fingerprint for NEAR-duplicate image detection
@@ -376,9 +367,4 @@ def dhash_frames(
 
     dtypes = dict(frames.dtypes)
     schema = f"{id_col} {dtypes[id_col]}, dhash bigint"
-    if repartition_to is SPREAD_DEFAULT:
-        repartition_to = frames.sparkSession.sparkContext.defaultParallelism
-    sel = frames.select(id_col, content_col)
-    if repartition_to:
-        sel = sel.repartition(repartition_to)
-    return sel.mapInPandas(_dh, schema=schema)
+    return frames.select(id_col, content_col).mapInPandas(_dh, schema=schema)

@@ -22,7 +22,6 @@ from pyspark.sql.utils import AnalysisException
 
 from ..functions import vectors as V
 from ._errors import is_absent
-from ._planstats import SPREAD_DEFAULT as _SPREAD_DEFAULT
 from ._planstats import input_size_bytes
 
 # Corpus-size line (Catalyst's analyzed-plan estimate, bytes) above which
@@ -31,13 +30,8 @@ from ._planstats import input_size_bytes
 # extra join stages cost ~0.3 s against ~50 MB of shuffle saved); above
 # it, shipping dim-sized vectors through the bucket join and pair dedup
 # dominates (the early form ships each vector n_tables + 2·degree times,
-# the late form once per candidate degree). Env-overridable so a cluster
-# profile can move the line without a code change.
-import os as _os
-
-LATE_ATTACH_BYTES = int(
-    _os.environ.get("SPARK_GRAFT_LSH_LATE_ATTACH_BYTES", str(1 << 30))
-)
+# the late form once per candidate degree).
+LATE_ATTACH_BYTES = 1 << 30
 
 
 def brute_force_topk(
@@ -113,7 +107,6 @@ def lsh_buckets(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     include_vec: bool = True,
-    repartition_to=_SPREAD_DEFAULT,
 ) -> DataFrame:
     """Assign each vector a bucket per hash table (sign pattern of ``n_bits``
     hyperplane projections, packed into an integer). Output long-format:
@@ -127,15 +120,7 @@ def lsh_buckets(
     projections are ONE matmul per Arrow batch against the (tiny,
     deterministic) plane matrix, and bucket ids come from a second matmul
     against bit weights (packbits-style, MSB first). Integer buckets also
-    shrink the candidate-join shuffle key vs the old '0101…' strings.
-
-    ``repartition_to``: by default the input is spread to
-    ``defaultParallelism`` first — a compact parquet arrives as ONE scan
-    split, and without the repartition the matmul stage runs
-    single-threaded (the BNLJ-stream-side trap all our CPU-bound narrow
-    kernels guard against). Callers that measure the input layout pass an
-    int (spread to that) or ``None`` (skip the exchange — the 100 TB
-    case, where the scan already has thousands of splits)."""
+    shrink the candidate-join shuffle key vs the old '0101…' strings."""
     import numpy as np
     import pandas as pd
 
@@ -169,12 +154,7 @@ def lsh_buckets(
             cols["bucket"] = buckets.reshape(-1)
             yield pd.DataFrame(cols)
 
-    if repartition_to is _SPREAD_DEFAULT:
-        repartition_to = emb.sparkSession.sparkContext.defaultParallelism
-    sel = emb.select(id_col, vec_col)
-    if repartition_to:
-        sel = sel.repartition(repartition_to)
-    return sel.mapInPandas(_assign, schema=schema)
+    return emb.select(id_col, vec_col).mapInPandas(_assign, schema=schema)
 
 
 def lsh_topk(
@@ -187,7 +167,6 @@ def lsh_topk(
     vec_col: str = "embedding",
     queries: DataFrame | None = None,
     late_attach: bool | None = None,
-    repartition_to=_SPREAD_DEFAULT,
 ) -> DataFrame:
     """Approximate top-k: compare only within shared LSH buckets.
 
@@ -217,20 +196,17 @@ def lsh_topk(
       degree — the minimum the verify can do. include_vec=False also
       halves the Python-boundary bytes of the bucket pass.
     - ``None`` (default) auto-selects: late once Catalyst's size estimate
-      of the corpus crosses ``LATE_ATTACH_BYTES`` (1 GiB default,
-      env-overridable) — so the declared query stays the measured-fastest
-      early form at bench scale and flips to the exchange-light layout
-      where the payload bytes start to dominate.
-
-    ``repartition_to`` is the measured-layout spread knob passed through
-    to ``lsh_buckets``.
+      of the corpus crosses ``LATE_ATTACH_BYTES`` (1 GiB) — so the
+      declared query stays the measured-fastest early form at bench scale
+      and flips to the exchange-light layout where the payload bytes start
+      to dominate.
     """
     if late_attach is None:
         est = input_size_bytes(emb)
         late_attach = est is not None and est > LATE_ATTACH_BYTES
     bk = lsh_buckets(
         emb, dim, n_tables, n_bits, id_col, vec_col,
-        include_vec=not late_attach, repartition_to=repartition_to,
+        include_vec=not late_attach,
     )
     if queries is not None:
         bk_q = bk.join(
@@ -758,9 +734,18 @@ def pq_encode(
     compression step: downstream the corpus is m ONE-BYTE codes per vector
     instead of dim floats — the table that makes billion-vector search
     memory-feasible. One broadcast join (m·n_codes rows) + a per-(id,sub)
-    top-1, which Spark's WindowGroupLimit keeps map-side."""
+    top-1, which Spark's WindowGroupLimit keeps map-side.
+
+    The input is hash-repartitioned on the id to ``defaultParallelism``
+    first. That exchange replaces the one the per-(id, sub) window needs
+    anyway (id clustering satisfies it), so it adds no shuffle at any
+    scale, and it keeps the CPU-bound encode (m× explode + m·n_codes L2²
+    scorings per vector) off a single task when the corpus arrives as
+    one scan split."""
+    par = emb.sparkSession.sparkContext.defaultParallelism
     subs = _subspaces(
-        emb.select(id_col, vec_col), dim, m, vec_col, "sv"
+        emb.repartition(par, F.col(id_col)).select(id_col, vec_col),
+        dim, m, vec_col, "sv",
     ).select(id_col, "sub", "sv")
     scored = subs.join(F.broadcast(codebooks), "sub").select(
         id_col,
@@ -785,7 +770,6 @@ def pq_topk(
     n_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """Approximate top-k by asymmetric distance computation (ADC) over PQ
     codes (Jégou, Douze, Schmid: "Product Quantization for Nearest
@@ -802,16 +786,9 @@ def pq_topk(
     vectors don't even need to be co-resident with the serving cluster).
     Output: (query_id, neighbor_id, adist, rank) — adist is the PQ-
     approximate L2², rank ties broken by neighbor id.
-
-    ``repartition_to``: spread the corpus over N partitions before the
-    CPU-bound encode (m× explode + m·n_codes L2² scorings per vector) —
-    needed when the input is a handful of big files, where the scan
-    arrives as one split and the encode runs single-threaded; omit when
-    the source already has enough splits (the 100 TB case).
     """
     cb = pq_codebooks(emb, dim, m, n_codes, id_col, vec_col)
-    enc_in = emb.repartition(repartition_to, F.col(id_col)) if repartition_to else emb
-    codes = pq_encode(enc_in, cb, dim, m, id_col, vec_col)
+    codes = pq_encode(emb, cb, dim, m, id_col, vec_col)
     return _pq_adc_topk(codes, cb, queries, k, dim, m, id_col, vec_col)
 
 

@@ -312,7 +312,6 @@ def winnow_overlap_pairs(
     text_col: str = "text",
     window: int | None = None,
     eager: bool = False,
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """The pairing step of winnowing/MOSS-style local-fingerprint
     plagiarism detection: documents sharing >= ``min_shared`` sampled
@@ -373,13 +372,6 @@ def winnow_overlap_pairs(
         if window is not None
         else _modp_fingerprints(k, sample_mod, text_col)
     )
-    if repartition_to:
-        # Spread the CPU-bound md5 selector pass: a compact single-file
-        # corpus arrives as ONE scan split, so without this the selector
-        # runs single-threaded (the curation._spread trap). Hash on the
-        # id — deterministic, skew-free. Default OFF: a 100 TB corpus
-        # already has thousands of splits.
-        docs = docs.repartition(repartition_to, F.col(id_col))
     fp = share(
         docs.select(F.col(id_col), F.explode(sel).alias("h")).distinct()
     )

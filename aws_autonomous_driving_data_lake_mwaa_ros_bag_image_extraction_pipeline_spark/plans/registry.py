@@ -84,32 +84,35 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # checkpoint automatically when the session has a checkpoint dir.
 from ..operators._caching import share as _share_ckpt  # noqa: E402
 
-# Per-session memo of a table's SCAN SPLIT COUNT (see _spread_par): keyed
+# Per-session memo of a table's SCAN SPLIT COUNT (see _spread_docs): keyed
 # like _TABLE_PLANS so a rewritten/appended table re-measures.
 _SCAN_SPLITS: dict[tuple, int] = {}
 
 
-def _spread_par(spark: SparkSession, sf_dir: str, name: str) -> int | None:
-    """Gate for the operators' ``repartition_to`` spread: return
-    ``defaultParallelism`` only when the table's MEASURED scan layout
-    underfills the cluster (fewer scan splits than cores — the single-file
-    testdata), else ``None``.
+def _spread_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``documents`` scan for the CPU-bound text detectors: hash-
+    repartitioned on ``doc_id`` to ``defaultParallelism`` when the table's
+    MEASURED scan layout underfills the cluster (fewer scan splits than
+    cores — a compact single-file table arrives as ONE split, and every
+    tokenize/hash pass would run single-threaded), else the plain scan (a
+    lake-scale table already has thousands of splits, where the exchange
+    would be a pure full-corpus shuffle).
 
-    The round-21 call sites passed ``defaultParallelism`` unconditionally,
-    which at 100 TB (thousands of native splits) would pay a guaranteed
-    full-corpus exchange purely to fix the sf0.1 single-file layout. The
-    split count comes from the planned scan's own partitioning
-    (``rdd().getNumPartitions()`` on the scan plan — driver-side file-split
-    arithmetic, no job, no data read) and is memoized per file fingerprint
-    like the table plan itself."""
+    This is the engine's one fan-out decision for the text queries:
+    operators never repartition their input for parallelism. The split
+    count comes from the planned scan's own partitioning
+    (``rdd().getNumPartitions()`` — driver-side file-split arithmetic, no
+    job, no data read) and is memoized per file fingerprint like the table
+    plan itself."""
+    docs = _t(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
-    path = f"{sf_dir}/{name}.parquet"
-    key = (spark, sf_dir, name, _footer_fingerprint(path))
+    path = f"{sf_dir}/documents.parquet"
+    key = (spark, sf_dir, "documents", _footer_fingerprint(path))
     n = _SCAN_SPLITS.get(key)
     if n is None:
-        n = _t(spark, sf_dir, name)._jdf.rdd().getNumPartitions()
+        n = docs._jdf.rdd().getNumPartitions()
         _SCAN_SPLITS[key] = n
-    return par if n < par else None
+    return docs.repartition(par, F.col("doc_id")) if n < par else docs
 
 
 def dsum(col, alias):
@@ -1026,10 +1029,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithm; exactness (vs brute-force all-pairs) is pinned separately
     in tests/test_dedup.py."""
     return dedup.ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"),
-        threshold=0.8,
-        n=8,
-        repartition_to=_spread_par(spark, sf_dir, "documents"),
+        _spread_docs(spark, sf_dir), threshold=0.8, n=8
     )
 
 
@@ -1095,16 +1095,8 @@ def _d_minhash_sql() -> str:
 @register("minhash_dedup_pairs", _d_minhash_sql(), headline=True)
 def q_minhash_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs: band-bucket self-join (O(collisions), not
-    O(n²)) → exact shingle-Jaccard verify on the candidate set.
-
-    The testdata ships as one file per table, so the CPU-bound shingle+hash
-    stage is explicitly spread across the cluster; a real 100 TB corpus has
-    thousands of input splits and would omit the repartition."""
-    return dedup.minhash_dedup_pairs(
-        _t(spark, sf_dir, "documents"),
-        threshold=0.8,
-        repartition_to=_spread_par(spark, sf_dir, "documents"),
-    )
+    O(n²)) → exact shingle-Jaccard verify on the candidate set."""
+    return dedup.minhash_dedup_pairs(_spread_docs(spark, sf_dir), threshold=0.8)
 
 
 def _d_cc_prefix() -> str:
@@ -1124,11 +1116,7 @@ def _d_cc_prefix() -> str:
 
 
 def _minhash_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.minhash_dedup_pairs(
-        _t(spark, sf_dir, "documents"),
-        threshold=0.8,
-        repartition_to=_spread_par(spark, sf_dir, "documents"),
-    )
+    return dedup.minhash_dedup_pairs(_spread_docs(spark, sf_dir), threshold=0.8)
 
 
 @register(
@@ -1258,11 +1246,7 @@ def q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured to collapse into ~300-doc buckets at sf0.1, exploding the
     candidate set ~100×. Band width is the knob that keeps the self-join
     O(collisions) as the corpus grows."""
-    return dedup.simhash_near_pairs(
-        _t(spark, sf_dir, "documents"),
-        bits=32,
-        repartition_to=_spread_par(spark, sf_dir, "documents"),
-    )
+    return dedup.simhash_near_pairs(_spread_docs(spark, sf_dir), bits=32)
 
 
 @register(
@@ -1367,10 +1351,7 @@ def q_winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     position-independent lifted-paragraph detection. Inverted-index
     self-join with a df<=50 fingerprint ceiling pruning ubiquitous
     substrings before the join."""
-    return textstats.winnow_overlap_pairs(
-        _t(spark, sf_dir, "documents"),
-        repartition_to=_spread_par(spark, sf_dir, "documents"),
-    )
+    return textstats.winnow_overlap_pairs(_spread_docs(spark, sf_dir))
 
 
 @register(
@@ -1427,10 +1408,7 @@ def q_winnow_guaranteed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     same df-ceiling-pruned inverted-index self-join. Headline: the
     flagship detector of the winnow family, tracked so regressions in
     the array-local selection path hit the ±25% outlier pass."""
-    return textstats.winnow_overlap_pairs(
-        _t(spark, sf_dir, "documents"), window=8,
-        repartition_to=_spread_par(spark, sf_dir, "documents"),
-    )
+    return textstats.winnow_overlap_pairs(_spread_docs(spark, sf_dir), window=8)
 
 
 @register(
@@ -1871,7 +1849,6 @@ def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.lsh_topk(
         emb, dim=64, k=5, n_tables=4, n_bits=8,
-        repartition_to=_spread_par(spark, sf_dir, "embeddings"),
     )
 
 
@@ -2169,7 +2146,6 @@ def q_embedding_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(sum of bucket sizes squared), not O(n^2)."""
     pairs = dedup.embedding_dup_pairs(
         _t(spark, sf_dir, "embeddings"), dim=64, threshold=0.4,
-        repartition_to=_spread_par(spark, sf_dir, "embeddings"),
     )
     return pairs.withColumn("cosine", F.round("cosine", 6))
 
@@ -2742,10 +2718,7 @@ def q_passage_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document passage contamination (curation.passage_dup_stats):
     share of each doc's 3-token chunks that appear in another doc. All
     shuffle keys are md5 hashes — uniform, skew-free at 100 TB."""
-    return curation.passage_dup_stats(
-        _t(spark, sf_dir, "documents"), n=3,
-        repartition_to=_spread_par(spark, sf_dir, "documents"),
-    )
+    return curation.passage_dup_stats(_spread_docs(spark, sf_dir), n=3)
 
 
 @register(
@@ -2780,10 +2753,7 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-semi join, islands merge (pos − row_number) per doc. The
     alignment-free exact complement of passage_dup_stats's
     non-overlapping chunks."""
-    return curation.duplicated_spans(
-        _t(spark, sf_dir, "documents"), k=8,
-        repartition_to=_spread_par(spark, sf_dir, "documents"),
-    )
+    return curation.duplicated_spans(_spread_docs(spark, sf_dir), k=8)
 
 
 @register(
@@ -2847,10 +2817,7 @@ def q_dup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     array-local array_except/element_at rebuild, O(n) per row. The
     canonical pick is a min(struct) aggregate on the span hash (map-side
     combine, no hot-key window) joined back AQE-skew-splittably."""
-    return curation.scrub_duplicated_spans(
-        _t(spark, sf_dir, "documents"), k=8,
-        repartition_to=_spread_par(spark, sf_dir, "documents"),
-    )
+    return curation.scrub_duplicated_spans(_spread_docs(spark, sf_dir), k=8)
 
 
 @register(
@@ -2940,8 +2907,7 @@ def q_passage_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     value hash covers the full reconstructed strings, so chunking, the
     df threshold, ordered reassembly, and tail handling are all pinned."""
     return curation.scrub_duplicate_passages(
-        _t(spark, sf_dir, "documents"), n=3, max_df=1,
-        repartition_to=_spread_par(spark, sf_dir, "documents"),
+        _spread_docs(spark, sf_dir), n=3, max_df=1
     )
 
 
@@ -3001,10 +2967,7 @@ def q_passage_trim_within_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     later repeats, rebuild the text — the removal counterpart of the
     Gopher repetition signals. Shuffles only on doc-confined keys, so it
     scales with zero corpus-wide state."""
-    return curation.trim_repeated_passages(
-        _t(spark, sf_dir, "documents"), n=3,
-        repartition_to=_spread_par(spark, sf_dir, "documents"),
-    )
+    return curation.trim_repeated_passages(_spread_docs(spark, sf_dir), n=3)
 
 
 @register(
@@ -3502,12 +3465,10 @@ def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose documents the survivor policy keeps. Two doc_id equi-joins onto
     the tiny (doc_id, source) projection and a |sources|²-bounded agg on
     top of the banded-LSH pair plan."""
-    docs = _t(spark, sf_dir, "documents")
     pairs = dedup.minhash_dedup_pairs(
-        docs, threshold=0.8,
-        repartition_to=_spread_par(spark, sf_dir, "documents"),
+        _spread_docs(spark, sf_dir), threshold=0.8
     ).select("id_a", "id_b")
-    dim = docs.select("doc_id", "source")
+    dim = _t(spark, sf_dir, "documents").select("doc_id", "source")
     lab = (
         pairs.join(
             dim.select(
@@ -3995,8 +3956,8 @@ def q_skipgram_vs_ngram_under_edits(spark: SparkSession, sf_dir: str) -> DataFra
         "doc_id", ptext.alias("text")
     )
     ref = docs.filter(F.col("source") == "src0").select("doc_id", "text")
-    train_ng = _shingle_long(train, "doc_id", "text", 3, None).distinct()
-    ref_ng = _shingle_long(ref, "doc_id", "text", 3, None).select(
+    train_ng = _shingle_long(train, "doc_id", "text", 3).distinct()
+    ref_ng = _shingle_long(ref, "doc_id", "text", 3).select(
         "sh"
     ).distinct()
     train_sg = curation.skipgram_hashes(train, 1).distinct()
@@ -4959,10 +4920,9 @@ def q_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     flavor MinHash/SimHash can't see (typo'd titles, OCR noise)."""
     from ..operators.fuzzy import edit_distance_pairs
 
-    docs = _t(spark, sf_dir, "documents")
     return edit_distance_pairs(
-        docs, id_col="doc_id", text=T.normalized(F.col("text")).substr(1, 64), k=2,
-        repartition_to=_spread_par(spark, sf_dir, "documents"),
+        _spread_docs(spark, sf_dir), id_col="doc_id",
+        text=T.normalized(F.col("text")).substr(1, 64), k=2,
     )
 
 
@@ -5357,7 +5317,6 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.pq_topk(
         emb, emb.filter(F.col("vec_id") < 10), k=5, dim=64, m=8, n_codes=16,
-        repartition_to=_spread_par(spark, sf_dir, "embeddings"),
     )
 
 
@@ -7105,13 +7064,8 @@ def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     |docs|-row source map is two key joins, and the matrix is
     |sources|²-bounded). The contamination audit run before mixing a new
     source into a training blend."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_dedup_pairs(
-        docs,
-        threshold=0.8,
-        repartition_to=_spread_par(spark, sf_dir, "documents"),
-    )
-    src = docs.select("doc_id", "source")
+    pairs = dedup.minhash_dedup_pairs(_spread_docs(spark, sf_dir), threshold=0.8)
+    src = _t(spark, sf_dir, "documents").select("doc_id", "source")
     return (
         pairs.select("id_a", "id_b")
         .join(src.withColumnRenamed("source", "source_a"),
@@ -8653,12 +8607,9 @@ def q_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     S-curve claim. The MinHash verify step already computes exact Jaccard
     on its candidates, so detected ⊆ exact and the ratio IS banding
     recall (1.0 here; the S-curve gives ~0.985 at exactly 0.8)."""
-    docs = _t(spark, sf_dir, "documents")
-    par = _spread_par(spark, sf_dir, "documents")
-    exact = dedup.exact_shingle_jaccard_pairs(
-        docs, threshold=0.8, repartition_to=par
-    )
-    mh = dedup.minhash_dedup_pairs(docs, threshold=0.8, repartition_to=par)
+    docs = _spread_docs(spark, sf_dir)
+    exact = dedup.exact_shingle_jaccard_pairs(docs, threshold=0.8)
+    mh = dedup.minhash_dedup_pairs(docs, threshold=0.8)
     n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     n_mh = mh.agg(F.count(F.lit(1)).alias("n_detected"))
     return (

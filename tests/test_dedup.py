@@ -364,7 +364,7 @@ def test_hash_near_pairs_salted_parity_and_plan(spark, docs):
     assert "__salt" in plan
 
 
-def test_hash_near_pairs_auto_band_join_thresholds(spark, docs):
+def test_hash_near_pairs_auto_band_join_thresholds(spark, docs, monkeypatch):
     """``band_join="auto"`` switches on the leaf-relation size estimate vs
     the session's autoBroadcastJoinThreshold — the same line past which
     the planner itself would stop broadcasting. Parquet input: a known
@@ -385,6 +385,9 @@ def test_hash_near_pairs_auto_band_join_thresholds(spark, docs):
         # unknown-size input (python LocalRelation → LogicalRDD leaf):
         # salted even under the huge threshold
         assert "__salt" in _fmt_plan(dedup.simhash_near_pairs(docs))
+        # no estimate at all (the JVM size call failed): salted too
+        monkeypatch.setattr(dedup, "input_size_bytes", lambda df: None)
+        assert "__salt" in _fmt_plan(dedup.simhash_near_pairs(pq_docs))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

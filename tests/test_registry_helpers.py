@@ -10,6 +10,8 @@ scaling through the decimal cast itself.
 
 from __future__ import annotations
 
+import re
+
 from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.plans import (
     registry,
 )
@@ -152,18 +154,25 @@ def test_fsum_overflow_aborts_loudly_and_gsum_survives(spark):
     assert row.s == row.exact == 2.0e13
 
 
-def test_spread_par_gates_on_measured_scan_layout(tmp_path, spark):
-    """_spread_par fires (returns defaultParallelism) only when the
-    table's measured scan layout underfills the cluster: a single-file
-    table spreads, a many-file table does not — so the declared queries
-    stop paying a guaranteed full-corpus exchange on inputs that already
-    carry enough splits (the 100 TB case)."""
+def test_spread_docs_gates_on_measured_scan_layout(tmp_path, spark):
+    """The registry's documents read is hash-spread on doc_id to
+    defaultParallelism only when the table's measured scan layout
+    underfills the cluster: a single-file table spreads, a many-file table
+    is the plain scan — so the declared queries stop paying a guaranteed
+    full-corpus exchange on inputs that already carry enough splits (the
+    100 TB case)."""
     par = spark.sparkContext.defaultParallelism
-    sf_dir = str(tmp_path)
-    one = spark.range(100).selectExpr("id", "id * 2 AS v")
-    one.coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    assert registry._spread_par(spark, sf_dir, "documents") == par
+    docs = spark.range(10_000).selectExpr("id AS doc_id", "'x' AS text")
+    one, many = str(tmp_path / "one"), str(tmp_path / "many")
+    docs.coalesce(1).write.parquet(f"{one}/documents.parquet")
+    docs.repartition(par + 4).write.parquet(f"{many}/documents.parquet")
 
-    many = spark.range(10_000).selectExpr("id", "id * 2 AS v")
-    many.repartition(par + 4).write.parquet(f"{sf_dir}/embeddings.parquet")
-    assert registry._spread_par(spark, sf_dir, "embeddings") is None
+    def plan(sf_dir):
+        df = registry._spread_docs(spark, sf_dir)
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert re.search(
+        rf"hashpartitioning\(doc_id#\d+L?, {par}\), REPARTITION_BY_NUM",
+        plan(one),
+    )
+    assert "REPARTITION_BY_NUM" not in plan(many)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -338,6 +339,52 @@ def test_pq_encode_codebook_vectors_are_fixed_points(spark):
     assert codes.count() == n * 8
     per = codes.groupBy("vec_id").count().agg(F.min("count"), F.max("count")).first()
     assert per[0] == 8 and per[1] == 8
+
+
+def _formatted_plan(df):
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def _emb64(spark, n=200):
+    return spark.range(n).selectExpr(
+        "id AS vec_id",
+        "transform(sequence(1, 64), i -> CAST(sin(id * i) AS FLOAT)) AS embedding",
+    )
+
+
+def test_pq_topk_encode_window_rides_the_id_spread(spark):
+    """pq_encode's numbered repartition on the id is the exchange its
+    per-(id, sub) top-1 window needs anyway: id clustering satisfies the
+    window, so the plan carries no ENSURE_REQUIREMENTS exchange on
+    (vec_id, sub)."""
+    emb = _emb64(spark)
+    plan = _formatted_plan(
+        similarity.pq_topk(
+            emb, emb.filter(F.col("vec_id") < 3), k=3, dim=64, m=8, n_codes=8
+        )
+    )
+    assert re.search(r"hashpartitioning\(vec_id#\d+L?, \d+\), REPARTITION_BY_NUM", plan)
+    assert not re.search(
+        r"hashpartitioning\(vec_id#\d+L?, sub#\d+, \d+\), ENSURE_REQUIREMENTS", plan
+    )
+
+
+def test_embedding_dup_pairs_candidate_exchange_is_numbered(spark):
+    """The candidate dedup's exchange is a numbered repartition on
+    (id_a, id_b) — exempt from AQE's byte-sized coalescing, so the
+    row-CPU-bound cosine verify keeps its parallelism."""
+    from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.operators import (
+        dedup,
+    )
+
+    plan = _formatted_plan(
+        dedup.embedding_dup_pairs(_emb64(spark), dim=64, threshold=0.4)
+    )
+    assert re.search(
+        r"hashpartitioning\(id_a#\d+L?, id_b#\d+L?, \d+\), REPARTITION_BY_NUM", plan
+    )
 
 
 def test_pq_topk_self_distance_zero_for_sampled_vectors(spark):

@@ -210,6 +210,9 @@ def main() -> None:
 
     def probes(k: int) -> dict:
         docs = replicate_docs(docs0, k)
+        # the minhash probes spread the corpus like the registry's
+        # documents read does (plans.registry._spread_docs)
+        spread = docs.repartition(par, "doc_id")
         emb = replicate_embeddings(emb0, k)
         fixes = replicate_fixes(fixes0, k)
         pts = replicate_points(pts0, k)
@@ -241,7 +244,7 @@ def main() -> None:
             # intermediate instead of re-running the pipeline (measured:
             # minhash k=10 12.35 s lazy vs the re-run's honest number)
             "minhash_dedup_pairs": lambda: dedup.minhash_dedup_pairs(
-                docs, threshold=0.8, repartition_to=par, eager=True
+                spread, threshold=0.8, eager=True
             ),
             "simhash_near_pairs": lambda: dedup.simhash_near_pairs(
                 docs, eager=True
@@ -260,7 +263,7 @@ def main() -> None:
             ),
             "near_dup_clusters": lambda: graph.connected_components(
                 dedup.minhash_dedup_pairs(
-                    docs, threshold=0.8, repartition_to=par, eager=True
+                    spread, threshold=0.8, eager=True
                 ),
                 src="id_a",
                 dst="id_b",
