@@ -24,8 +24,12 @@ are the same steps over an existing PNG ``content`` column. The default
 model is real and content-derived: a pure-numpy color-blob detector
 (``detect_blobs``) that segments the pixels by dominant-channel class and
 emits one Instance per connected component — labels change when pixels
-change. It is deliberately simple (no learned weights ship in this
-container); swap in a real network via ``model_fn``.
+change. Its kernel is whole-array numpy, one pass per frame: the class
+image by channel comparisons, then the 4-connected components of all four
+classes at once (``_components``: row runs, overlap edges, root-hooking
+union-find), so no Python loop runs per row or per pixel. It is
+deliberately simple (no learned weights ship with the package); swap in a
+real network via ``model_fn``.
 """
 
 from __future__ import annotations
@@ -175,56 +179,89 @@ def infer_labels_by_camera(frames: DataFrame, model_fn=None) -> DataFrame:
 _CLASS_NAMES = ((0, "Traffic Light"), (1, "Road"), (2, "Car"), (3, "Person"))
 
 
-def _components(mask: np.ndarray) -> list[tuple[int, int, int, int, int]]:
-    """4-connected components of a boolean mask via run-based union-find.
-    Returns (y0, x0, y1, x1, area) with exclusive upper bounds. Cost is
-    O(runs), not O(pixels): each row's runs come from one vectorized
-    ``np.diff``, and only run records flow through the Python loop."""
-    h, w = mask.shape
-    parent: list[int] = []
+def _components(classes: np.ndarray) -> np.ndarray:
+    """4-connected components of a class image (small non-negative class
+    ids), every class in one pass.
 
-    def find(i: int) -> int:
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]  # path halving
-            i = parent[i]
-        return i
+    Returns one int64 row per component, ``(class, y0, x0, y1, x1,
+    area)`` with exclusive upper bounds, in raster order of each
+    component's first pixel. Everything is whole-array numpy; no Python
+    loop runs per row, run or pixel:
 
-    runs: list[tuple[int, int, int, int]] = []  # (y, x0, x1, label)
-    prev: list[tuple[int, int, int]] = []
-    for y in range(h):
-        row = mask[y]
-        if not row.any():
-            prev = []
-            continue
-        d = np.diff(row.astype(np.int8))
-        starts = (np.where(d == 1)[0] + 1).tolist()
-        ends = (np.where(d == -1)[0] + 1).tolist()
-        if row[0]:
-            starts.insert(0, 0)
-        if row[-1]:
-            ends.append(w)
-        cur: list[tuple[int, int, int]] = []
-        for x0, x1 in zip(starts, ends):
-            lbl = len(parent)
-            parent.append(lbl)
-            for px0, px1, plbl in prev:
-                if px0 < x1 and x0 < px1:  # vertical overlap
-                    ra, rb = find(plbl), find(lbl)
-                    if ra != rb:
-                        parent[rb] = ra
-            cur.append((x0, x1, lbl))
-            runs.append((y, x0, x1, lbl))
-        prev = cur
-    agg: dict[int, list[int]] = {}
-    for y, x0, x1, lbl in runs:
-        r = find(lbl)
-        a = agg.setdefault(r, [y, x0, y, x1, 0])
-        a[0] = min(a[0], y)
-        a[1] = min(a[1], x0)
-        a[2] = max(a[2], y)
-        a[3] = max(a[3], x1)
-        a[4] += x1 - x0
-    return [(y0, x0, y1 + 1, x1, area) for y0, x0, y1, x1, area in agg.values()]
+    - runs: one ``diff`` over the image with a sentinel column appended
+      to each row gives every maximal same-class run of every row;
+    - edges: a run's row tiles into runs, so the runs of the row above
+      that it touches are one contiguous index range, found with
+      ``searchsorted`` on the flat ``(row, x)`` start keys; only the
+      same-class ones become edges;
+    - union-find by root hooking: every edge between two different roots
+      hooks the larger root under the smaller (``np.minimum.at``), then
+      pointer jumping flattens every tree to its root; repeat until no
+      edge joins two roots. Hooking roots, not nodes, merges whole trees
+      each round; hooking nodes needs a round per step of the longest
+      path, which on a vertical serpentine is most of the image. A
+      component's root is its smallest run index, i.e. its first run in
+      raster order;
+    - boxes and areas: ``ufunc.at`` / ``bincount`` over the run table.
+    """
+    h, w = classes.shape
+    if not classes.size:
+        return np.empty((0, 6), dtype=np.int64)
+    stride = w + 1
+    padded = np.empty((h, stride), dtype=np.int8)
+    padded[:, :w] = classes
+    padded[:, w] = -1  # sentinel: no run crosses a row end
+    flat = padded.ravel()
+    change = np.flatnonzero(flat[1:] != flat[:-1]) + 1
+    bounds = np.concatenate(([0], change, [flat.size]))
+    starts, ends = bounds[:-1], bounds[1:]
+    real = flat[starts] >= 0
+    starts, ends = starts[real], ends[real]
+    n = starts.size
+    cls = flat[starts].astype(np.int64)
+    rows = starts // stride
+    x0 = starts - rows * stride
+    x1 = ends - rows * stride
+
+    # runs of the row above that overlap [x0, x1): the ones holding x0
+    # and x1 - 1, and every run between them
+    cur = np.flatnonzero(rows > 0)
+    up = starts[cur] - stride  # x0 in the row above
+    first = np.searchsorted(starts, up, side="right") - 1
+    last = np.searchsorted(starts, up + (x1[cur] - x0[cur] - 1), side="right") - 1
+    counts = last - first + 1
+    # one (a, b) pair per overlap: b steps from first to last of each run
+    a = np.repeat(cur, counts)
+    b = np.repeat(first - np.cumsum(counts) + counts, counts) + np.arange(counts.sum())
+    same = cls[a] == cls[b]
+    a, b = a[same], b[same]
+
+    parent = np.arange(n)
+    while a.size:
+        ra, rb = parent[a], parent[b]
+        apart = ra != rb
+        if not apart.any():
+            break
+        a, b, ra, rb = a[apart], b[apart], ra[apart], rb[apart]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            grand = parent[parent]
+            if (grand == parent).all():
+                break
+            parent = grand
+
+    roots, comp = np.unique(parent, return_inverse=True)
+    k = roots.size
+    y0 = np.full(k, h, dtype=np.int64)
+    bx0 = np.full(k, w, dtype=np.int64)
+    y1 = np.zeros(k, dtype=np.int64)
+    bx1 = np.zeros(k, dtype=np.int64)
+    np.minimum.at(y0, comp, rows)
+    np.minimum.at(bx0, comp, x0)
+    np.maximum.at(y1, comp, rows + 1)
+    np.maximum.at(bx1, comp, x1)
+    area = np.bincount(comp, weights=x1 - x0, minlength=k).astype(np.int64)
+    return np.stack([cls[roots], y0, bx0, y1, bx1, area], axis=1)
 
 
 def detect_blobs(
@@ -234,59 +271,68 @@ def detect_blobs(
 ) -> list[list[dict]]:
     """Default P13 model: genuine content-derived detection, pure numpy.
 
-    Per image array: per-pixel color class (dominant channel where
-    saturation ≥ ``sat_threshold``, else the low-saturation class) →
-    4-connected components per class → one Instance per component covering
-    ≥ ``min_area_frac`` of the frame, bounding box in relative coords
-    (the same coordinate contract as the Rekognition response the
-    reference draws from, processing.py:366-375). Confidence is the
-    component's area fraction mapped into [50, 100]. Deterministic, so
-    the downstream aggregation pipeline is exactly testable — and unlike
-    a digest-keyed fake, editing pixels moves the boxes."""
+    Per image array: per-pixel color class (dominant channel, first
+    maximum winning, where saturation ``max - min`` is at least
+    ``sat_threshold``, else the low-saturation class) → 4-connected
+    components of every class in one ``_components`` pass → one Instance
+    per component covering ≥ ``min_area_frac`` of the frame, bounding box
+    in relative coords (the same coordinate contract as the Rekognition
+    response the reference draws from, processing.py:366-375). Confidence
+    is the component's area fraction mapped into [50, 100]. Deterministic,
+    so the downstream aggregation pipeline is exactly testable — and
+    unlike a digest-keyed fake, editing pixels moves the boxes."""
     out = []
     for arr in arrays:
+        # contiguous channel planes: elementwise ops on strided channel
+        # views run several times slower
         if arr.ndim == 2:
-            arr = np.stack([arr] * 3, axis=2)
-        elif arr.shape[2] == 2:  # grey+alpha
-            arr = np.stack([arr[:, :, 0]] * 3, axis=2)
-        rgb = arr[:, :, :3].astype(np.int16)
-        h, w = rgb.shape[:2]
-        sat = rgb.max(axis=2) - rgb.min(axis=2)
-        classes = np.where(sat >= sat_threshold, rgb.argmax(axis=2), 3)
-        min_area = min_area_frac * h * w
-        labels = []
-        for cls, name in _CLASS_NAMES:
-            comps = [
-                c for c in _components(classes == cls) if c[4] >= min_area
-            ]
-            if not comps:
-                continue
-            instances = []
-            for y0, x0, y1, x1, area in sorted(
-                comps, key=lambda c: (-c[4], c[0], c[1])
-            ):
-                instances.append(
-                    {
-                        "BoundingBox": {
-                            "Width": round((x1 - x0) / w, 6),
-                            "Height": round((y1 - y0) / h, 6),
-                            "Left": round(x0 / w, 6),
-                            "Top": round(y0 / h, 6),
-                        },
-                        "Confidence": round(50.0 + 50.0 * area / (h * w), 4),
-                    }
-                )
-            labels.append(
+            r = g = b = arr
+        elif arr.shape[2] < 3:  # grey (+ alpha)
+            r = g = b = np.ascontiguousarray(arr[:, :, 0])
+        else:
+            r, g, b = np.moveaxis(arr[:, :, :3], 2, 0).copy()
+        h, w = r.shape
+        mx = np.maximum(np.maximum(r, g), b)
+        mn = np.minimum(np.minimum(r, g), b)
+        # 0 where r is the max, else 1 where g is, else 2, OR-ed with 3
+        # where saturation is low. Arithmetic, not masked assignment:
+        # that costs more than all the rest of the kernel
+        classes = (r != mx).view(np.int8) * (
+            np.int8(2) - (g == mx).view(np.int8)
+        )
+        classes |= (mx - mn < sat_threshold).view(np.int8) * np.int8(3)
+        comps = _components(classes)
+        comps = comps[comps[:, 5] >= min_area_frac * h * w]
+        # by class, then largest first, then top-left; ties keep raster
+        # order (lexsort's last key is the primary one)
+        order = np.lexsort(
+            (np.arange(len(comps)), comps[:, 2], comps[:, 1], -comps[:, 5], comps[:, 0])
+        )
+        by_class: dict[int, list] = {}
+        for c, y0, x0, y1, x1, area in comps[order].tolist():
+            by_class.setdefault(c, []).append(
+                {
+                    "BoundingBox": {
+                        "Width": round((x1 - x0) / w, 6),
+                        "Height": round((y1 - y0) / h, 6),
+                        "Left": round(x0 / w, 6),
+                        "Top": round(y0 / h, 6),
+                    },
+                    "Confidence": round(50.0 + 50.0 * area / (h * w), 4),
+                }
+            )
+        out.append(
+            [
                 {
                     "Name": name,
                     "Confidence": max(i["Confidence"] for i in instances),
                     "Instances": instances,
-                    "Parents": (
-                        [{"Name": "Vehicle"}] if name == "Car" else []
-                    ),
+                    "Parents": [{"Name": "Vehicle"}] if name == "Car" else [],
                 }
-            )
-        out.append(labels)
+                for cls, name in _CLASS_NAMES
+                if (instances := by_class.get(cls))
+            ]
+        )
     return out
 
 

@@ -7,7 +7,7 @@ draw → tag complete (rosbag_processing.py:131-136, processing.py:30-50,
     discover (manifest anti-join / stream checkpoint)
       → decode bags: messages + frames → infer (P13) → draw (P12), in
         one Python task per bag
-      → topic landing (K1) · labels → frame_stats pivot (A1+A2, K4)
+      → topic landing (K1) · labels → frame_stats aggregate (A1+A2, K4)
         · labels JSON · annotated binary sink (K7)
       → manifest transitions in progress → complete | failure (O1/O2, K8),
         committed driver-side
@@ -71,7 +71,8 @@ def process_bags(
     or parse becomes one error row, the whole batch is ONE set of Spark
     jobs regardless of bag count, and the failed paths ride back on the
     landing write's ``observe()`` metrics (no extra pass, no driver-side
-    per-bag loop). An exception from ``cfg.model_fn`` fails the tick.
+    per-bag loop), as does the label vocabulary the frame_stats columns
+    are built from. An exception from ``cfg.model_fn`` fails the tick.
     Returns the failed bag paths (O2: the caller records them as
     ``failure`` in the manifest).
 
@@ -107,6 +108,11 @@ def process_bags(
             # topic-count cardinalities
             F.approx_count_distinct("topic").alias("n_topics"),
             F.collect_set(F.when(bad, F.col("bag_path"))).alias("failed_paths"),
+            # the frame_stats vocabulary, so its aggregate needs no
+            # value pass of its own
+            F.collect_set(frame_stats.label_names(F.col("labels"))).alias(
+                "label_names"
+            ),
         )
         .filter(is_msg)
         .select(MESSAGE_COLUMNS)
@@ -121,10 +127,12 @@ def process_bags(
         ).mode("overwrite").option("compression", "snappy").parquet(
             f"{cfg.output_dir}/topic_messages"
         )
-        cfg.extra["last_metrics"] = obs.get
-        failed = list(obs.get["failed_paths"])
+        metrics = cfg.extra["last_metrics"] = obs.get
+        failed = list(metrics["failed_paths"])
 
-        stats = frame_stats.pivot_stats(labels)
+        stats = frame_stats.pivot_stats(
+            labels, vocabulary=frame_stats.vocabulary_of(metrics["label_names"])
+        )
         stats.write.partitionBy("bag_id").mode("overwrite").parquet(
             f"{cfg.output_dir}/frame_stats"
         )

@@ -203,3 +203,89 @@ def test_draw_boxes_rgba_and_null_content(spark):
     got = {r.frame_index: r.annotated for r in annotate.annotate_frames(frames).collect()}
     assert got[1] is not None
     assert got[2] is None
+
+
+def _flood_components(classes):
+    """Reference 4-connected labelling: BFS flood fill from each unseen
+    pixel in raster order → (class, y0, x0, y1, x1, area) per component,
+    exclusive upper bounds, in raster order of each first pixel."""
+    from collections import deque
+
+    h, w = classes.shape
+    seen = [[False] * w for _ in range(h)]
+    out = []
+    for sy in range(h):
+        for sx in range(w):
+            if seen[sy][sx]:
+                continue
+            c = classes[sy, sx]
+            seen[sy][sx] = True
+            queue = deque([(sy, sx)])
+            y0, x0, y1, x1, area = sy, sx, sy, sx, 0
+            while queue:
+                y, x = queue.popleft()
+                y0, x0, y1, x1 = min(y0, y), min(x0, x), max(y1, y), max(x1, x)
+                area += 1
+                for ny, nx in ((y - 1, x), (y + 1, x), (y, x - 1), (y, x + 1)):
+                    if 0 <= ny < h and 0 <= nx < w and not seen[ny][nx] and classes[ny, nx] == c:
+                        seen[ny][nx] = True
+                        queue.append((ny, nx))
+            out.append((int(c), y0, x0, y1 + 1, x1 + 1, area))
+    return out
+
+
+def _serpentine(h, w):
+    """One snake: every even column, joined alternately at the bottom
+    and top rows — a component whose path is most of the image."""
+    import numpy as np
+
+    m = np.zeros((h, w), dtype=np.int8)
+    m[:, ::2] = 1
+    for i, x in enumerate(range(1, w, 2)):
+        m[0 if i % 2 else h - 1, x] = 1
+    return m
+
+
+def test_components_match_flood_fill():
+    """The vectorised components equal a BFS flood fill, in order, on
+    seeded random class images of every aspect (empty, 1×N and N×1
+    included) and on the adversarial shapes: diagonal-only contact,
+    U-shapes, a vertical serpentine and a checkerboard."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    images = []
+    sizes = [(0, 5), (5, 0), (1, 1), (1, 17), (17, 1), (2, 2), (9, 13), (31, 7), (24, 32)]
+    for h, w in sizes:
+        for k in (1, 2, 4):
+            images.append(rng.integers(0, k, (h, w)).astype(np.int8))
+        blocky = rng.integers(0, 4, ((h + 2) // 3, (w + 2) // 3))
+        images.append(np.repeat(np.repeat(blocky, 3, 0), 3, 1)[:h, :w].astype(np.int8))
+    diagonal = np.eye(6, dtype=np.int8)
+    images += [diagonal, diagonal[::-1].copy()]
+    u = np.zeros((7, 9), dtype=np.int8)
+    u[1:6, 1] = u[1:6, 7] = u[5, 1:8] = 1  # U: arms meet only at the bottom
+    images += [u, u[::-1].copy(), u.T.copy()]
+    images += [_serpentine(20, 15), _serpentine(15, 20).T.copy()]
+    images.append((np.indices((12, 10)).sum(axis=0) % 2).astype(np.int8))
+    for img in images:
+        got = [tuple(c) for c in annotate._components(img).tolist()]
+        assert got == _flood_components(img), img.shape
+
+
+def test_detect_blobs_batch_equals_per_image():
+    """``detect_blobs`` over a mixed list (grey, grey+alpha, RGB, RGBA,
+    two sizes) gives each image what a call on it alone gives."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    arrays = []
+    for h, w in ((24, 32), (15, 9)):
+        for shape in ((h, w), (h, w, 2), (h, w, 3), (h, w, 4)):
+            palette = rng.integers(0, 256, (4,) + shape[2:])
+            blocks = rng.integers(0, 4, ((h + 3) // 4, (w + 3) // 4))
+            img = palette[np.repeat(np.repeat(blocks, 4, 0), 4, 1)[:h, :w]]
+            arrays.append(img.astype(np.uint8))
+    batch = annotate.detect_blobs(arrays)
+    assert batch == [annotate.detect_blobs([a])[0] for a in arrays]
+    assert any(labels for labels in batch)

@@ -129,3 +129,56 @@ def test_frames_without_labels_get_zero_rows_and_null_names_drop(spark):
     }
     assert maps[1] == {"Person": 90.0}  # NULL name dropped, no crash
     assert maps[2] == {}  # empty map, frame row kept
+
+
+def test_pivot_stats_has_no_null_column(spark):
+    """Frames with NULL or empty labels, and labels with a NULL Name, add
+    no column named ``null`` (regression: the outer-explode placeholder
+    rows fed the pivot's value pass); label-less frames keep zero-count
+    rows, names are sanitized, duplicate names take the max Confidence
+    and a NULL Confidence is ignored. Repeated frame keys fold into one
+    row, and an explicit vocabulary gives the same table."""
+    box = ((0.1, 0.1, 0.2, 0.2),)
+    rows = [
+        ("b", "left", 1, [
+            ("Person", 90.0, [box]),
+            (None, 50.0, []),
+            ("Traffic Light", 70.0, None),
+            ("Traffic Light", 80.0, [box]),
+            ("Person", None, [box, box]),
+        ]),
+        ("b", "left", 2, None),
+        ("b", "left", 3, []),
+        ("b", "right", 1, [("Bicycle", 60.0, [box])]),
+        ("b", "right", 1, [("Bicycle", 65.0, [box, box]), ("Person", 55.0, None)]),
+    ]
+    schema = (
+        "bag_id string, camera string, frame_index int, labels array<struct<"
+        "Name string, Confidence double, Instances array<struct<"
+        "BoundingBox struct<Left double, Top double, Width double, Height double>>>>>"
+    )
+    labels = spark.createDataFrame(rows, schema)
+    stats = frame_stats.pivot_stats(labels)
+    assert [(f.name, f.dataType.simpleString()) for f in stats.schema.fields] == [
+        ("bag_id", "string"),
+        ("camera", "string"),
+        ("frame_index", "int"),
+        ("Bicycle", "double"),
+        ("Person", "double"),
+        ("Traffic_Light", "double"),
+        ("Ped_Count", "bigint"),
+        ("Bike_Count", "bigint"),
+        ("Motorbike_Count", "bigint"),
+    ]
+    got = {(r.camera, r.frame_index): tuple(r)[3:] for r in stats.collect()}
+    assert got == {
+        ("left", 1): (None, 90.0, 80.0, 3, 0, 0),
+        ("left", 2): (None, None, None, 0, 0, 0),
+        ("left", 3): (None, None, None, 0, 0, 0),
+        ("right", 1): (65.0, 55.0, None, 0, 3, 0),
+    }
+    explicit = frame_stats.pivot_stats(
+        labels, vocabulary=["Bicycle", "Person", "Traffic_Light"]
+    )
+    assert explicit.schema == stats.schema
+    assert sorted(explicit.collect()) == sorted(stats.collect())

@@ -207,8 +207,10 @@ def test_bags_over_binaryfile_max_length_complete(spark, tmp_path):
 
 # Spark jobs in a warm E1 tick over fixture bags (local[4], 4 shuffle
 # partitions). 21 while labels and annotations were separate Python stages
-# joined back to the frames and the ledger commits were Spark writes.
-JOBS_PER_TICK = 18
+# joined back to the frames and the ledger commits were Spark writes; 18
+# while frame_stats collected its own pivot vocabulary and joined a pivot
+# to the instance counts.
+JOBS_PER_TICK = 11
 
 
 def _fixture_cfg(tmp_path, name: str, **kw) -> runner.PipelineConfig:
@@ -350,3 +352,40 @@ def test_warm_tick_job_count_pinned(spark, tmp_path):
     finally:
         sc.setJobGroup(None, None)
     assert len(sc.statusTracker().getJobIdsForGroup("warm-tick")) <= JOBS_PER_TICK
+
+
+def test_e1_frame_stats_match_labels_sink(spark, tmp_path):
+    """E1's frame_stats table equals a pure-Python recompute from the
+    labels sink (``_python_stats``' rule), when the model returns no
+    labels for some frames: one column per sanitized label name, sorted,
+    no ``null`` column, and label-less frames keep zero-count rows."""
+    from test_frame_stats import _python_stats
+
+    from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.operators import (
+        annotate,
+    )
+
+    def sparse(arrays):
+        labels = annotate.detect_blobs(arrays)
+        return [[] if i % 3 == 0 else lab for i, lab in enumerate(labels)]
+
+    fixtures.write_bag_dir(str(tmp_path / "bags"), n_bags=2, tar_gz=(1,))
+    cfg = _fixture_cfg(tmp_path, "sparse", model_fn=sparse)
+    assert set(runner.run_once(spark, cfg).values()) == {"complete"}
+    got = _frame_outputs(spark, cfg.output_dir)
+
+    want = {k: _python_stats(r["labels"]) for k, r in got["labels"].items()}
+    vocab = sorted({name for conf, _ in want.values() for name in conf})
+    assert "Traffic_Light" in vocab
+    stats = spark.read.parquet(f"{cfg.output_dir}/frame_stats")
+    assert stats.columns == [
+        "camera", "frame_index", *vocab,
+        "Ped_Count", "Bike_Count", "Motorbike_Count", "bag_id",
+    ]
+    assert set(got["frame_stats"]) == set(want)
+    assert any(not conf for conf, _ in want.values())
+    for key, (conf, counts) in want.items():
+        row = dict(got["frame_stats"][key])
+        for col in ("bag_id", "camera", "frame_index"):
+            del row[col]
+        assert row == {**dict.fromkeys(vocab), **conf, **counts}, key
