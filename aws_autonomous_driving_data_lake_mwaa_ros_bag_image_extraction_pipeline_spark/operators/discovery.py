@@ -11,6 +11,11 @@ Spark-first re-expression: the listing is a DataFrame, the tag store is a
 join** — which Catalyst plans as a broadcast anti join while the manifest is
 dim-sized, exactly what you want at 100 TB of source objects: the multi-TB
 listing never shuffles.
+
+E1's batch tick (streaming/pipeline.process_pending) applies the same rule
+on the driver, where its one-directory listing and the ledger already live,
+so its discovery runs no Spark job; ``discover_new`` is the rule's Spark
+form over a listing DataFrame (the registered query ``discovery_anti_join``).
 """
 
 from __future__ import annotations
@@ -21,11 +26,20 @@ from pyspark.sql import functions as F
 from ..schemas import TERMINAL_OR_ACTIVE
 
 
+# ``fnmatch('*.bag')`` (s3_metadata_sensor.py:60-63), extended to the
+# ``.bag.tar.gz`` wrapping the reference unpacks at download time
+# (engine.py:35-51 — our S6 decoder unwraps it at scan time instead). One
+# rule for the Spark filter below and the driver-side bag listing
+# (sources/listing.list_bag_keys).
+BAG_SUFFIXES = (".bag", ".bag.tar.gz")
+
+
 def is_bag_key(key: Column) -> Column:
-    """``fnmatch('*.bag')`` equivalent (s3_metadata_sensor.py:60-63), extended
-    to the ``.bag.tar.gz`` wrapping the reference unpacks at download time
-    (engine.py:35-51 — our S6 decoder unwraps it at scan time instead)."""
-    return key.endswith(".bag") | key.endswith(".bag.tar.gz")
+    """``BAG_SUFFIXES`` as a Column predicate."""
+    out = key.endswith(BAG_SUFFIXES[0])
+    for suffix in BAG_SUFFIXES[1:]:
+        out = out | key.endswith(suffix)
+    return out
 
 
 def discover_new(listing: DataFrame, manifest: DataFrame, key_col: str = "key") -> DataFrame:

@@ -2,9 +2,10 @@
 
 The reference's DAG — sensor → tag → Fargate extract → label → aggregate →
 draw → tag complete (rosbag_processing.py:131-136, processing.py:30-50,
-141-173) — collapses into one incremental Spark job per tick:
+141-173) — collapses into one incremental tick:
 
-    discover (manifest anti-join / stream checkpoint)
+    discover (driver-side: pyarrow bag listing minus the ledger's
+      terminal/active keys, like the reference's sensor)
       → decode bags: messages + frames → infer (P13) → draw (P12), in
         one Python task per bag
       → topic landing (K1) · labels → frame_stats aggregate (A1+A2, K4)
@@ -12,10 +13,12 @@ draw → tag complete (rosbag_processing.py:131-136, processing.py:30-50,
       → manifest transitions in progress → complete | failure (O1/O2, K8),
         committed driver-side
 
-The empty-discovery branch (O1 ``no_work``) is a no-op tick; failures mark
-``failure`` per bag instead of the reference's silent container-STOP=success
-(processing.py:154-173). Every stage is a DataFrame transform — no XCom, no
-polling; lineage replaces cross-task value passing (O5).
+The empty-discovery branch (O1 ``no_work``) returns before any Spark job,
+and a tick with work runs a fixed number of jobs whatever its bag count.
+Failures mark ``failure`` per bag instead of the reference's silent
+container-STOP=success (processing.py:154-173). Every stage is a DataFrame
+transform — no XCom, no polling; lineage replaces cross-task value passing
+(O5).
 """
 
 from __future__ import annotations
@@ -159,10 +162,12 @@ def process_bags(
 
 
 def run_once(spark: SparkSession, cfg: PipelineConfig) -> dict[str, str]:
-    """One incremental tick (batch form — the replay-capable path).
+    """One incremental tick (batch form — the replay-capable path):
+    ``streaming.pipeline.process_pending`` discovers the pending bags on
+    the driver and hands their paths to ``process_bags``.
 
     Returns {bag key: "complete" | "failure"} for this tick; {} = the O1
-    ``no_work`` branch.
+    ``no_work`` branch, which runs no Spark job.
     """
     return sp.process_pending(
         spark,
@@ -171,19 +176,3 @@ def run_once(spark: SparkSession, cfg: PipelineConfig) -> dict[str, str]:
         lambda batch: process_bags(spark, cfg, batch),
     )
 
-
-def run_stream_tick(spark: SparkSession, cfg: PipelineConfig, checkpoint_dir: str) -> None:
-    """One ``Trigger.AvailableNow`` streaming tick (exactly-once discovery
-    via checkpoint; the O4 form of the reference's 30-minute cron).
-
-    Known limit: the ``binaryFile`` stream rejects a schema without
-    ``content``, so this tick still reads each bag through the JVM and
-    fails on a bag over ``spark.sql.sources.binaryFile.maxLength``; only
-    the batch tick (``run_once``) reads bags by path alone."""
-    sp.run_available_now(
-        spark,
-        cfg.bags_dir,
-        checkpoint_dir,
-        cfg.manifest_dir,
-        lambda batch: process_bags(spark, cfg, batch),
-    )

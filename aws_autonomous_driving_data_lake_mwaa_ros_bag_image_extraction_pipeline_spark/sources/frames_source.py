@@ -84,9 +84,11 @@ def decode_bags(
     bag that fails to open or parse (including an unsupported image
     encoding).
 
-    The decode runs over ``paths``' own partitions — a ``binaryFile``
-    listing scan gives one task per bag — and each bag is read once, by
-    path, inside its task (the reference needs two full bag passes plus a
+    The decode runs over ``paths``' own partitions — E1's pending-path
+    relation (``streaming.pipeline.process_pending``) has
+    ``min(n, defaultParallelism)`` of them, one bag per task while the
+    backlog fits the cores — and each bag is read once, by path, inside
+    its task (the reference needs two full bag passes plus a
     realtime replay, engine.py:96-137). The task then makes one
     ``model_fn`` call on the bag's raw pixel arrays (the operators/annotate
     contract; None = ``annotate.detect_blobs``), draws each frame's boxes

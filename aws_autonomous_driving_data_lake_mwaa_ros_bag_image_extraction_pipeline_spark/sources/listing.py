@@ -1,23 +1,64 @@
-"""Object/file listing as a DataFrame (operator S7) — metadata only.
+"""Object/file listing (operator S7) — metadata only.
 
 Reference: a boto3 ``list_objects_v2`` paginator (PageSize 100) feeds the
 sensor and the labeling stage (processing.py:287-301). Spark's binaryFile
 source lists implicitly but also READS content; discovery at 100 TB needs
 the listing alone — millions of keys, zero bytes of payload.
 
-Spark-first: enumerate via the Hadoop FileSystem API (works for file://,
-s3a://, any configured scheme — pagination is the FS client's concern,
-mirroring the paginator) and parallelize the resulting key metadata as a
-DataFrame. The listing itself is driver-side like every Spark file index;
-for key counts beyond driver memory, point ``list_files`` at narrower
-prefixes and union — same sharding the reference applies via bag prefixes.
+``list_bag_keys`` is E1's discovery listing: one directory level, listed on
+the driver through pyarrow, the way the reference's sensor lists on the
+Airflow worker (s3_metadata_sensor.py:49-90). ``list_files`` enumerates via
+the Hadoop FileSystem API (works for file://, s3a://, any configured scheme
+— pagination is the FS client's concern, mirroring the paginator) and
+returns the key metadata as a DataFrame. Both listings are driver-side like
+every Spark file index; for key counts beyond driver memory, point them at
+narrower prefixes — same sharding the reference applies via bag prefixes.
 """
 
 from __future__ import annotations
 
+import fnmatch
+import os
+from urllib.parse import urlsplit
+
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.discovery import BAG_SUFFIXES
+from .rosbag_format import filesystem_of
+
 LISTING_SCHEMA = "key string, size long, mtime timestamp"
+
+
+def list_bag_keys(root: str, glob: str = "*.bag*") -> list[str]:
+    """Sorted keys of the bag files directly under ``root`` whose name
+    matches ``glob`` (fnmatch) and ends in a ``BAG_SUFFIXES`` suffix.
+
+    No Spark job: the directory is listed through pyarrow
+    (``rosbag_format.filesystem_of``, the resolver ``open_bag`` uses). The
+    keys are the ones a ``binaryFile`` listing of ``root`` gives, so ledgers
+    written by that listing stay valid: ``file:`` + the absolute path, not
+    percent-encoded, for a local ``root``; names Spark treats as hidden
+    (``_…``, ``.…``) are skipped and subdirectories are not entered. A
+    missing ``root`` raises ``FileNotFoundError``."""
+    from pyarrow import fs
+
+    scheme = urlsplit(root).scheme
+    filesystem, inner = filesystem_of(root if scheme else os.path.abspath(root))
+    if isinstance(filesystem, fs.LocalFileSystem):
+        prefix, inner = "file:", os.path.normpath(inner)
+    else:
+        prefix = f"{scheme}://"
+    keys = []
+    for info in filesystem.get_file_info(fs.FileSelector(inner)):
+        name = info.base_name
+        if (
+            info.type == fs.FileType.File
+            and not name.startswith(("_", "."))  # Spark's hidden files
+            and fnmatch.fnmatch(name, glob)
+            and name.endswith(BAG_SUFFIXES)
+        ):
+            keys.append(prefix + info.path)
+    return sorted(keys)
 
 
 def list_files(
@@ -26,33 +67,33 @@ def list_files(
     """(key, size, mtime) for every file under ``root`` — no content I/O.
 
     ``glob`` filters by filename (fnmatch semantics, like the sensor's
-    ``*.bag``); the result feeds discovery.discover_new directly.
+    ``*.bag``); the result feeds discovery.discover_new directly. The
+    frame is an arrow-backed local relation: building it runs no job.
     """
     import datetime as dt
-    import fnmatch
+
+    import pyarrow as pa
 
     jvm = spark.sparkContext._jvm
     jsc = spark.sparkContext._jsc
     conf = jsc.hadoopConfiguration()
     path = jvm.org.apache.hadoop.fs.Path(root)
     fs = path.getFileSystem(conf)
-    rows = []
+    cols: dict[str, list] = {"key": [], "size": [], "mtime": []}
     it = fs.listFiles(path, recursive)
     while it.hasNext():
         st = it.next()
         key = st.getPath().toString()
         if glob is not None and not fnmatch.fnmatch(key.rsplit("/", 1)[-1], glob):
             continue
-        rows.append(
-            (
-                key,
-                st.getLen(),
-                dt.datetime.fromtimestamp(
-                    st.getModificationTime() / 1000, dt.timezone.utc
-                ).replace(tzinfo=None),
+        cols["key"].append(key)
+        cols["size"].append(st.getLen())
+        cols["mtime"].append(
+            dt.datetime.fromtimestamp(
+                st.getModificationTime() / 1000, dt.timezone.utc
             )
         )
-    return spark.createDataFrame(rows, LISTING_SCHEMA)
+    return spark.createDataFrame(pa.table(cols), LISTING_SCHEMA)
 
 
 def read_evolved(spark, paths: list[str], strict_types: bool = True):

@@ -928,20 +928,27 @@ def _maybe_unwrap(path: str, content: bytes) -> bytes:
     return content
 
 
-def open_bag(path: str) -> bytes:
-    """A bag's bytes by path or URI (``file:/…``, ``s3://…``, a plain local
-    path), unwrapped and magic-checked. Read inside the task that decodes
-    it, so the bytes never cross the JVM and no ``binaryFile`` row-size cap
-    applies. ``open_input_file`` rather than ``open_input_stream``: the
-    stream form gunzips ``*.gz`` by extension, which would hide the gzip
-    magic from the unwrap. ``binaryFile`` paths are not percent-encoded
-    (``file:/a b.bag``), so a URI is quoted before pyarrow parses it."""
+def filesystem_of(path: str):
+    """(pyarrow FileSystem, path inside it) for a path or URI (``file:/…``,
+    ``s3://…``, a plain local path). ``binaryFile`` paths and ledger keys
+    are not percent-encoded (``file:/a b.bag``), so a URI is quoted before
+    pyarrow parses it."""
     from urllib.parse import quote, urlsplit
 
     from pyarrow import fs
 
     uri = quote(path, safe=":/") if urlsplit(path).scheme else path
-    filesystem, inner = fs.FileSystem.from_uri(uri)
+    return fs.FileSystem.from_uri(uri)
+
+
+def open_bag(path: str) -> bytes:
+    """A bag's bytes by path or URI (see ``filesystem_of``), unwrapped and
+    magic-checked. Read inside the task that decodes it, so the bytes never
+    cross the JVM and no ``binaryFile`` row-size cap applies.
+    ``open_input_file`` rather than ``open_input_stream``: the stream form
+    gunzips ``*.gz`` by extension, which would hide the gzip magic from the
+    unwrap."""
+    filesystem, inner = filesystem_of(path)
     with filesystem.open_input_file(inner) as f:
         return _maybe_unwrap(path, f.readall())
 

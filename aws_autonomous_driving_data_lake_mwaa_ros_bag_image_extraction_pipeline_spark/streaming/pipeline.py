@@ -17,11 +17,17 @@ Reference semantics being re-expressed:
   streaming checkpoint has already seen — so explicit replay works even
   though the stream source never re-emits a file.
 
-Scale notes: the manifest log grows one tiny row per transition —
-``current_manifest`` is one window pass, and ``compact_manifest`` rewrites
-it to one row per key when the log gets long. Failure isolation is per bag
-(one bag = one unit of work, matching the reference), each bag a filtered
-slice of the batch.
+The batch tick's bookkeeping runs on the driver, as the reference's sensor
+does on the Airflow worker (s3_metadata_sensor.py:49-90): it lists the
+bags with pyarrow, folds the ledger with ``manifest_statuses`` and hands
+the pending paths to Spark as an arrow-backed local relation, so a tick
+with nothing pending runs no Spark job at all.
+
+Scale notes: the manifest log grows one tiny row per transition — the
+driver-side fold and the Spark ``current_manifest`` are each one pass over
+it, and ``compact_manifest`` rewrites it to one row per key when the log
+gets long. Failure isolation is per bag (one bag = one unit of work,
+matching the reference), each bag a filtered slice of the batch.
 """
 
 from __future__ import annotations
@@ -34,8 +40,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.discovery import discover_new
 from ..schemas import TERMINAL_OR_ACTIVE
+from ..sources.listing import list_bag_keys
 
 BINARY_FILE_SCHEMA = (
     "path string, modificationTime timestamp, length long, content binary"
@@ -278,6 +284,17 @@ def _log_paths(
     ]
 
 
+def _empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
+    """A 0-row frame of schema ``ddl`` built from arrow: a local relation,
+    so reading it runs no job (a frame built from a Python list is a
+    pickled RDD, one Python-worker job per action)."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    names = StructType.fromDDL(ddl).names
+    return spark.createDataFrame(pa.table({n: [] for n in names}), ddl)
+
+
 def _log_frame(
     spark: SparkSession, manifest_dir: str, version: int
 ) -> DataFrame:
@@ -291,7 +308,7 @@ def _log_frame(
     resolve nondeterministically."""
     sources = _log_paths(manifest_dir, version)
     if not sources:
-        return spark.createDataFrame([], MANIFEST_LOG_SCHEMA + ", __v long")
+        return _empty_frame(spark, MANIFEST_LOG_SCHEMA + ", __v long")
     frames = [
         spark.read.schema(MANIFEST_LOG_SCHEMA)
         .parquet(path)
@@ -324,7 +341,7 @@ def current_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
     (key, status, updated_at)."""
     versions = _versions(manifest_dir)
     if not versions:
-        return spark.createDataFrame([], MANIFEST_LOG_SCHEMA)
+        return _empty_frame(spark, MANIFEST_LOG_SCHEMA)
     return _last_writer_wins(_log_frame(spark, manifest_dir, versions[-1]))
 
 
@@ -340,7 +357,7 @@ def manifest_at(
     OF``: replay the head log up to that instant)."""
     versions = _versions(manifest_dir)
     if not versions:
-        return spark.createDataFrame([], MANIFEST_LOG_SCHEMA)
+        return _empty_frame(spark, MANIFEST_LOG_SCHEMA)
     if version is not None:
         if version not in versions:
             raise ValueError(
@@ -374,18 +391,39 @@ def compact_manifest(
             spark, manifest_dir, current_manifest(spark, manifest_dir)
         )
     else:
-        pdf = _read_log_arrow(_log_paths(manifest_dir, head)).to_pandas()
-        pdf = (
-            pdf.sort_values("updated_at", kind="mergesort")
-            .drop_duplicates("key", keep="last")
-        )
         rows = [
             (r.key, None if _isna(r.status) else r.status,
              r.updated_at.to_pydatetime().replace(tzinfo=None))
-            for r in pdf.itertuples()
+            for r in _fold_log(manifest_dir, head).itertuples()
         ]
         rel = _stage_rows(None, manifest_dir, rows)
     _claim_commit(manifest_dir, "snapshot", rel, base=head)
+
+
+def manifest_statuses(manifest_dir: str) -> dict[str, str | None]:
+    """{key: status} at the head version — the driver-side twin of
+    ``current_manifest`` (a cleared key maps to None). No Spark job: the
+    ledger is tiny driver-written metadata, read with pyarrow."""
+    versions = _versions(manifest_dir)
+    if not versions:
+        return {}
+    pdf = _fold_log(manifest_dir, versions[-1])
+    return {
+        k: None if _isna(v) else v for k, v in zip(pdf["key"], pdf["status"])
+    }
+
+
+def _fold_log(manifest_dir: str, version: int):
+    """Last-writer-wins over the log visible at ``version``, driver-side:
+    one (key, status, updated_at) pandas row per key, ordered by
+    ``updated_at`` and then by commit rank — ``_last_writer_wins``'s
+    order."""
+    pdf = _read_log_arrow(_log_paths(manifest_dir, version)).to_pandas()
+    return (
+        pdf.sort_values(["updated_at", "__v"], kind="stable")
+        .drop_duplicates("key", keep="last")
+        .drop(columns="__v")
+    )
 
 
 def _isna(x) -> bool:
@@ -397,7 +435,9 @@ def _isna(x) -> bool:
 def _read_log_arrow(data_dirs: list[str]):
     """Union the parquet part-files under commit data dirs into one arrow
     table (driver-side twin of the Spark multi-path read — works on both
-    pyarrow-staged and Spark-written commits).
+    pyarrow-staged and Spark-written commits). Given ``_log_paths``'
+    (rank, dir) pairs, each row also carries its commit rank as ``__v``,
+    as ``_log_frame``'s rows do.
 
     Timestamp columns are normalized to naive microseconds before the
     concat: Spark-written commits read back as timestamp[ns] naive (UTC
@@ -410,15 +450,14 @@ def _read_log_arrow(data_dirs: list[str]):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    files: list[str] = []
+    files: list[tuple[int | None, str]] = []
     for d in data_dirs:
-        if isinstance(d, tuple):  # (rank, path) from _log_paths — the
-            d = d[1]  # ascending rank order IS the concat order, so the
-            # stable mergesort in the arrow compactor resolves equal
-            # timestamps to the later commit, same as the Spark LWW
-        files.extend(sorted(_glob.glob(os.path.join(d, "*.parquet"))))
+        rank, d = d if isinstance(d, tuple) else (None, d)
+        files.extend(
+            (rank, f) for f in sorted(_glob.glob(os.path.join(d, "*.parquet")))
+        )
     tables = []
-    for f in files:
+    for rank, f in files:
         t = pq.read_table(f)
         schema = t.schema
         for i, field in enumerate(schema):
@@ -428,6 +467,8 @@ def _read_log_arrow(data_dirs: list[str]):
                     field.name,
                     t.column(i).cast(pa.timestamp("us")),
                 )
+        if rank is not None:
+            t = t.append_column("__v", pa.array([rank] * t.num_rows, pa.int64()))
         tables.append(t)
     return pa.concat_tables(tables, promote_options="permissive")
 
@@ -516,11 +557,14 @@ def vacuum_manifest(
 
 def _process_batch(
     batch: DataFrame,
+    keys: list[str],
     manifest_dir: str,
     process_fn: Callable[[DataFrame], list[str] | None],
     per_bag: bool,
 ) -> dict[str, str]:
-    """Run ``process_fn`` with per-bag failure isolation + status ledger.
+    """Run ``process_fn`` over ``batch`` (whose ``path`` column holds
+    exactly ``keys``, distinct) with per-bag failure isolation + status
+    ledger.
 
     One bag = one unit of *accounting* (the reference's granularity), one
     batch = one set of Spark jobs: ``process_fn`` handles the whole batch
@@ -538,7 +582,6 @@ def _process_batch(
 
     Returns {key: "complete" | "failure"} for the batch.
     """
-    keys = [r.path for r in batch.select("path").distinct().collect()]
     if not keys:
         return {}
     append_status(None, manifest_dir, keys, "in progress")
@@ -590,8 +633,8 @@ def run_available_now(
     Known limit: a ``binaryFile`` stream rejects any schema without
     ``content``, so each micro-batch reads its bags' bytes through the JVM
     and a bag over ``spark.sql.sources.binaryFile.maxLength`` (at most
-    2 GiB) fails the tick. ``process_pending``'s batch listing reads no
-    content; use it for such bags."""
+    2 GiB) fails the tick. ``process_pending`` hands ``process_fn`` paths
+    only; use it for such bags."""
     stream = (
         spark.readStream.format("binaryFile")
         .schema(BINARY_FILE_SCHEMA)
@@ -600,7 +643,8 @@ def run_available_now(
     )
 
     def _fb(batch: DataFrame, _epoch: int) -> None:
-        _process_batch(batch, manifest_dir, process_fn, per_bag)
+        keys = [r.path for r in batch.select("path").distinct().collect()]
+        _process_batch(batch, keys, manifest_dir, process_fn, per_bag)
 
     q = (
         stream.writeStream.foreachBatch(_fb)
@@ -869,25 +913,32 @@ def process_pending(
     per_bag: bool = True,
 ) -> dict[str, str]:
     """Batch incremental tick: discover files whose manifest status is not
-    terminal/active (S1+S2 anti-join), process them, record transitions.
+    terminal/active (S1+S2: the ``discover_new`` rule, applied on the
+    driver), process them, record transitions.
 
     This is the replay-capable path — a cleared status makes the key
     discoverable again regardless of the streaming checkpoint. Returns
     {key: "complete" | "failure"} for this tick's keys ({} = no work) so
     callers get a programmatic failure signal without scanning the
-    manifest. The batch is the ``binaryFile`` listing: its ``content``
-    column is read only if ``process_fn`` selects it."""
-    listing = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(source_dir)
-        .withColumnRenamed("path", "key")
-    )
-    manifest = current_manifest(spark, manifest_dir)
-    new = discover_new(listing, manifest, key_col="key").withColumnRenamed(
-        "key", "path"
-    )
-    return _process_batch(new, manifest_dir, process_fn, per_bag)
+    manifest.
+
+    Discovery runs no Spark job: ``list_bag_keys`` lists ``source_dir``
+    with pyarrow (the keys a ``binaryFile`` listing gives) and
+    ``manifest_statuses`` folds the ledger with pyarrow, so a tick with
+    nothing pending returns before any Spark call. The batch handed to
+    ``process_fn`` is a ``path``-only arrow-backed local relation, sorted
+    by key, with ``min(n, defaultParallelism)`` partitions."""
+    import pyarrow as pa
+
+    statuses = manifest_statuses(manifest_dir)
+    keys = [
+        k for k in list_bag_keys(source_dir, glob)
+        if statuses.get(k) not in TERMINAL_OR_ACTIVE
+    ]
+    if not keys:
+        return {}
+    batch = spark.createDataFrame(pa.table({"path": keys}), "path string")
+    return _process_batch(batch, keys, manifest_dir, process_fn, per_bag)
 
 
 def dedup_within_watermark(
@@ -983,6 +1034,16 @@ def streaming_cms(
     )
 
 
+def _epoch_frame(spark: SparkSession, epoch_id: int) -> DataFrame:
+    """The one-row epoch marker of a fold, as an arrow-backed local
+    relation (no Python-worker job to build it)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table({"epoch_id": [int(epoch_id)]}), "epoch_id bigint"
+    )
+
+
 def cms_fold_batch(
     batch,
     epoch_id: int,
@@ -1030,7 +1091,7 @@ def cms_fold_batch(
         )
     else:
         merged = new
-    this_epoch = spark.createDataFrame([(int(epoch_id),)], "epoch_id bigint")
+    this_epoch = _epoch_frame(spark, epoch_id)
     all_epochs = (
         prev_epochs.unionByName(this_epoch)
         if prev_epochs is not None
@@ -1150,7 +1211,7 @@ def gram_fold_batch(
         )
     else:
         merged = new
-    this_epoch = spark.createDataFrame([(int(epoch_id),)], "epoch_id bigint")
+    this_epoch = _epoch_frame(spark, epoch_id)
     all_epochs = (
         prev_epochs.unionByName(this_epoch)
         if prev_epochs is not None

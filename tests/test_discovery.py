@@ -99,3 +99,74 @@ def test_read_evolved_generations(spark, tmp_path):
 
     with pytest.raises(TypeError, match="changed type"):
         read_evolved(spark, [g1, g3])
+
+
+# Names the E1 bag listing must treat exactly as a ``binaryFile`` listing
+# of the directory does: both suffixes, a near-miss suffix, the two hidden
+# prefixes, a space and a literal ``%20`` (keys are not percent-encoded),
+# and a bag one directory down (not listed).
+_LISTING_NAMES = (
+    "a.bag", "b.bag.tar.gz", "x.bag.bak", "_h.bag", ".h.bag",
+    "sp ace.bag", "lit%20pct.bag", "sub/in.bag",
+)
+
+
+def _bag_dir(tmp_path):
+    d = tmp_path / "bags"
+    (d / "sub").mkdir(parents=True)
+    for name in _LISTING_NAMES:
+        (d / name).write_bytes(b"x")
+    return str(d)
+
+
+def _binary_file_bag_keys(spark, d: str) -> list[str]:
+    """The ledger keys discovery used to take from a ``binaryFile`` scan."""
+    listing = spark.read.format("binaryFile").option("pathGlobFilter", "*.bag*").load(d)
+    return sorted(
+        r.path
+        for r in listing.filter(discovery.is_bag_key(F.col("path"))).select("path").collect()
+    )
+
+
+def test_bag_listing_keys_equal_binaryfile_keys(spark, tmp_path):
+    from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.sources import (
+        listing,
+    )
+
+    d = _bag_dir(tmp_path)
+    want = _binary_file_bag_keys(spark, d)
+    assert [k.rsplit("/", 1)[-1] for k in want] == [
+        "a.bag", "b.bag.tar.gz", "lit%20pct.bag", "sp ace.bag",
+    ]
+    assert listing.list_bag_keys(d) == want
+    assert listing.list_bag_keys("file://" + d + "/") == want
+
+
+def test_binaryfile_ledger_reenqueues_nothing(spark, tmp_path):
+    """A ledger whose keys came from a ``binaryFile`` listing marks every
+    bag done for the driver-side discovery: the tick has no work."""
+    from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.streaming import (
+        pipeline as sp,
+    )
+
+    d = _bag_dir(tmp_path)
+    m = str(tmp_path / "manifest")
+    sp.append_status(None, m, _binary_file_bag_keys(spark, d), "complete")
+
+    def never(batch):
+        raise AssertionError("nothing is pending")
+
+    assert sp.process_pending(spark, d, m, never) == {}
+
+
+def test_missing_bags_dir_raises(spark, tmp_path):
+    import pytest
+
+    from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.streaming import (
+        pipeline as sp,
+    )
+
+    with pytest.raises(FileNotFoundError):
+        sp.process_pending(
+            spark, str(tmp_path / "missing"), str(tmp_path / "manifest"), lambda b: []
+        )

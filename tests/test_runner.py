@@ -206,11 +206,14 @@ def test_bags_over_binaryfile_max_length_complete(spark, tmp_path):
     assert spark.read.parquet(f"{cfg.output_dir}/topic_messages").count() == want
 
 # Spark jobs in a warm E1 tick over fixture bags (local[4], 4 shuffle
-# partitions). 21 while labels and annotations were separate Python stages
-# joined back to the frames and the ledger commits were Spark writes; 18
-# while frame_stats collected its own pivot vocabulary and joined a pivot
-# to the instance counts.
-JOBS_PER_TICK = 11
+# partitions): the landing write, which also builds the persisted decode,
+# and the frame sinks. 21 while labels and annotations were separate Python
+# stages joined back to the frames and the ledger commits were Spark
+# writes; 18 while frame_stats collected its own pivot vocabulary and
+# joined a pivot to the instance counts; 11 while discovery listed the bags
+# with a binaryFile scan, read the ledger with Spark and collected the
+# pending keys back.
+JOBS_PER_TICK = 6
 
 
 def _fixture_cfg(tmp_path, name: str, **kw) -> runner.PipelineConfig:
@@ -338,11 +341,11 @@ def test_e1_frames_match_infer_and_annotate(spark, tmp_path):
 
 
 def test_warm_tick_job_count_pinned(spark, tmp_path):
-    """A warm E1 tick runs a fixed, small number of Spark jobs: discovery,
-    the landing write and the three frame sinks over one persisted decode,
-    with driver-side ledger commits. A stage added back to the tick (a
-    second Python pass over the frames, a join, a Spark ledger commit)
-    fails here, not only in the benchmark."""
+    """A warm E1 tick runs a fixed, small number of Spark jobs: the landing
+    write and the frame sinks over one persisted decode, with driver-side
+    discovery and ledger commits. A stage added back to the tick (a
+    second Python pass over the frames, a join, a Spark ledger read or
+    commit, a Spark listing) fails here, not only in the benchmark."""
     sc = spark.sparkContext
     fixtures.write_bag_dir(str(tmp_path / "bags"), n_bags=2, tar_gz=(1,))
     runner.run_once(spark, _fixture_cfg(tmp_path, "cold"))
@@ -352,6 +355,22 @@ def test_warm_tick_job_count_pinned(spark, tmp_path):
     finally:
         sc.setJobGroup(None, None)
     assert len(sc.statusTracker().getJobIdsForGroup("warm-tick")) <= JOBS_PER_TICK
+
+
+def test_no_work_tick_runs_no_spark_job(spark, tmp_path):
+    """The O1 ``no_work`` branch is driver-side bookkeeping only: a second
+    tick over finished bags lists them, reads the ledger and returns {}
+    without one Spark job."""
+    sc = spark.sparkContext
+    fixtures.write_bag_dir(str(tmp_path / "bags"), n_bags=2, tar_gz=(1,))
+    cfg = _fixture_cfg(tmp_path, "done")
+    assert set(runner.run_once(spark, cfg).values()) == {"complete"}
+    sc.setJobGroup("no-work-tick", "no-work-tick")
+    try:
+        assert runner.run_once(spark, cfg) == {}
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("no-work-tick") == []
 
 
 def test_e1_frame_stats_match_labels_sink(spark, tmp_path):

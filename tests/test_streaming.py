@@ -540,6 +540,92 @@ def test_lww_equal_timestamps_resolve_by_commit_order(spark, tmp_path):
     assert got == {"k": "second"}
 
 
+def _legacy_commit(m: str, version: int, rows) -> None:
+    """A commit in the pre-multi-writer layout: rows under
+    data/vNNNNNNNN and a log entry with no ``data`` pointer."""
+    import json
+    import os
+
+    rel = sp._stage_rows(None, m, rows)
+    os.rename(os.path.join(m, rel), sp._data_path(m, version))
+    os.makedirs(sp._log_dir(m), exist_ok=True)
+    with open(os.path.join(sp._log_dir(m), f"{version:08d}.json"), "w") as f:
+        json.dump({"version": version, "action": "append"}, f)
+
+
+def test_driver_fold_equals_spark_current_manifest(spark, tmp_path):
+    """``manifest_statuses`` (the driver-side fold ``process_pending``
+    reads) equals ``{key: status}`` of the Spark ``current_manifest`` on
+    seeded random logs mixing a legacy data/vNNNNNNNN commit, pyarrow and
+    Spark-written appends, ``clear_status`` (NULL status), commits with
+    equal timestamps, Spark and pyarrow snapshots, and a snapshot that
+    lost the race to an append claimed after its base (the append outranks
+    the snapshot's rows on a timestamp tie)."""
+    import datetime as dt
+    import random
+
+    import pyarrow as pa
+
+    statuses = ["in progress", "complete", "failure", None]
+    for seed in range(4):
+        rng = random.Random(seed)
+        m = str(tmp_path / f"m{seed}")
+        keys = [f"file:/bags/b{i}.bag" for i in range(6)]
+        t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+
+        def rows():
+            ts = t0 + dt.timedelta(seconds=rng.randrange(3))  # many ties
+            return [(k, rng.choice(statuses), ts) for k in rng.sample(keys, 3)]
+
+        _legacy_commit(m, 0, rows())
+        for _ in range(14):
+            op = rng.randrange(6)
+            if op == 0:
+                sp.compact_manifest(spark, m)
+            elif op == 1:
+                sp.compact_manifest(None, m)
+            elif op == 2:
+                sp.clear_status(None, m, rng.sample(keys, 2))
+            elif op == 3:  # Spark-written append
+                cols = dict(zip(("key", "status", "updated_at"), zip(*rows())))
+                df = spark.createDataFrame(pa.table(cols), sp.MANIFEST_LOG_SCHEMA)
+                sp._claim_commit(m, "append", sp._stage_rows(spark, m, df))
+            elif op == 4:  # racing compactor: an append claims first
+                head = sp._versions(m)[-1]
+                snap = [
+                    (r.key, None if sp._isna(r.status) else r.status,
+                     r.updated_at.to_pydatetime())
+                    for r in sp._fold_log(m, head).itertuples()
+                ]
+                rel = sp._stage_rows(None, m, snap)
+                race = [(k, rng.choice(statuses), ts) for k, _, ts in snap[:2]]
+                sp._claim_commit(m, "append", sp._stage_rows(None, m, race))
+                sp._claim_commit(m, "snapshot", rel, base=head)
+            else:
+                sp._claim_commit(m, "append", sp._stage_rows(None, m, rows()))
+        want = {r.key: r.status for r in sp.current_manifest(spark, m).collect()}
+        assert sp.manifest_statuses(m) == want, seed
+    assert sp.manifest_statuses(str(tmp_path / "none")) == {}
+
+
+def test_empty_manifest_is_a_local_relation(spark, tmp_path):
+    """``current_manifest`` over a ledger with no commit is an arrow-backed
+    local relation: collecting it runs no Spark job (a frame built from a
+    Python list runs one Python-worker job), with the declared types."""
+    sc = spark.sparkContext
+    m = str(tmp_path / "manifest")
+    sc.setJobGroup("empty-manifest", "empty-manifest")
+    try:
+        assert sp.current_manifest(spark, m).collect() == []
+        assert sp.manifest_at(spark, m).collect() == []
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("empty-manifest") == []
+    want = spark.createDataFrame([], sp.MANIFEST_LOG_SCHEMA).schema
+    assert sp.current_manifest(spark, m).schema == want
+    assert sp._log_frame(spark, m, 0).dtypes[-1] == ("__v", "bigint")
+
+
 def test_streaming_chunk_store_uploads_only_the_delta(spark, tmp_path):
     """Two availableNow ticks through the content-addressed chunk store:
     tick 1 ingests the v1 corpus, tick 2 the preamble-edited v2 snapshot.
