@@ -42,11 +42,6 @@ def md5_long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("bigint")
 
 
-def seeded_md5(col: Column, seed: int) -> Column:
-    """md5 of ``seed || ':' || value`` — a family of independent hash functions."""
-    return F.md5(F.concat(F.lit(str(seed)), F.lit(":"), col.cast("string")))
-
-
 # Mersenne prime 2^31 - 1: the modulus for the multiplicative hash family.
 # Products a·h stay < 2^62, so every intermediate fits int64 — no overflow
 # even under ANSI arithmetic (Spark 4 default) and DuckDB's checked BIGINT.
@@ -79,12 +74,3 @@ def md5_mod_p(col: Column) -> Column:
     ``CAST(concat('0x', substr(md5(x), 1, 15)) AS BIGINT) % 2147483647``.
     """
     return md5_long(col) % F.lit(MERSENNE_31)
-
-
-def hex_digit_val(hexstr: Column, pos: int) -> Column:
-    """Integer value (0-15) of the 1-indexed hex digit at ``pos``.
-
-    Cross-engine: ``strpos('0123456789abcdef', substr(h, pos, 1)) - 1`` is
-    identical in DuckDB; Spark spells strpos as ``instr``.
-    """
-    return F.instr(F.lit("0123456789abcdef"), F.substring(hexstr, pos, 1)) - F.lit(1)

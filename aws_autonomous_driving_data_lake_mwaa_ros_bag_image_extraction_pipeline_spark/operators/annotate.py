@@ -38,8 +38,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..functions import png
 from ..schemas import LABELS_TABLE_SCHEMA
@@ -47,17 +46,6 @@ from ..schemas import LABELS_TABLE_SCHEMA
 ANNOTATED_SCHEMA = (
     "bag_id string, camera string, frame_index int, annotated binary"
 )
-
-
-def scale_box(box: Column, width: Column, height: Column) -> Column:
-    """P11: relative box × image dims → pixel corner points
-    (processing.py:366-375). Pure column arithmetic."""
-    return F.struct(
-        (box["Left"] * width).alias("x0"),
-        (box["Top"] * height).alias("y0"),
-        ((box["Left"] + box["Width"]) * width).alias("x1"),
-        ((box["Top"] + box["Height"]) * height).alias("y1"),
-    )
 
 
 def label_boxes(labels) -> list[tuple[float, ...]]:

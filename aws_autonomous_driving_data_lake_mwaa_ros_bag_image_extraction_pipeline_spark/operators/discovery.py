@@ -59,25 +59,3 @@ def pick_first(discovered: DataFrame, key_col: str = "key") -> DataFrame:
     """S3 list order = lexicographic; the sensor takes ``key_matches[0]``
     (s3_metadata_sensor.py:69-70). Deterministic: order + limit 1."""
     return discovered.orderBy(key_col).limit(1)
-
-
-def update_status(manifest: DataFrame, keys: DataFrame, status: str, key_col: str = "key") -> DataFrame:
-    """MERGE-style status upsert (put_object_tagging, processing.py:9-27).
-
-    Pure-DataFrame implementation (works on plain parquet): rows whose key is
-    in ``keys`` get the new status; others pass through. On a Delta/Iceberg
-    sink this becomes a single ``MERGE INTO``.
-    """
-    hits = keys.select(F.col(key_col)).distinct().withColumn("__hit", F.lit(True))
-    return (
-        manifest.join(F.broadcast(hits), key_col, "left")
-        .withColumn(
-            "status",
-            F.when(F.col("__hit"), F.lit(status)).otherwise(F.col("status")),
-        )
-        .withColumn(
-            "updated_at",
-            F.when(F.col("__hit"), F.current_timestamp()).otherwise(F.col("updated_at")),
-        )
-        .drop("__hit")
-    )

@@ -38,10 +38,6 @@ def in_set(col: str, values: list) -> Rule:
     return Rule(f"{col}_in_set", F.col(col).isin(values))
 
 
-def matches(col: str, pattern: str) -> Rule:
-    return Rule(f"{col}_matches", F.col(col).rlike(pattern))
-
-
 def check_rules(df: DataFrame, rules: list[Rule]) -> DataFrame:
     """Per-rule violation counts in ONE scan: every rule evaluates as a
     0/1 expression and a single aggregate sums them all (plus the row

@@ -1,17 +1,16 @@
-"""Sinks for binary columns and stats tables (operators K2, K3, K4, K7).
+"""File-tree export of binary columns (operators K2, K7).
 
 Reference: the filtered S3 sync uploads only ``.parquet/.png/.mp4/.info/.log``
 files under the bag's prefix (engine.py:278-300 — K2); annotated PNGs land
-under ``bounding_boxes/<key>`` (processing.py:330-338 — K7); per-frame label
-JSONs next to the PNGs (processing.py:194-202 — K3); frame stats go to a
-DynamoDB table keyed (timestamp, camera) (processing.py:224-283 — K4).
+under ``bounding_boxes/<key>`` (processing.py:330-338 — K7).
 
-Spark-first: the durable form of every one of these is a partitioned
-columnar table — binary stays a ``binary`` column inside Arrow/parquet pages
-(never collected to the driver), stats are a plain keyed table. The
-file-tree exports exist for interop with tools that want loose files; they
-write from executors via ``foreachPartition`` — the driver never sees a
-byte of image data.
+Spark-first: the durable form of every E1 output is a partitioned columnar
+table that ``runner.process_bags`` writes itself — binary stays a
+``binary`` column inside Arrow/parquet pages (never collected to the
+driver), labels are partitioned JSON (K3), stats a plain keyed table (K4).
+The file-tree export exists for interop with tools that want loose files;
+it writes from executors via ``foreachPartition`` — the driver never sees
+a byte of image data.
 """
 
 from __future__ import annotations
@@ -20,17 +19,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SYNC_SUFFIXES = (".parquet", ".png", ".mp4", ".info", ".log")  # engine.py:282
-
-
-def write_binary_table(
-    df: DataFrame,
-    dest: str,
-    partition_cols: tuple[str, ...] = ("bag_id", "camera"),
-) -> None:
-    """K7 durable form: annotated/original frames as a partitioned parquet
-    table with a binary column. Partitioning by (bag, camera) keeps one
-    executor's write confined to one directory and prunes downstream reads."""
-    df.write.partitionBy(*partition_cols).mode("overwrite").parquet(dest)
 
 
 def export_binary_files(
@@ -71,20 +59,6 @@ def export_binary_files(
                 f.write(row[1] or b"")
 
     rows.foreachPartition(_write)
-
-
-def write_labels_json(
-    labels: DataFrame, dest: str, partition_cols: tuple[str, ...] = ("bag_id", "camera")
-) -> None:
-    """K3: label arrays as partitioned JSON — one line per frame, the
-    columnar twin of the reference's one-file-per-frame layout."""
-    labels.write.partitionBy(*partition_cols).mode("overwrite").json(dest)
-
-
-def write_frame_stats(stats: DataFrame, dest: str) -> None:
-    """K4: the frame_stats table (pivot output), keyed (frame identity).
-    Plain parquet here; on Delta/Iceberg this becomes MERGE on the key."""
-    stats.write.mode("overwrite").parquet(dest)
 
 
 def frame_filename(

@@ -162,9 +162,11 @@ def process_bags(
 
 
 def run_once(spark: SparkSession, cfg: PipelineConfig) -> dict[str, str]:
-    """One incremental tick (batch form — the replay-capable path):
-    ``streaming.pipeline.process_pending`` discovers the pending bags on
-    the driver and hands their paths to ``process_bags``.
+    """One incremental tick: ``streaming.pipeline.process_pending``
+    discovers the pending bags on the driver and hands their paths to
+    ``process_bags``. Call it on a schedule for the reference's cron +
+    sensor (rosbag_processing.py:16-24); clear a key's status to re-run
+    its bag, including one a killed process left ``in progress``.
 
     Returns {bag key: "complete" | "failure"} for this tick; {} = the O1
     ``no_work`` branch, which runs no Spark job.

@@ -12,7 +12,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 
 def get_spark(app_name: str = "aads_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -41,33 +40,3 @@ def get_spark(app_name: str = "aads_spark", shuffle_partitions: int | None = Non
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
-    """Load the driver's parquet tables as DataFrames and register temp views."""
-    names = [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    out = {}
-    for n in names:
-        path = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            # Driver parquet stores naive µs timestamps → Spark 4 infers
-            # TIMESTAMP_NTZ; cast to session-tz TIMESTAMP (UTC) so epoch
-            # functions (unix_millis & co) work and values match DuckDB.
-            for col, dtype in df.dtypes:
-                if dtype == "timestamp_ntz":
-                    df = df.withColumn(col, F.col(col).cast("timestamp"))
-            df.createOrReplaceTempView(n)
-            out[n] = df
-    return out

@@ -1,8 +1,7 @@
 """Bag files as a first-class Spark data source (Python Data Source API).
 
-The SURVEY §4 "optional custom piece": instead of a ``binaryFile``
-listing plus a ``mapInPandas`` decode by path
-(sources/frames_source.py), bags read like any other format —
+The SURVEY §4 "optional custom piece": bag messages read like any other
+format —
 
     spark.dataSource.register(BagDataSource)
     df = (spark.read.format("rosbag")
@@ -20,16 +19,20 @@ with real source semantics:
 - **tar.gz unwrap** (S6) handled per partition.
 
 The same format also streams (``spark.readStream.format("rosbag")``):
-micro-batch offsets are the set of discovered bag paths, so each bag is
+micro-batch offsets are the set of discovered bag keys, so each bag is
 decoded exactly once across restarts (checkpointed by the engine). The
-offset carries the seen-path list — fine for the tens of thousands of
-bags a landing prefix holds; at data-lake scale the ``binaryFile`` stream
-in streaming/pipeline.py (engine-side file index) is the workhorse and
-this source is the API-complete custom form.
+offset carries the seen-key list — fine for the tens of thousands of
+bags a landing prefix holds. This is the only messages reader
+(``frames_source.read_bag_messages`` reads through it); E1's tick
+(streaming/pipeline.process_pending) decodes bags with
+``frames_source.decode_bags`` instead, which also yields the frames.
 
-Each partition opens its bag with ``rosbag_format.open_bag`` and parses it
-with the real ROS bag 2.0 codec (``rosbag_format.rosbag_decoder``) — the
-same open, unwrap and decode as sources/frames_source.py.
+Both readers list with ``listing.list_bag_keys``, E1's listing: the same
+keys, the same suffix and hidden-file rules, the same duplicate-stem
+check. Each partition opens its bag with ``rosbag_format.open_bag`` and
+parses it with the real ROS bag 2.0 codec
+(``rosbag_format.rosbag_decoder``); a bag that fails to open or parse
+becomes one ``__decode_error__`` row.
 """
 
 from __future__ import annotations
@@ -44,6 +47,7 @@ from pyspark.sql.datasource import (
 )
 
 from .frames_source import TOPIC_MESSAGES_DDL
+from .listing import list_bag_keys
 
 # Quarantine row for a bag whose decode raises: the reserved topic marks
 # it, payload carries the error. Without this, one corrupt bag fails the
@@ -81,7 +85,7 @@ class BagDataSourceReader(DataSourceReader):
 
     def partitions(self) -> list[InputPartition]:
         """One bag = one partition (the reference's unit of work)."""
-        paths = _list_bags(self.root)
+        paths = list_bag_keys(self.root)
         if not paths:
             raise FileNotFoundError(f"no bag files under {self.root}")
         return [BagInputPartition(p) for p in paths]
@@ -92,39 +96,8 @@ class BagDataSourceReader(DataSourceReader):
         yield from _decode_or_quarantine(partition.path, self.topics)
 
 
-def _list_bags(root: str) -> list[str]:
-    import os
-
-    out = []
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            if ".bag" in f:
-                out.append(os.path.join(dirpath, f))
-    _check_unique_stems(out)
-    return sorted(out)
-
-
-def _check_unique_stems(paths: list[str]) -> None:
-    """The bag filename stem IS the bag's identity (bag_id keys the
-    per-topic partition layout downstream), so two files sharing a stem
-    in different directories would silently overwrite each other's
-    partitions — fail the listing loudly instead."""
-    import os
-
-    seen: dict[str, str] = {}
-    for p in paths:
-        stem = os.path.basename(p).split(".bag")[0]
-        if stem in seen and seen[stem] != p:
-            raise ValueError(
-                f"duplicate bag stem {stem!r}: {seen[stem]} vs {p} — "
-                "bag_id is the filename stem, so stems must be unique "
-                "across the ingest tree"
-            )
-        seen.setdefault(stem, p)
-
-
 class BagStreamReader(DataSourceStreamReader):
-    """Micro-batch reader: offset = the sorted set of bag paths seen so
+    """Micro-batch reader: offset = the sorted set of bag keys seen so
     far; a batch's partitions are the newly-appeared bags (one each — the
     same fan-out unit as the batch reader). The engine checkpoints the
     offsets, giving exactly-once decode across restarts with no tag store.
@@ -141,7 +114,7 @@ class BagStreamReader(DataSourceStreamReader):
         return {"paths": []}
 
     def latestOffset(self) -> dict:
-        return {"paths": _list_bags(self.root)}
+        return {"paths": list_bag_keys(self.root)}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         seen = set(start.get("paths", []))

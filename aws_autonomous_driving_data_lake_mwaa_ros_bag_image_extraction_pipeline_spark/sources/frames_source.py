@@ -1,19 +1,22 @@
-"""Binary sources: camera frames + bag files (operators S1, S4-S6, S10, S11).
+"""Binary sources: camera frames + bag files (operators S4-S6, S10, S11).
 
-``read_frames`` is the production path: ``binaryFile`` scan (splittable
-listing, pushes the path glob down) + identity derivation — replaces the
-reference's "replay bag through ROS at 0.5× and save PNGs" (engine.py:96-99)
-with a deterministic one-pass scan.
+``read_frames`` reads loose PNG frames: a ``binaryFile`` scan (splittable
+listing, pushes the path glob down) + identity derivation from the path.
 
 ``decode_bags`` is E1's bag-decode contract (S4/S10 + P12/P13): bag paths →
 one row set per bag holding its topic messages AND its labeled, annotated
-frames. Each task opens its bags by path (sources/rosbag_format.open_bag)
-and parses each once with the real pure-Python ROS bag 2.0 codec (the
-format the reference reads via ``rosbag.Bag`` / ``importRosbag``), so a
-bag never travels as a Spark row and ``binaryFile``'s row-size cap never
-applies. The same task runs the model on the raw pixels, draws the boxes
-and PNG-encodes only the annotated image: each frame crosses into Python
-once. ``read_bag_messages`` is the messages-only form of the same read.
+frames — replacing the reference's "replay bag through ROS at 0.5× and
+save PNGs" (engine.py:96-99) with a deterministic one-pass decode. Each
+task opens its bags by path (sources/rosbag_format.open_bag) and parses
+each once with the real pure-Python ROS bag 2.0 codec (the format the
+reference reads via ``rosbag.Bag`` / ``importRosbag``), so a bag never
+travels as a Spark row and no row-size cap applies. The same task runs
+the model on the raw pixels, draws the boxes and PNG-encodes only the
+annotated image: each frame crosses into Python once.
+
+``read_bag_messages`` is the messages-only read: the registered ``rosbag``
+format (sources/bag_datasource.py), listed by ``listing.list_bag_keys``
+like E1's tick.
 """
 
 from __future__ import annotations
@@ -34,7 +37,6 @@ from .rosbag_format import (
     MESSAGE_COLUMNS,
     decode_bag,
     open_bag,
-    rosbag_decoder,
 )
 
 TOPIC_MESSAGES_DDL = (
@@ -139,26 +141,19 @@ def decode_bags(
 def read_bag_messages(
     spark: SparkSession, path: str, topics: list[str] | None = None
 ) -> DataFrame:
-    """Bag files under ``path`` → long topic_messages (S4/S6).
+    """The bags directly under ``path`` → long topic_messages (S4/S6):
+    ``spark.read.format("rosbag")``, one partition per bag, ``topics``
+    (None = all) pushed into the parse. Bare ``.bag`` and ``.bag.tar.gz``
+    objects both read (``open_bag`` sniffs the gzip magic and unwraps,
+    S6); a bag that fails to open or parse yields one
+    ``bag_datasource.DECODE_ERROR_TOPIC`` row carrying the error."""
+    from .bag_datasource import BagDataSource
 
-    The glob accepts both bare ``.bag`` and ``.bag.tar.gz`` objects
-    (``open_bag`` sniffs the gzip magic and unwraps, S6). The ``binaryFile``
-    scan only lists (no ``content`` column is read); each task opens its
-    bags by path and pushes the topic predicate into the parse.
-    """
-    paths = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.bag*")
-        .load(path)
-        .select("path")
-    )
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p in pdf["path"]:
-                yield rosbag_decoder(p, open_bag(p), topics)
-
-    return paths.mapInPandas(_decode, schema=TOPIC_MESSAGES_DDL)
+    spark.dataSource.register(BagDataSource)
+    reader = spark.read.format("rosbag").option("path", path)
+    if topics:
+        reader = reader.option("topics", ",".join(topics))
+    return reader.load()
 
 
 def bag_info(messages: DataFrame) -> DataFrame:

@@ -5,7 +5,8 @@ sensor and the labeling stage (processing.py:287-301). Spark's binaryFile
 source lists implicitly but also READS content; discovery at 100 TB needs
 the listing alone — millions of keys, zero bytes of payload.
 
-``list_bag_keys`` is E1's discovery listing: one directory level, listed on
+``list_bag_keys`` is the one bag listing: E1's discovery and both forms of
+the ``rosbag`` data source list through it. One directory level, listed on
 the driver through pyarrow, the way the reference's sensor lists on the
 Airflow worker (s3_metadata_sensor.py:49-90). ``list_files`` enumerates via
 the Hadoop FileSystem API (works for file://, s3a://, any configured scheme
@@ -24,14 +25,14 @@ from urllib.parse import urlsplit
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.discovery import BAG_SUFFIXES
-from .rosbag_format import filesystem_of
+from .rosbag_format import bag_id_from_path, filesystem_of
 
 LISTING_SCHEMA = "key string, size long, mtime timestamp"
 
 
-def list_bag_keys(root: str, glob: str = "*.bag*") -> list[str]:
-    """Sorted keys of the bag files directly under ``root`` whose name
-    matches ``glob`` (fnmatch) and ends in a ``BAG_SUFFIXES`` suffix.
+def list_bag_keys(root: str) -> list[str]:
+    """Sorted keys of the bag files directly under ``root``: the names
+    ending in a ``BAG_SUFFIXES`` suffix.
 
     No Spark job: the directory is listed through pyarrow
     (``rosbag_format.filesystem_of``, the resolver ``open_bag`` uses). The
@@ -39,7 +40,14 @@ def list_bag_keys(root: str, glob: str = "*.bag*") -> list[str]:
     written by that listing stay valid: ``file:`` + the absolute path, not
     percent-encoded, for a local ``root``; names Spark treats as hidden
     (``_…``, ``.…``) are skipped and subdirectories are not entered. A
-    missing ``root`` raises ``FileNotFoundError``."""
+    missing ``root`` raises ``FileNotFoundError``.
+
+    The file stem is the bag's identity (``bag_id`` keys every output
+    partition), so two bags sharing a stem (``x.bag`` and
+    ``x.bag.tar.gz``) would overwrite each other's outputs: the listing
+    raises ``ValueError`` instead. It checks the whole listing, not just
+    the keys a caller still has to process, because the earlier bag's
+    outputs are already on disk."""
     from pyarrow import fs
 
     scheme = urlsplit(root).scheme
@@ -48,17 +56,23 @@ def list_bag_keys(root: str, glob: str = "*.bag*") -> list[str]:
         prefix, inner = "file:", os.path.normpath(inner)
     else:
         prefix = f"{scheme}://"
-    keys = []
-    for info in filesystem.get_file_info(fs.FileSelector(inner)):
-        name = info.base_name
-        if (
-            info.type == fs.FileType.File
-            and not name.startswith(("_", "."))  # Spark's hidden files
-            and fnmatch.fnmatch(name, glob)
-            and name.endswith(BAG_SUFFIXES)
-        ):
-            keys.append(prefix + info.path)
-    return sorted(keys)
+    keys = sorted(
+        prefix + info.path
+        for info in filesystem.get_file_info(fs.FileSelector(inner))
+        if info.type == fs.FileType.File
+        and not info.base_name.startswith(("_", "."))  # Spark's hidden files
+        and info.base_name.endswith(BAG_SUFFIXES)
+    )
+    seen: dict[str, str] = {}
+    for key in keys:
+        stem = bag_id_from_path(key)
+        if stem in seen:
+            raise ValueError(
+                f"duplicate bag stem {stem!r}: {seen[stem]} vs {key} — "
+                "bag_id is the filename stem, so stems must be unique"
+            )
+        seen[stem] = key
+    return keys
 
 
 def list_files(

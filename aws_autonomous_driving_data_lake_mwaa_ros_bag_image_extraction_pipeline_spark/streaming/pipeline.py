@@ -1,33 +1,34 @@
-"""Incremental / streaming pipeline (operator O4) + processing-state ledger.
+"""Incremental pipeline (operator O4) + processing-state ledger.
 
 Reference semantics being re-expressed:
 
 - the 30-minute cron + S3 sensor loop (rosbag_processing.py:16-24,
-  s3_metadata_sensor.py:49-90) becomes a Structured Streaming **file source**
-  with ``Trigger.AvailableNow`` — the checkpoint gives exactly-once file
-  discovery with no tag races;
+  s3_metadata_sensor.py:49-90) is ``process_pending`` (``runner.run_once``)
+  called on a schedule: each tick lists the bags, drops the ones the ledger
+  marks done or running, processes the rest and records the outcome. The
+  bookkeeping runs on the driver, as the reference's sensor does on the
+  Airflow worker: ``list_bag_keys`` lists the bags with pyarrow,
+  ``manifest_statuses`` folds the ledger, and the pending paths reach Spark
+  as an arrow-backed local relation, so a tick with nothing pending runs
+  no Spark job at all. ``streaming_bag_ingest`` is the Structured
+  Streaming form of the same ingest (the ``rosbag`` stream source with
+  checkpointed path-set offsets, no ledger);
 - the ``processing.status`` object-tag ledger (processing.py:4-27) becomes an
   **append-only manifest log**: one (key, status, updated_at) row per
   transition, current state = last writer per key. Appends are cheap and
   atomic-enough on any filesystem (no read-modify-overwrite of the table
   we're reading); on Delta/Iceberg the same API maps to ``MERGE INTO``;
 - the replay-by-clearing-tag capability (reference README.md:90-100) is
-  ``clear_status`` + ``process_pending``: the *batch* incremental tick
-  discovers anything the manifest doesn't mark as done — including keys the
-  streaming checkpoint has already seen — so explicit replay works even
-  though the stream source never re-emits a file.
-
-The batch tick's bookkeeping runs on the driver, as the reference's sensor
-does on the Airflow worker (s3_metadata_sensor.py:49-90): it lists the
-bags with pyarrow, folds the ledger with ``manifest_statuses`` and hands
-the pending paths to Spark as an arrow-backed local relation, so a tick
-with nothing pending runs no Spark job at all.
+  ``clear_status`` + ``process_pending``: a cleared key is pending again on
+  the next tick. A bag left ``in progress`` by a killed process is re-run
+  the same way — clear its status — just as a reference bag whose tag went
+  stale is re-run by clearing the tag.
 
 Scale notes: the manifest log grows one tiny row per transition — the
 driver-side fold and the Spark ``current_manifest`` are each one pass over
 it, and ``compact_manifest`` rewrites it to one row per key when the log
 gets long. Failure isolation is per bag (one bag = one unit of work,
-matching the reference), each bag a filtered slice of the batch.
+matching the reference).
 """
 
 from __future__ import annotations
@@ -43,9 +44,6 @@ from pyspark.sql import functions as F
 from ..schemas import TERMINAL_OR_ACTIVE
 from ..sources.listing import list_bag_keys
 
-BINARY_FILE_SCHEMA = (
-    "path string, modificationTime timestamp, length long, content binary"
-)
 MANIFEST_LOG_SCHEMA = "key string, status string, updated_at timestamp"
 
 # ---------------------------------------------------------------------------
@@ -560,7 +558,6 @@ def _process_batch(
     keys: list[str],
     manifest_dir: str,
     process_fn: Callable[[DataFrame], list[str] | None],
-    per_bag: bool,
 ) -> dict[str, str]:
     """Run ``process_fn`` over ``batch`` (whose ``path`` column holds
     exactly ``keys``, distinct) with per-bag failure isolation + status
@@ -582,8 +579,6 @@ def _process_batch(
 
     Returns {key: "complete" | "failure"} for the batch.
     """
-    if not keys:
-        return {}
     append_status(None, manifest_dir, keys, "in progress")
     try:
         failed = set(process_fn(batch) or [])
@@ -592,8 +587,6 @@ def _process_batch(
         # batch is unaccounted-for → mark everything failed and surface it
         append_status(None, manifest_dir, keys, "failure")
         raise
-    if failed and not per_bag:
-        failed = set(keys)  # all-or-nothing accounting
     statuses = {k: "failure" if k in failed else "complete" for k in keys}
     append_status(
         None, manifest_dir, [k for k in keys if k not in failed], "complete"
@@ -613,46 +606,6 @@ def _await_tick(q, timeout_s: int) -> None:
             f"streaming tick did not finish within {timeout_s}s "
             "(query stopped; checkpoint will resume it next tick)"
         )
-
-
-def run_available_now(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    manifest_dir: str,
-    process_fn: Callable[[DataFrame], None],
-    glob: str = "*.bag*",
-    per_bag: bool = True,
-    timeout_s: int = 300,
-) -> None:
-    """One streaming tick: process every file not yet seen by the checkpoint
-    (exactly-once), recording manifest transitions. Swap
-    ``trigger(availableNow=True)`` for ``processingTime='30 minutes'`` to get
-    the reference's cron cadence as a long-running query.
-
-    Known limit: a ``binaryFile`` stream rejects any schema without
-    ``content``, so each micro-batch reads its bags' bytes through the JVM
-    and a bag over ``spark.sql.sources.binaryFile.maxLength`` (at most
-    2 GiB) fails the tick. ``process_pending`` hands ``process_fn`` paths
-    only; use it for such bags."""
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(BINARY_FILE_SCHEMA)
-        .option("pathGlobFilter", glob)
-        .load(source_dir)
-    )
-
-    def _fb(batch: DataFrame, _epoch: int) -> None:
-        keys = [r.path for r in batch.select("path").distinct().collect()]
-        _process_batch(batch, keys, manifest_dir, process_fn, per_bag)
-
-    q = (
-        stream.writeStream.foreachBatch(_fb)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    _await_tick(q, timeout_s)
 
 
 def zonemap_maintaining_sink(
@@ -909,36 +862,36 @@ def process_pending(
     source_dir: str,
     manifest_dir: str,
     process_fn: Callable[[DataFrame], list[str] | None],
-    glob: str = "*.bag*",
-    per_bag: bool = True,
 ) -> dict[str, str]:
-    """Batch incremental tick: discover files whose manifest status is not
+    """One incremental tick: discover the bags whose manifest status is not
     terminal/active (S1+S2: the ``discover_new`` rule, applied on the
-    driver), process them, record transitions.
+    driver), process them, record transitions. Run it on a schedule for
+    the reference's cron + sensor cadence.
 
-    This is the replay-capable path — a cleared status makes the key
-    discoverable again regardless of the streaming checkpoint. Returns
+    A cleared status makes the key pending again (replay). Returns
     {key: "complete" | "failure"} for this tick's keys ({} = no work) so
     callers get a programmatic failure signal without scanning the
     manifest.
 
     Discovery runs no Spark job: ``list_bag_keys`` lists ``source_dir``
-    with pyarrow (the keys a ``binaryFile`` listing gives) and
-    ``manifest_statuses`` folds the ledger with pyarrow, so a tick with
-    nothing pending returns before any Spark call. The batch handed to
-    ``process_fn`` is a ``path``-only arrow-backed local relation, sorted
-    by key, with ``min(n, defaultParallelism)`` partitions."""
+    with pyarrow (the keys a ``binaryFile`` listing gives, so older
+    ledgers stay valid; two bags sharing a stem raise before any ledger
+    commit) and ``manifest_statuses`` folds the ledger with pyarrow, so a
+    tick with nothing pending returns before any Spark call. The batch
+    handed to ``process_fn`` is a ``path``-only arrow-backed local
+    relation, sorted by key, with ``min(n, defaultParallelism)``
+    partitions."""
     import pyarrow as pa
 
     statuses = manifest_statuses(manifest_dir)
     keys = [
-        k for k in list_bag_keys(source_dir, glob)
+        k for k in list_bag_keys(source_dir)
         if statuses.get(k) not in TERMINAL_OR_ACTIVE
     ]
     if not keys:
         return {}
     batch = spark.createDataFrame(pa.table({"path": keys}), "path string")
-    return _process_batch(batch, keys, manifest_dir, process_fn, per_bag)
+    return _process_batch(batch, keys, manifest_dir, process_fn)
 
 
 def dedup_within_watermark(
@@ -1044,50 +997,44 @@ def _epoch_frame(spark: SparkSession, epoch_id: int) -> DataFrame:
     )
 
 
-def cms_fold_batch(
-    batch,
+def _epoch_fold(
+    new: DataFrame,
     epoch_id: int,
-    sketch_path: str,
-    value_col: str = "event_type",
-    depth: int = 4,
-    width: int = 256,
+    path: str,
+    keys: tuple[str, ...],
+    value: str,
 ) -> bool:
-    """One idempotent CMS fold (the foreachBatch body of ``streaming_cms``,
-    exposed for direct testing of replay/crash behavior). Returns True if
+    """One idempotent fold of a mergeable state table: ``new`` is a
+    micro-batch's contribution (cells keyed by ``keys``, additive
+    ``value``) and is summed into the table at ``path``. Returns True if
     the batch was folded, False if its epoch was already committed.
 
-    The folded-epoch set is written INSIDE the staged sketch directory
+    The folded-epoch set is written INSIDE the staged directory
     (``_epochs`` subdir) so the fold and its idempotence marker commit in
-    the same directory rename; an interrupted swap (sketch absent, staging
+    the same directory rename; an interrupted swap (table absent, staging
     complete) is rolled forward on the next call."""
-    import os
-    import shutil
-
-    from ..operators.sketches import cms_build
-
-    spark = batch.sparkSession
-    staging = sketch_path.rstrip("/") + "__staging"
-    if not os.path.exists(sketch_path) and os.path.exists(
+    spark = new.sparkSession
+    staging = path.rstrip("/") + "__staging"
+    if not os.path.exists(path) and os.path.exists(
         os.path.join(staging, "_epochs")
     ):
         # Crash landed between the two swap renames: staging is a
         # complete committed fold (renames only start after both
         # writes finish), so roll it forward instead of refolding.
-        os.rename(staging, sketch_path)
-    epochs_path = os.path.join(sketch_path, "_epochs")
+        os.rename(staging, path)
+    epochs_path = os.path.join(path, "_epochs")
     if os.path.exists(epochs_path):
         prev_epochs = spark.read.parquet(epochs_path)
         if prev_epochs.filter(F.col("epoch_id") == epoch_id).count() > 0:
             return False  # retried epoch: fold already committed with swap
     else:
         prev_epochs = None
-    new = cms_build(batch, value_col, depth, width)
-    if os.path.exists(sketch_path):
+    if os.path.exists(path):
         merged = (
-            spark.read.parquet(sketch_path)
+            spark.read.parquet(path)
             .unionByName(new)
-            .groupBy("d", "bucket")
-            .agg(F.sum("c").alias("c"))
+            .groupBy(*keys)
+            .agg(F.sum(value).alias(value))
         )
     else:
         merged = new
@@ -1101,13 +1048,33 @@ def cms_fold_batch(
     all_epochs.write.mode("overwrite").parquet(
         os.path.join(staging, "_epochs")
     )
-    old = sketch_path.rstrip("/") + "__old"
+    old = path.rstrip("/") + "__old"
     shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(sketch_path):
-        os.rename(sketch_path, old)
-    os.rename(staging, sketch_path)
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(staging, path)
     shutil.rmtree(old, ignore_errors=True)
     return True
+
+
+def cms_fold_batch(
+    batch,
+    epoch_id: int,
+    sketch_path: str,
+    value_col: str = "event_type",
+    depth: int = 4,
+    width: int = 256,
+) -> bool:
+    """One idempotent CMS fold (the foreachBatch body of ``streaming_cms``,
+    exposed for direct testing of replay/crash behavior; the protocol is
+    ``_epoch_fold``'s). Returns True if the batch was folded, False if its
+    epoch was already committed."""
+    from ..operators.sketches import cms_build
+
+    return _epoch_fold(
+        cms_build(batch, value_col, depth, width),
+        epoch_id, sketch_path, ("d", "bucket"), "c",
+    )
 
 
 def streaming_bag_ingest(
@@ -1176,74 +1143,16 @@ def gram_fold_batch(
     dim: int = 64,
 ) -> bool:
     """One idempotent Gram-matrix fold — the linear-algebra member of the
-    mergeable-state family (same staged-swap + in-directory epoch ledger
-    as ``cms_fold_batch``): each micro-batch contributes its d×d partial
+    mergeable-state family (the same ``_epoch_fold`` as
+    ``cms_fold_batch``): each micro-batch contributes its d×d partial
     XᵀX and cells ADD, so the persisted table is always the exact Gram of
     everything folded so far; a PCA/eigensolve can run against the live
     table at any time (operators/linalg.pca_top_component consumes the
     same cell layout). Cells are stored as DECIMAL so folds are exact and
     order-independent across ticks."""
-    import os
-    import shutil
-
     from ..operators.linalg import gram_matrix
 
-    spark = batch.sparkSession
-    staging = gram_path.rstrip("/") + "__staging"
-    if not os.path.exists(gram_path) and os.path.exists(
-        os.path.join(staging, "_epochs")
-    ):
-        os.rename(staging, gram_path)
-    epochs_path = os.path.join(gram_path, "_epochs")
-    if os.path.exists(epochs_path):
-        prev_epochs = spark.read.parquet(epochs_path)
-        if prev_epochs.filter(F.col("epoch_id") == epoch_id).count() > 0:
-            return False
-    else:
-        prev_epochs = None
-    new = gram_matrix(batch, vec_col, dim, as_decimal=True)
-    if os.path.exists(gram_path):
-        merged = (
-            spark.read.parquet(gram_path)
-            .unionByName(new)
-            .groupBy("i", "j")
-            .agg(F.sum("v").alias("v"))
-        )
-    else:
-        merged = new
-    this_epoch = _epoch_frame(spark, epoch_id)
-    all_epochs = (
-        prev_epochs.unionByName(this_epoch)
-        if prev_epochs is not None
-        else this_epoch
-    )
-    merged.write.mode("overwrite").parquet(staging)
-    all_epochs.write.mode("overwrite").parquet(os.path.join(staging, "_epochs"))
-    old = gram_path.rstrip("/") + "__old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(gram_path):
-        os.rename(gram_path, old)
-    os.rename(staging, gram_path)
-    shutil.rmtree(old, ignore_errors=True)
-    return True
-
-
-def streaming_gram(
-    stream,
-    gram_path: str,
-    checkpoint: str,
-    vec_col: str = "embedding",
-    dim: int = 64,
-):
-    """Continuously-maintained Gram matrix over a vector stream — the
-    incremental input to PCA/whitening (state is d(d+1)/2 cells forever,
-    independent of stream length). Same exactly-once contract as
-    ``streaming_cms``."""
-    def _fold(batch, epoch_id: int) -> None:
-        gram_fold_batch(batch, epoch_id, gram_path, vec_col, dim)
-
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
+    return _epoch_fold(
+        gram_matrix(batch, vec_col, dim, as_decimal=True),
+        epoch_id, gram_path, ("i", "j"), "v",
     )

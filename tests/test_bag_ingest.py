@@ -1,9 +1,9 @@
 """S4-S6, S8, S11, K1 end-to-end: bag decode → flatten → partitioned write.
 
 The bag files are genuine ROS bag 2.0 bytes (sources/rosbag_format.py
-writer) decoded by the real record parser; the metadata-only binaryFile
-listing, the by-path open inside each mapInPandas task, tar.gz unwrap and
-topic pushdown are the same production path.
+writer) decoded by the real record parser; ``read_bag_messages`` reads
+through the ``rosbag`` data source, whose listing, by-path open, tar.gz
+unwrap and topic pushdown are the production path.
 """
 
 from __future__ import annotations
@@ -89,19 +89,15 @@ def test_decode_flatten_write_prune(spark, bag_dir, tmp_path):
     assert wide.count() == msgs.filter(F.col("topic") == "/imu").count()
 
 
-def test_bag_datasource_matches_mapinpandas_path(spark, bag_dir):
-    """The Python Data Source reads the same rows as the mapInPandas decode,
-    fans out one partition per bag, and pushes the topic predicate."""
+def test_bag_datasource_partitions_and_pushdown(spark, bag_dir):
+    """The Python Data Source fans out one partition per bag and pushes
+    the topic predicate (its rows: ``test_decode_matches_fixture_table``)."""
     from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.sources.bag_datasource import (
         BagDataSource,
     )
 
     spark.dataSource.register(BagDataSource)
     ds = spark.read.format("rosbag").option("path", bag_dir).load()
-    via_map = frames_source.read_bag_messages(spark, bag_dir)
-    a = {(r.bag_id, r.topic, r.rosbagTimestamp, r.seq) for r in ds.collect()}
-    b = {(r.bag_id, r.topic, r.rosbagTimestamp, r.seq) for r in via_map.collect()}
-    assert a == b
     assert ds.rdd.getNumPartitions() == 3  # one per bag file
     gps = (
         spark.read.format("rosbag")

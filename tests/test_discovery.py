@@ -1,7 +1,8 @@
-"""S1-S3 discovery anti-join, O1 empty branch, K8 status upsert."""
+"""S1-S3 discovery: the anti-join, the bag listing and its key rules."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.operators import (
@@ -53,27 +54,6 @@ def test_listing_source_feeds_discovery(spark, tmp_path):
     )
     new = discovery.discover_new(lst, manifest)
     assert new.count() == 2  # completed key excluded
-
-
-def test_update_status_transitions_only_hit_keys(spark):
-    manifest = fixtures.bag_manifest(spark, n_bags=10)
-    target = discovery.pick_first(
-        discovery.discover_new(manifest.select("key"), manifest)
-    )
-    tkey = target.collect()[0].key
-    updated = discovery.update_status(manifest, target, "in progress")
-    got = {r.key: r.status for r in updated.collect()}
-    before = {r.key: r.status for r in manifest.collect()}
-    assert got[tkey] == "in progress"
-    for k, v in before.items():
-        if k != tkey:
-            assert got[k] == v
-    # exactly-once replay semantics: clearing the status re-discovers the key
-    cleared = updated.withColumn(
-        "status", F.when(F.col("key") == tkey, F.lit(None)).otherwise(F.col("status"))
-    )
-    rediscovered = {r.key for r in discovery.discover_new(cleared.select("key"), cleared).collect()}
-    assert tkey in rediscovered
 
 
 def test_read_evolved_generations(spark, tmp_path):
@@ -140,6 +120,67 @@ def test_bag_listing_keys_equal_binaryfile_keys(spark, tmp_path):
     ]
     assert listing.list_bag_keys(d) == want
     assert listing.list_bag_keys("file://" + d + "/") == want
+
+
+def test_rosbag_format_reads_exactly_the_bag_listing(spark, tmp_path):
+    """The ``rosbag`` batch reader's partitions and the stream reader's
+    first offset are ``list_bag_keys(root)``: the near-miss suffix, the
+    hidden names and the subdirectory bag stay out; the space and the
+    literal ``%20`` stay in. A read yields one row per listed bag (every
+    file here is corrupt, so each is one decode-error row)."""
+    from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.sources import (
+        listing,
+    )
+    from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.sources.bag_datasource import (
+        DECODE_ERROR_TOPIC,
+        BagDataSource,
+        BagDataSourceReader,
+        BagStreamReader,
+    )
+
+    d = _bag_dir(tmp_path)
+    want = listing.list_bag_keys(d)
+    assert [k.rsplit("/", 1)[-1] for k in want] == [
+        "a.bag", "b.bag.tar.gz", "lit%20pct.bag", "sp ace.bag",
+    ]
+    reader = BagDataSourceReader({"path": d})
+    assert [p.path for p in reader.partitions()] == want
+    assert BagStreamReader({"path": d}).latestOffset() == {"paths": want}
+
+    spark.dataSource.register(BagDataSource)
+    rows = spark.read.format("rosbag").option("path", d).load().collect()
+    assert {r.topic for r in rows} == {DECODE_ERROR_TOPIC}
+    assert sorted(r.bag_id for r in rows) == ["a", "b", "lit%20pct", "sp ace"]
+
+
+@pytest.mark.parametrize("later_tick", [False, True], ids=["same_tick", "later_tick"])
+def test_duplicate_stem_raises_before_any_commit(spark, tmp_path, later_tick):
+    """``x.bag`` and ``x.bag.tar.gz`` would both write ``bag_id=x``
+    partitions, the second replacing the first's outputs: the tick refuses
+    the listing and commits nothing, whether both arrive together or the
+    second arrives after the first completed (the check covers the whole
+    listing, not only the pending keys). Regression: both read
+    ``complete`` and the second bag's rows replaced the first's."""
+    from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.streaming import (
+        pipeline as sp,
+    )
+
+    d = tmp_path / "bags"
+    d.mkdir()
+    m = str(tmp_path / "manifest")
+    (d / "x.bag").write_bytes(b"x")
+    if later_tick:
+        first = sp.process_pending(spark, str(d), m, lambda batch: [])
+        assert list(first.values()) == ["complete"]
+    before = sp.manifest_statuses(m)
+    (d / "x.bag.tar.gz").write_bytes(b"x")
+
+    def never(batch):
+        raise AssertionError("a duplicate stem reaches no processing")
+
+    with pytest.raises(ValueError, match="duplicate bag stem"):
+        sp.process_pending(spark, str(d), m, never)
+    assert sp.manifest_statuses(m) == before
 
 
 def test_binaryfile_ledger_reenqueues_nothing(spark, tmp_path):

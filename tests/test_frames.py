@@ -30,6 +30,33 @@ def test_with_frame_identity(spark):
     assert left.frame_time == left.bag_time + dt.timedelta(milliseconds=193 * 67)
 
 
+def test_read_frames_scans_pngs_with_identity(spark, tmp_path):
+    """S10: a ``binaryFile`` scan of a bag's PNG directory → frame rows
+    with their bytes and path-derived identity; other files are skipped."""
+    import numpy as np
+
+    from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.functions import (
+        png,
+    )
+    from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.sources import (
+        frames_source,
+    )
+
+    d = tmp_path / "2020-10-05-10-00-00_bag0000"
+    d.mkdir()
+    img = png.encode(np.full((4, 6, 3), 7, dtype=np.uint8))
+    (d / "left0193.png").write_bytes(img)
+    (d / "notes.txt").write_bytes(b"not a frame")
+    rows = frames_source.read_frames(spark, str(d)).collect()
+    assert len(rows) == 1
+    r = rows[0]
+    assert (r.filename, r.bag_id, r.camera, r.frame_index) == (
+        "left0193.png", "2020-10-05-10-00-00_bag0000", "left", 193,
+    )
+    assert r.bag_time == dt.datetime(2020, 10, 5, 10, 0, 0)
+    assert bytes(r.content) == img
+
+
 def test_gap_audit_finds_injected_gaps(spark):
     frames_df = fixtures.frames(spark, n_bags=2, frames_per_camera=60, drop_pct=0.05)
     # python recompute of expected gaps

@@ -406,27 +406,31 @@ def test_datasource_quarantines_corrupt_bag(spark, tmp_path):
 
 
 def test_duplicate_bag_stems_rejected(tmp_path):
-    """Two bag files sharing a stem in different directories would
-    silently overwrite each other's bag_id partitions downstream — the
-    listing fails loudly instead (regression)."""
+    """Two bag files sharing a stem (``run0001.bag`` and
+    ``run0001.bag.tar.gz``) would silently overwrite each other's bag_id
+    partitions downstream — the listing both readers use fails loudly
+    instead (regression)."""
     import os
 
     from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.sources.bag_datasource import (
         BagDataSourceReader,
         BagStreamReader,
-        _list_bags,
+    )
+    from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.sources.listing import (
+        list_bag_keys,
     )
 
     root = str(tmp_path / "bags")
-    os.makedirs(os.path.join(root, "a"))
-    os.makedirs(os.path.join(root, "b"))
-    for d in ("a", "b"):
-        with open(os.path.join(root, d, "run0001.bag"), "wb") as f:
+    os.makedirs(root)
+    for name in ("run0001.bag", "run0001.bag.tar.gz"):
+        with open(os.path.join(root, name), "wb") as f:
             f.write(b"x")
     with pytest.raises(ValueError, match="duplicate bag stem"):
-        _list_bags(root)
+        list_bag_keys(root)
     with pytest.raises(ValueError, match="duplicate bag stem"):
         BagDataSourceReader({"path": root}).partitions()
+    with pytest.raises(ValueError, match="duplicate bag stem"):
+        BagStreamReader({"path": root}).latestOffset()
     # both readers name the format they belong to when 'path' is missing
     for reader in (BagDataSourceReader, BagStreamReader):
         with pytest.raises(ValueError, match="^rosbag: option 'path' is required"):

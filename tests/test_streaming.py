@@ -1,4 +1,4 @@
-"""O4: exactly-once streaming discovery, manifest ledger, replay semantics."""
+"""O4: exactly-once incremental ticks, manifest ledger, replay semantics."""
 
 from __future__ import annotations
 
@@ -85,9 +85,8 @@ def test_manifest_commit_is_atomic_log_rename(spark, tmp_path):
     )
 
 
-def test_streaming_exactly_once_and_failure_marking(spark, tmp_path):
+def test_tick_exactly_once_and_failure_marking(spark, tmp_path):
     src = str(tmp_path / "bags")
-    ck = str(tmp_path / "ck")
     m = str(tmp_path / "manifest")
     out = str(tmp_path / "out")
     fixtures.write_bag_dir(src, n_bags=2, tar_gz=())
@@ -95,6 +94,12 @@ def test_streaming_exactly_once_and_failure_marking(spark, tmp_path):
     processed: list[str] = []
 
     def process(batch):
+        import pandas as pd
+
+        from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.sources import (
+            rosbag_format,
+        )
+
         keys = [r.path for r in batch.select("path").collect()]
         processed.extend(keys)
         # quarantine contract: report failed keys, process the rest
@@ -102,43 +107,33 @@ def test_streaming_exactly_once_and_failure_marking(spark, tmp_path):
         good = [k for k in keys if k not in failed]
         if not good:
             return failed
-        # real work: decode + append to a landing table
-        pdf = batch.select("path", "content").toPandas()
-        import pandas as pd
-
-        from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.sources import (
-            fixtures as fx,
-            rosbag_format,
-        )
-
+        # real work: decode by path + append to a landing table
         frames = [
             rosbag_format.rosbag_decoder(
-                r["path"], r["content"], list(fx._TOPIC_RATES)
+                k, rosbag_format.open_bag(k), list(fixtures._TOPIC_RATES)
             )
-            for _, r in pdf.iterrows()
-            if r["path"] in good
+            for k in good
         ]
-        sdf = spark.createDataFrame(pd.concat(frames), sp_schema())
+        sdf = spark.createDataFrame(
+            pd.concat(frames), frames_source.TOPIC_MESSAGES_DDL
+        )
         sdf.write.mode("append").parquet(out)
         return failed
 
-    def sp_schema():
-        return frames_source.TOPIC_MESSAGES_DDL
-
     # tick 1: both bags processed, marked complete
-    sp.run_available_now(spark, src, ck, m, process)
+    sp.process_pending(spark, src, m, process)
     got = {r.key.split("/")[-1]: r.status for r in sp.current_manifest(spark, m).collect()}
     assert all(v == "complete" for v in got.values()) and len(got) == 2
     n_first = len(processed)
     assert n_first == 2
 
-    # tick 2 with no new files: nothing re-processed (checkpoint exactly-once)
-    sp.run_available_now(spark, src, ck, m, process)
+    # tick 2 with no new files: nothing re-processed (the ledger marks both done)
+    assert sp.process_pending(spark, src, m, process) == {}
     assert len(processed) == n_first
 
     # drop a new (failing) bag; only it is processed, and it's marked failure
     fixtures.write_bag_dir(src, n_bags=3, tar_gz=())  # adds bag0002
-    sp.run_available_now(spark, src, ck, m, process)
+    sp.process_pending(spark, src, m, process)
     got = {r.key.split("/")[-1]: r.status for r in sp.current_manifest(spark, m).collect()}
     assert len(processed) == n_first + 1 and "bag0002" in processed[-1]
     assert [v for k, v in got.items() if "bag0002" in k] == ["failure"]
