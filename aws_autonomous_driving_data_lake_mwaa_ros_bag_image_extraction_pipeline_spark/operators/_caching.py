@@ -1,30 +1,20 @@
-"""Bounded-lifetime caching for multi-consumer intermediates.
+"""Per-call sharing for multi-consumer intermediates.
 
-Several detectors persist an intermediate that feeds 2-4 consumers inside
-one returned plan (minhash candidate pairs, banded Hamming signatures,
-TF-IDF weights, winnow fingerprints). The returned DataFrame is LAZY, so
-the operator cannot unpersist before returning — the caller would silently
-recompute the expensive pass. Spark's cache manager dedups IDENTICAL
-canonicalized plans, but a long-lived session calling these operators over
-DIFFERENT inputs accumulates one MEMORY_AND_DISK entry per distinct input
-with no eviction until session end.
+Several detectors feed one intermediate to 2-4 consumers inside one
+returned plan (minhash candidate pairs, banded Hamming signatures, TF-IDF
+weights, winnow fingerprints, the connected-components rounds). The
+returned DataFrame is LAZY, so the operator cannot unpersist before
+returning, and ``persist()`` is the wrong tool: Spark's CacheManager keys
+an entry on the canonicalized plan, so it silently serves REPEAT
+invocations over the same input from cache (a warm benchmark stops
+measuring the detector) and keeps one entry per distinct input until
+session end.
 
-``finish`` gives those callers a bounded variant: ``eager=True``
-materializes the result with ``localCheckpoint(eager=True)`` (the
-lineage-truncation idiom already used by the connected-components and HNSW
-loops), then unpersists every intermediate — the dedup_index
-materialize-unpersist-return pattern. The checkpointed blocks are freed by
-the ContextCleaner when the returned frame is garbage-collected, unlike
-cache-manager entries, which live until an explicit unpersist. The default
-stays lazy: one-shot jobs (bench sweeps, oracle gates) want the plan, not
-an extra materialization.
-
-Durability caveat: ``localCheckpoint`` blocks are executor-local and
-UNREPLICATED, and the eager path truncates lineage before unpersisting the
-intermediates — so after an executor loss the returned frame is
-unrecoverable (no lineage to recompute from). On preemptible/churning
-clusters, collect or write the eager result promptly, or use reliable
-``checkpoint()`` to a fault-tolerant store instead.
+``share`` is the one idiom instead: a lazy checkpoint (local, or reliable
+once the session has a checkpoint dir), a fresh RDD per call whose blocks
+the ContextCleaner frees when the frame is garbage-collected. A caller
+that wants an operator's result materialized calls
+``localCheckpoint(eager=True)`` on it directly.
 """
 
 from __future__ import annotations
@@ -55,19 +45,3 @@ def share(df: DataFrame) -> DataFrame:
     if has_dir:
         return df.checkpoint(eager=False)
     return df.localCheckpoint(eager=False)
-
-
-def finish(result: DataFrame, *intermediates: DataFrame, eager: bool = False) -> DataFrame:
-    """Return ``result`` as-is (lazy, default), or — ``eager=True`` —
-    materialized via ``localCheckpoint(eager=True)`` with every
-    ``intermediates`` frame unpersisted before returning, so nothing this
-    operator persisted outlives the call. The eager result's blocks are
-    executor-local and unreplicated with lineage truncated: an executor
-    loss makes it unrecoverable, so on churning clusters consume it
-    promptly (see module docstring)."""
-    if not eager:
-        return result
-    out = result.localCheckpoint(eager=True)
-    for df in intermediates:
-        df.unpersist()
-    return out

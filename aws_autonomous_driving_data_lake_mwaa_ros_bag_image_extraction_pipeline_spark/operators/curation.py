@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from ..functions import hashing as H
 from ..functions import text as T
-from ._caching import finish
 
 
 # ---------------------------------------------------------------------------
@@ -294,7 +293,6 @@ def duplicated_spans(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    eager: bool = False,
 ) -> DataFrame:
     """MAXIMAL exactly-duplicated token spans at ANY alignment — the
     ExactSubstr detector of Lee et al., "Deduplicating Training Data Makes
@@ -334,18 +332,11 @@ def duplicated_spans(
 
     The groupBy+semi-join shape evaluates the tokenize/posexplode subplan
     TWICE (Spark does not CSE identical subplans) — the measured price of
-    the de-skew. ``eager=True`` persists the exploded gram table for the
-    two consumers and returns the (tiny) span table materialized via the
-    bounded ``_caching.finish`` idiom, trading the second corpus scan for
-    the materialization of an n_tokens-per-doc intermediate. Measured at
-    sf0.1 (min-of-3, warm JIT): detect alone 1.69 s lazy vs 1.51 s
-    eager; a FULL detect+scrub pipeline (both outputs executed) sharing
-    the eager spans via ``scrub_duplicated_spans(spans=...)`` runs
-    1.72 s vs 4.56 s with each operator recomputing its own gram pass —
-    eager wins whenever the spans are consumed more than once. The
-    default stays lazy: one-shot consumers (oracle gates, bench sweeps)
-    want the plan, and the eager result carries ``localCheckpoint``'s
-    executor-loss durability caveat (see ``_caching``).
+    the de-skew. A pipeline that consumes the spans more than once (detect
+    AND scrub) materializes the (tiny) span table once with
+    ``localCheckpoint(eager=True)`` and hands it to
+    ``scrub_duplicated_spans(spans=...)``, so the scrub does not recompute
+    its own gram pass.
     """
     toks = T.tokens(F.lower(F.col(text_col)))
 
@@ -361,8 +352,6 @@ def duplicated_spans(
     g = docs.select(
         F.col(id_col), F.posexplode(T.bind(toks, _grams)).alias("__i", "__h")
     ).select(F.col(id_col), (F.col("__i") + 1).alias("__pos"), "__h")
-    if eager:
-        g = g.persist()
     hot = (
         g.groupBy("__h")
         .agg(F.count(F.lit(1)).alias("__cnt"))
@@ -371,7 +360,7 @@ def duplicated_spans(
     )
     dup = g.join(hot, "__h", "left_semi")
     rn = F.row_number().over(Window.partitionBy(id_col).orderBy("__pos"))
-    out = (
+    return (
         dup.withColumn("__grp", F.col("__pos") - rn)
         .groupBy(id_col, "__grp")
         .agg(
@@ -381,7 +370,6 @@ def duplicated_spans(
         )
         .select(id_col, "span_start", "span_end", "n_grams")
     )
-    return finish(out, g, eager=eager)
 
 
 def scrub_duplicated_spans(
@@ -391,7 +379,6 @@ def scrub_duplicated_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     spans: DataFrame | None = None,
-    eager: bool = False,
 ) -> DataFrame:
     """Remove duplicated spans keeping ONE occurrence corpus-wide — the
     scrub ExactSubstr dedup actually applies (Lee et al., ACL 2022 remove
@@ -404,10 +391,8 @@ def scrub_duplicated_spans(
     the span hash slices the span's token range out of THIS function's
     normalized tokens, the same ``text_col`` normalization — and this
     function only touches the corpus for the span-text join and the
-    rebuild (the ``eager=``/persist discipline of the minhash / simhash /
-    winnow families; ``eager`` is forwarded to the detector when spans
-    are computed here). ``k``/``min_count`` parameterize only that
-    internal detector call and are ignored when ``spans`` is given.
+    rebuild. ``k``/``min_count`` parameterize only the internal detector
+    call made when ``spans`` is None and are ignored when it is given.
 
     Contract: spans come from ``duplicated_spans(k, min_count)``; spans
     are clustered by the md5 of their FULL token range (so only
@@ -439,7 +424,7 @@ def scrub_duplicated_spans(
     """
     toks = T.tokens(F.lower(F.col(text_col)))
     if spans is None:
-        spans = duplicated_spans(docs, k, min_count, id_col, text_col, eager)
+        spans = duplicated_spans(docs, k, min_count, id_col, text_col)
     span_h = F.md5(
         F.array_join(
             F.slice(
@@ -528,10 +513,10 @@ def scrub_until_clean(
     still gets the single-pass normalization rebuild (n_dropped=0,
     lowercased whitespace-joined text).
 
-    Plan shape (100 TB): each pass shares ONE gram pass between its detect
-    and scrub via the eager ``spans=`` path (the measured 4.56→1.72 s
-    sharing win, see :func:`duplicated_spans`), and each pass's
-    ACCUMULATED output — the scrub joined with the running ``n_dropped``
+    Plan shape (100 TB): each pass shares ONE detect between its
+    convergence probe and its scrub — the span table is materialized with
+    ``localCheckpoint(eager=True)`` and passed as ``spans=`` — and each
+    pass's ACCUMULATED output — the scrub joined with the running ``n_dropped``
     totals, i.e. exactly what the next pass reads — is
     ``localCheckpoint``-materialized — the lineage-truncation idiom of the
     connected-components and HNSW loops — so the per-pass plan never
@@ -564,7 +549,9 @@ def scrub_until_clean(
     converged = False
     cur, cur_text = docs, text_col
     for _ in range(max_passes):
-        spans = duplicated_spans(cur, k, min_count, id_col, cur_text, eager=True)
+        spans = duplicated_spans(
+            cur, k, min_count, id_col, cur_text
+        ).localCheckpoint(eager=True)
         dirty = not spans.isEmpty()
         if result is not None and not dirty:
             converged = True

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..functions import hashing as H
 from ..functions import text as T
 from ..functions import vectors as V
-from ._caching import finish, share
+from ._caching import share
 from ._planstats import broadcast_threshold_bytes, input_size_bytes
 
 def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -243,7 +243,6 @@ def minhash_dedup_pairs(
     shingle_len: int = 3,
     num_hashes: int = 12,
     bands: int = 4,
-    eager: bool = False,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: candidates → exact Jaccard ≥ t.
 
@@ -263,8 +262,7 @@ def minhash_dedup_pairs(
     and silently serves REPEAT invocations over the same input from
     cache (a benchmark of the warm path then no longer measures the
     detector at all). The pair set is the small end of the pipeline by
-    construction. ``eager=True`` additionally materializes the result
-    before returning (``_caching.finish``).
+    construction.
     """
     sh_long = _shingle_long(docs, id_col, text_col, shingle_len)
     cands = share(_candidates_from(sh_long, id_col, num_hashes, bands))
@@ -275,10 +273,9 @@ def minhash_dedup_pairs(
     )
     cand_docs = docs.join(cand_ids, id_col, "left_semi")
     sh_small = _shingle_table(cand_docs, id_col, text_col, shingle_len)
-    out = _jaccard_from(sh_small, cands, id_col).filter(
+    return _jaccard_from(sh_small, cands, id_col).filter(
         F.col("jaccard") >= threshold
     )
-    return finish(out, eager=eager)
 
 
 # --- Character-n-gram Jaccard (prefix-filtered set-similarity join) ---------
@@ -429,8 +426,6 @@ def simhash_near_pairs(
     bits: int = 32,
     bands: int = 4,
     max_hamming: int | None = None,
-    eager: bool = False,
-    band_join: str = "auto",
 ) -> DataFrame:
     """Near-dup pairs by SimHash **Hamming distance**, found at scale.
 
@@ -447,7 +442,7 @@ def simhash_near_pairs(
     sig = simhash(docs, id_col, text_col, bits)
     return hash_near_pairs(
         sig, "simhash", id_col=id_col, bits=bits, bands=bands,
-        max_hamming=max_hamming, eager=eager, band_join=band_join,
+        max_hamming=max_hamming,
     )
 
 
@@ -784,8 +779,6 @@ def hash_near_pairs(
     bits: int = 64,
     bands: int = 4,
     max_hamming: int | None = None,
-    eager: bool = False,
-    band_join: str = "auto",
 ) -> DataFrame:
     """Generic integer-signature Hamming near-dup pairs — the banding core
     of ``simhash_near_pairs`` exposed for ANY precomputed ``bits``-wide
@@ -805,14 +798,20 @@ def hash_near_pairs(
     is keyed on the canonicalized plan in the session CacheManager and
     silently serves REPEAT invocations over the same input from cache (a
     warm benchmark then stops measuring the signature pass entirely) and
-    leaks one entry per distinct input until session end. ``eager=True``
-    additionally materializes the result before returning
-    (``_caching.finish``).
+    leaks one entry per distinct input until session end.
 
-    ``band_join`` picks the self-join strategy — both forms emit the
-    identical pair set, only the exchanges differ:
+    The self-join takes one of two forms; both emit the identical pair
+    set, only the exchanges differ. The form is salted when ``bands ×``
+    Catalyst's size estimate of the base relations feeding the signature
+    plan (``_planstats.input_size_bytes`` — storage-grounded, unlike the
+    EiB-garbage propagated estimates of aggregate subtrees) exceeds the
+    session's autoBroadcastJoinThreshold — the same line past which the
+    planner itself would stop broadcasting — else broadcast. The input
+    bytes overestimate the banded table (text ≫ signature rows), so the
+    switch errs toward the scale-safe form, and an unknown size (the
+    estimate failed) picks salted too.
 
-    - ``"broadcast"`` (the small-scale form): unhinted join; the planner
+    - broadcast (the small-scale form): unhinted join; the planner
       broadcasts one banded side. Right while the banded table fits in a
       broadcast, because simhash-style band buckets are HEAVILY skewed —
       the majority-vote bits cluster, so one hot bucket can hold a large
@@ -820,31 +819,21 @@ def hash_near_pairs(
       bucket on ONE task (a single key AQE's skew-join split cannot break
       apart; measured 1.8 s → 6.0 s at sf0.1) while the broadcast build
       streams the hot bucket's probe side across ALL partitions.
-    - ``"salted"`` (the 100 TB form — a corpus-sized banded table cannot
+    - salted (the 100 TB form — a corpus-sized banded table cannot
       broadcast): SHUFFLE_HASH join on ``(bucket, salt)`` where the
       probe side's salt is ``pmod(xxhash64(id), n)`` for ``n =
       defaultParallelism`` (deterministic — guide §2.5's retry-safety
       rule) and the build side is exploded ``n`` ways, so a hot bucket's
       pair generation spreads over ``n`` tasks instead of one. Cost:
       build-side shuffle bytes × ``n`` (rows are three longs).
-    - ``"auto"`` (default): salted when ``bands ×`` Catalyst's size
-      estimate of the base relations feeding the signature plan
-      (``_planstats.input_size_bytes`` — storage-grounded, unlike the
-      EiB-garbage propagated estimates of aggregate subtrees) exceeds the
-      session's autoBroadcastJoinThreshold — the same line past which the
-      planner itself would stop broadcasting — else broadcast. The input
-      bytes overestimate the banded table (text ≫ signature rows), so the
-      switch errs toward the scale-safe form — and an unknown size (the
-      estimate failed) picks salted too.
     """
     if max_hamming is None:
         max_hamming = bands - 1
     width = bits // bands
     mask = (1 << width) - 1
-    if band_join == "auto":
-        est = input_size_bytes(df)
-        thr = broadcast_threshold_bytes(df.sparkSession)
-        band_join = "salted" if est is None or est * bands > thr else "broadcast"
+    est = input_size_bytes(df)
+    thr = broadcast_threshold_bytes(df.sparkSession)
+    salted = est is None or est * bands > thr
     buckets = F.array(
         *[
             F.lit(b * (1 << width))
@@ -861,7 +850,7 @@ def hash_near_pairs(
     b = long.select(
         F.col(id_col).alias("id_b"), F.col("__sig").alias("sig_b"), "__bkt"
     )
-    if band_join == "salted":
+    if salted:
         k = df.sparkSession.sparkContext.defaultParallelism
         a = a.withColumn(
             "__salt", F.pmod(F.xxhash64(F.col("id_a")), F.lit(k)).cast("int")
@@ -881,10 +870,9 @@ def hash_near_pairs(
         .dropDuplicates(["id_a", "id_b"])
     )
     ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("int")
-    out = cands.select("id_a", "id_b", ham.alias("hamming")).filter(
+    return cands.select("id_a", "id_b", ham.alias("hamming")).filter(
         F.col("hamming") <= max_hamming
     )
-    return finish(out, eager=eager)
 
 
 def ngram_novelty_scores(

@@ -23,12 +23,22 @@ from pyspark.sql import functions as F
 
 from ._caching import share
 
+# Edge budget of one partition: each round's edge set is coalesced to
+# ``n_edges // ROWS_PER_PARTITION + 1`` partitions, and a round whose input
+# fits the budget runs the one-exchange window forms of both stars.
+ROWS_PER_PARTITION = 1_000_000
+# Bound on the alternating-star rounds (the loop converges in O(log² n));
+# reaching it raises rather than iterating forever.
+MAX_ROUNDS = 50
+
 
 def _large_star(e_down: DataFrame, small: bool = False) -> DataFrame:
     """Connect every neighbor v > u to m(u) = min(Γ(u) ∪ {u}).
 
-    ``e_down`` is a DEDUPED down-edge set (v < u on every row) — the loop
-    invariant both stars preserve. The symmetric neighborhood view is a
+    ``e_down`` is a down-edge set (v < u on every row) — the loop
+    invariant both stars preserve — and, from round 1's output on, a
+    deduped one (round 1's input may repeat rows; see
+    ``connected_components``). The symmetric neighborhood view is a
     shuffle-free union of the two orientations: they are DISJOINT row
     sets (one has v < u, the other v > u), so no distinct is needed —
     the per-round ``_sym`` union+distinct exchange this replaces was pure
@@ -36,12 +46,12 @@ def _large_star(e_down: DataFrame, small: bool = False) -> DataFrame:
     up-orientation rows are exactly one row per unordered edge, which is
     all the v > u emission below consumes).
 
-    No trailing distinct: two sources can emit the same (v, m), but the
-    consumer ``_small_star`` is duplicate-tolerant and ends in the
-    round's one distinct.
+    No trailing distinct: two sources (or a repeated input row) can emit
+    the same (v, m), but the consumer ``_small_star`` is
+    duplicate-tolerant and ends in the round's one distinct.
 
     ``small``: the loop passes True when the driver-known edge count of
-    this round's input fits ``rows_per_partition`` — the whole graph is
+    this round's input fits ``ROWS_PER_PARTITION`` — the whole graph is
     one partition's worth of data, so the min-per-node is computed with a
     window over the SAME exchange the neighbor rows ride (one exchange,
     no join) instead of groupBy+join (two exchanges). The window form is
@@ -111,10 +121,7 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_rounds: int = 50,
-    rows_per_partition: int = 1_000_000,
     stats: dict | None = None,
-    edges_deduped: bool = False,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; the component
     id is the smallest node id in the component.
@@ -123,7 +130,7 @@ def connected_components(
     (a forest of stars: every edge points child → component root). The
     convergence probe is an aggregate checksum — two longs per round cross
     the driver, never data — and doubles as a free cardinality estimate: each
-    round's edge set is coalesced to ``count / rows_per_partition``
+    round's edge set is coalesced to ``count / ROWS_PER_PARTITION``
     partitions, so a near-dup graph that shrinks to thousands of edges stops
     paying 100 TB-scale task-scheduling overhead (a round is ~10 stages;
     at the parent's partitioning that was the dominant cost on small graphs),
@@ -137,20 +144,20 @@ def connected_components(
     unknown node connects nothing, and its non-NULL endpoint appears in
     the output only if some complete edge mentions it.
 
-    ``edges_deduped=True`` is the caller's guarantee that the input is
-    already one row per undirected edge with distinct non-null endpoints
-    (the near-dup detectors' pair tables are exactly that: id_a < id_b,
-    verified, dropDuplicates'd). The loop's initial dedup is then skipped
-    — at corpus scale that removes a full shuffle+aggregate of the edge
-    set before round 1 (orientation stays: it is a narrow projection).
+    Reversed and repeated input edges need no dedup pass before round 1
+    (at corpus scale that would be a full shuffle+aggregate of the edge
+    set): orientation is a narrow projection, both stars tolerate
+    duplicate rows, and round 1 ends in small-star's distinct, so every
+    round's output is the same edge set whether or not the input repeated
+    an edge. Only the initial count, which sizes round 1, sees the
+    repeats.
     """
     e = (
-        # orient every edge DOWN (u > v) before the initial dedup: the loop
-        # invariant (deduped down-edge set) that lets both star operations
-        # build their neighborhood views with a shuffle-free union instead
-        # of a per-round symmetrize+distinct exchange. The initial distinct
-        # also collapses (a,b)/(b,a) input pairs to one row, which the old
-        # per-round _sym had been re-deduplicating every round.
+        # orient every edge DOWN (u > v): the loop invariant that lets both
+        # star operations build their neighborhood views with a
+        # shuffle-free union instead of a per-round symmetrize+distinct
+        # exchange. (a,b)/(b,a) input pairs become repeated down-edges,
+        # which round 1's distinct collapses.
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("u"),
             F.least(F.col(src), F.col(dst)).alias("v"),
@@ -158,8 +165,6 @@ def connected_components(
         .where(F.col("u").isNotNull() & F.col("v").isNotNull())
         .where(F.col("u") != F.col("v"))
     )
-    if not edges_deduped:
-        e = e.distinct()
     # checkpoint once: the input is typically an expensive detector plan
     # (minhash/simhash), and round 0 would otherwise replay it per lineage
     # re-walk. LAZY: the count below materializes it, so the detector runs
@@ -169,7 +174,7 @@ def connected_components(
     e = share(e)
 
     def _parts_for(n: int) -> int:
-        return max(1, min(n // rows_per_partition + 1, 4096))
+        return max(1, min(n // ROWS_PER_PARTITION + 1, 4096))
 
     # Materialize the (lazily checkpointed) input and learn its size in ONE
     # job — the count rides the materialization the first round would have
@@ -178,9 +183,9 @@ def connected_components(
     # the session default until the first probe returns.
     n_edges = e.count()
     parts = _parts_for(n_edges)
-    small = n_edges <= rows_per_partition
+    small = n_edges <= ROWS_PER_PARTITION
     rounds = 0
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         rounds += 1
         e = _small_star(_large_star(e, small), small)
         e = e.coalesce(parts)  # narrow — merges, never reshuffles
@@ -247,9 +252,9 @@ def connected_components(
                 break
             n_edges = row.n_edges or 0
             parts = _parts_for(n_edges)
-            small = n_edges <= rows_per_partition
+            small = n_edges <= ROWS_PER_PARTITION
     else:
-        raise RuntimeError(f"connected_components: no fixpoint in {max_rounds} rounds")
+        raise RuntimeError(f"connected_components: no fixpoint in {MAX_ROUNDS} rounds")
     if stats is not None:
         stats["rounds"] = rounds
 
@@ -263,7 +268,7 @@ def connected_components(
     # as the parent), and a size-m component's star has m-1 edges, so no
     # component ever empties. The output therefore derives from the final
     # edge set alone: children label with their (unique at fixpoint; min
-    # for max_rounds safety) parent, parents label with themselves — no
+    # for MAX_ROUNDS safety) parent, parents label with themselves — no
     # separate node inventory off the input, no final left join (two
     # exchanges and a join removed from every invocation; at corpus scale
     # the inventory was a full union+distinct pass over the edge set).
@@ -282,15 +287,12 @@ def keep_canonical(
     id_col: str = "doc_id",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    edges_deduped: bool = False,
 ) -> DataFrame:
     """Drop every near-duplicate except one canonical survivor per cluster
     (the smallest id). Docs not in any pair pass through untouched — the
     anti-join only shuffles the (tiny) non-canonical id set against the
     corpus, broadcast when it fits."""
-    comp = connected_components(
-        pairs, src=id_a, dst=id_b, edges_deduped=edges_deduped
-    )
+    comp = connected_components(pairs, src=id_a, dst=id_b)
     losers = comp.where(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
@@ -304,7 +306,6 @@ def keep_best(
     id_col: str = "doc_id",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    edges_deduped: bool = False,
 ) -> DataFrame:
     """``keep_canonical`` with a POLICY: per near-dup cluster keep the row
     with the highest ``score_col`` (ties → smallest id) instead of blindly
@@ -316,9 +317,7 @@ def keep_best(
     proportional to the duplicates, never the corpus."""
     from pyspark.sql import Window
 
-    comp = connected_components(
-        pairs, src=id_a, dst=id_b, edges_deduped=edges_deduped
-    )
+    comp = connected_components(pairs, src=id_a, dst=id_b)
     scored = comp.join(
         docs.select(
             F.col(id_col).alias("node"), F.col(score_col).alias("__s")

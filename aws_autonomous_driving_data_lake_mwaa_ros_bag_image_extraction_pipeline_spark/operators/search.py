@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import text as T
 from ..functions.hashing import quantize
-from ._caching import finish, share
+from ._caching import share
 
 
 def bm25_topk(
@@ -142,7 +142,6 @@ def tfidf_cosine_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     digits: int = 4,
-    eager: bool = False,
 ) -> DataFrame:
     """Sparse lexical similarity: document pairs with TF-IDF cosine ≥
     ``threshold`` via an inverted-index self-join — the term-space
@@ -165,8 +164,7 @@ def tfidf_cosine_pairs(
     freed on GC — a persist() entry lives in the session CacheManager
     keyed on the canonicalized plan, silently serving repeat invocations
     over the same input from cache and stacking one entry per distinct
-    input until session end. ``eager=True`` additionally materializes
-    the result before returning (``_caching.finish``).
+    input until session end.
     """
     toks = docs.select(
         F.col(id_col),
@@ -214,10 +212,9 @@ def tfidf_cosine_pairs(
         / (F.col("na.nrm") * F.col("nb.nrm")),
         digits,
     )
-    out = (
+    return (
         dots.join(norms.alias("na"), dots["id_a"] == F.col(f"na.{id_col}"))
         .join(norms.alias("nb"), dots["id_b"] == F.col(f"nb.{id_col}"))
         .select("id_a", "id_b", cos.alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
-    return finish(out, eager=eager)

@@ -166,7 +166,6 @@ def lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     queries: DataFrame | None = None,
-    late_attach: bool | None = None,
 ) -> DataFrame:
     """Approximate top-k: compare only within shared LSH buckets.
 
@@ -177,16 +176,21 @@ def lsh_topk(
     probe set via broadcast semi-join — per-query results are unchanged
     (ranking is per-query), the candidate join just skips non-probes.
 
-    ``late_attach`` picks where the dim-sized vectors enter the plan; the
-    two forms return identical rows (same vectors, same double
-    arithmetic), only the exchanges differ:
+    Where the dim-sized vectors enter the plan depends on the corpus
+    size; the two forms return identical rows (same vectors, same double
+    arithmetic), only the exchanges differ. The form is late once
+    Catalyst's size estimate of the corpus crosses ``LATE_ATTACH_BYTES``
+    (1 GiB) — so the declared query stays the measured-fastest early form
+    at bench scale and flips to the exchange-light layout where the
+    payload bytes start to dominate — and late when the size is unknown
+    (the estimate failed), the scale-safe reading.
 
-    - ``False`` (right for single-box/bench scale): vectors ride
+    - early (right for single-box/bench scale): vectors ride
       the bucket rows through the bucket join and the pair dedup — fewest
       stages, and at local scale per-stage latency dominates exchange
       bytes (measured at sf0.1: the late form's two extra join stages
       cost ~0.3 s against ~50 MB of shuffle saved).
-    - ``True`` (the 100 TB setting): candidate generation and dedup run
+    - late (the 100 TB setting): candidate generation and dedup run
       over (id, table, bucket) rows ONLY, and vectors+norms attach to the
       deduped pair set by id (guide-§8: decide with small rows, move the
       heavy payload once). The early form ships each vector n_tables
@@ -195,15 +199,9 @@ def lsh_topk(
       until the verify join, where each vector moves once per candidate
       degree — the minimum the verify can do. include_vec=False also
       halves the Python-boundary bytes of the bucket pass.
-    - ``None`` (default) auto-selects: late once Catalyst's size estimate
-      of the corpus crosses ``LATE_ATTACH_BYTES`` (1 GiB) — so the
-      declared query stays the measured-fastest early form at bench scale
-      and flips to the exchange-light layout where the payload bytes start
-      to dominate.
     """
-    if late_attach is None:
-        est = input_size_bytes(emb)
-        late_attach = est is not None and est > LATE_ATTACH_BYTES
+    est = input_size_bytes(emb)
+    late_attach = est is None or est > LATE_ATTACH_BYTES
     bk = lsh_buckets(
         emb, dim, n_tables, n_bits, id_col, vec_col,
         include_vec=not late_attach,

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from ..functions import hashing as H
 from ..functions import text as T
 from ..functions.hashing import quantize
-from ._caching import finish, share
+from ._caching import share
 
 # Tiny per-language marker lexicons for the n-gram/stopword heuristic.
 LANG_MARKERS: dict[str, list[str]] = {
@@ -311,7 +311,6 @@ def winnow_overlap_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     window: int | None = None,
-    eager: bool = False,
 ) -> DataFrame:
     """The pairing step of winnowing/MOSS-style local-fingerprint
     plagiarism detection: documents sharing >= ``min_shared`` sampled
@@ -354,8 +353,7 @@ def winnow_overlap_pairs(
     would serve repeat invocations over the same input from cache and
     outlive the call (the previous persist()-based formulation
     additionally measured THREE selector re-runs per warm call —
-    concurrent AQE query stages racing the cache fill); ``eager``
-    controls only result materialization.
+    concurrent AQE query stages racing the cache fill).
 
     The df-ceiling is a groupBy(h) count over the checkpointed table plus
     a left-anti join against the (few) over-ceiling hashes: the groupBy
@@ -392,7 +390,7 @@ def winnow_overlap_pairs(
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-    out = (
+    return (
         pairs.join(
             sz.select(F.col(id_col).alias("id_a"), F.col("__n").alias("__na")),
             "id_a",
@@ -408,7 +406,6 @@ def winnow_overlap_pairs(
             ).alias("overlap"),
         )
     )
-    return finish(out, eager=eager)
 
 
 def repetition_scores(

@@ -1137,12 +1137,8 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure."""
     from ..operators import graph
 
-    # edges_deduped: the minhash pair table is one verified row per
-    # unordered pair (id_a < id_b, dropDuplicates'd) — CC skips its input
-    # dedup shuffle (graph.connected_components).
     comp = graph.connected_components(
-        _minhash_pairs_df(spark, sf_dir), src="id_a", dst="id_b",
-        edges_deduped=True,
+        _minhash_pairs_df(spark, sf_dir), src="id_a", dst="id_b"
     )
     return comp.select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
@@ -1169,9 +1165,7 @@ def near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import graph
 
     docs = _t(spark, sf_dir, "documents")
-    kept = graph.keep_canonical(
-        docs, _minhash_pairs_df(spark, sf_dir), edges_deduped=True
-    )
+    kept = graph.keep_canonical(docs, _minhash_pairs_df(spark, sf_dir))
     return kept.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
 
 
@@ -1719,10 +1713,7 @@ def q_best_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     q = textstats.quality_scores(docs).select("doc_id", "quality")
     scored = docs.select("doc_id", "source").join(q, "doc_id")
-    kept = graph.keep_best(
-        scored, _minhash_pairs_df(spark, sf_dir), "quality",
-        edges_deduped=True,
-    )
+    kept = graph.keep_best(scored, _minhash_pairs_df(spark, sf_dir), "quality")
     return kept.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         H.quantize(
@@ -3800,7 +3791,7 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(k1.select(F.col("doc_id").alias("id_a")), "id_a", "left_semi")
         .join(k1.select(F.col("doc_id").alias("id_b")), "id_b", "left_semi")
     )
-    k2 = graph.keep_canonical(k1, pairs, edges_deduped=True)
+    k2 = graph.keep_canonical(k1, pairs)
     q = textstats.quality_scores(docs).select("doc_id", "quality")
     k3 = k2.join(q, "doc_id").filter(F.col("quality") >= 0.3).select("doc_id")
     cont = curation.contamination_overlap(

@@ -45,8 +45,9 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+from pyspark.sql.types import StructType
 
-from .frames_source import TOPIC_MESSAGES_DDL
+from ..schemas import TOPIC_MESSAGES_SCHEMA
 from .listing import list_bag_keys
 
 # Quarantine row for a bag whose decode raises: the reserved topic marks
@@ -136,8 +137,8 @@ class BagDataSource(DataSource):
     def name(cls) -> str:
         return "rosbag"
 
-    def schema(self) -> str:
-        return TOPIC_MESSAGES_DDL
+    def schema(self) -> StructType:
+        return TOPIC_MESSAGES_SCHEMA
 
     def reader(self, schema) -> BagDataSourceReader:
         return BagDataSourceReader(self.options)

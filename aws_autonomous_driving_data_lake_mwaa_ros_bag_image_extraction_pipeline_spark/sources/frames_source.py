@@ -39,11 +39,6 @@ from .rosbag_format import (
     open_bag,
 )
 
-TOPIC_MESSAGES_DDL = (
-    "bag_id string, topic string, rosbagTimestamp long, seq int, "
-    "payload map<string,string>"
-)
-
 
 def read_frames(spark: SparkSession, path: str) -> DataFrame:
     """PNG frames as a multimodal table (S10 + P5-P8).

@@ -89,26 +89,22 @@ def main() -> None:
     # 4c) ExactSubstr maximal duplicated spans (Lee et al. ACL'22):
     # alignment-free exact token offsets of every verbatim lift — the
     # span report a surgical dedup pass cuts with. The detect+scrub
-    # pipeline shares ONE detector pass: eager=True materializes the
-    # span table (persisted gram intermediate freed before return — the
-    # bounded-persist discipline for long-lived sessions) and
-    # scrub_duplicated_spans(spans=...) consumes it instead of re-running
-    # the corpus gram scan (measured 4.56 s -> 1.72 s at sf0.1).
-    spans = curation.duplicated_spans(docs, k=8, eager=True)
-    near_b = dedup.minhash_dedup_pairs(docs, threshold=0.8, eager=True)
+    # pipeline shares ONE detector pass: the span table is materialized
+    # once (localCheckpoint) and scrub_duplicated_spans(spans=...)
+    # consumes it instead of re-running the corpus gram scan.
+    spans = curation.duplicated_spans(docs, k=8).localCheckpoint(eager=True)
     scrub = curation.scrub_duplicated_spans(docs, spans=spans)
     n_cut = scrub.filter(F.col("n_dropped") > 0).count()
     print(f"== dup spans: {spans.count()} "
-          f"(eager minhash pairs: {near_b.count()}; "
-          f"docs with spans scrubbed: {n_cut})")
+          f"(docs with spans scrubbed: {n_cut})")
 
     # 4d) bounded convergence wrapper: detect→scrub until the scrubbed
     # corpus has NO duplicated spans — the merged-island residual of
     # full-span-hash clustering (a document whose maximal span merged two
     # adjacent lifts keeps a copy through pass 1) needs a second pass.
-    # Each pass shares one gram scan (eager spans=) and localCheckpoints
-    # its output so lineage stays flat; same schema as the single-pass
-    # scrub with cumulative n_dropped.
+    # Each pass shares one materialized span table between its probe and
+    # its scrub (spans=) and localCheckpoints its output so lineage stays
+    # flat; same schema as the single-pass scrub with cumulative n_dropped.
     clean = curation.scrub_until_clean(docs, k=8)
     n_dropped = clean.agg(F.sum("n_dropped")).first()[0]
     print(f"== scrub_until_clean: {clean.count()} docs, "

@@ -883,9 +883,8 @@ def test_span_dedup_mega_duplicated_gram(spark):
 def test_scrub_spans_shared_detector_parity(spark):
     """A pipeline running detect AND scrub pays the gram pass once:
     scrub_duplicated_spans(spans=<precomputed detector output>) returns
-    the exact rows the self-computing form produces, both with the lazy
-    detector and with the eager (persisted gram table, localCheckpointed
-    spans) variant — and the eager detector itself matches the lazy one."""
+    the exact rows the self-computing form produces, with the detector
+    output passed lazily or materialized (localCheckpoint) first."""
     from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.operators.curation import (
         duplicated_spans,
         scrub_duplicated_spans,
@@ -901,15 +900,10 @@ def test_scrub_spans_shared_detector_parity(spark):
         ],
         "doc_id long, text string",
     )
-    want_spans = sorted(map(tuple, duplicated_spans(docs, k=4).collect()))
-    assert (
-        sorted(map(tuple, duplicated_spans(docs, k=4, eager=True).collect()))
-        == want_spans
-    )
     want = sorted(map(tuple, scrub_duplicated_spans(docs, k=4).collect()))
-    for eager in (False, True):
-        pre = duplicated_spans(docs, k=4, eager=eager)
-        got = scrub_duplicated_spans(docs, spans=pre)
+    pre = duplicated_spans(docs, k=4)
+    for spans in (pre, pre.localCheckpoint(eager=True)):
+        got = scrub_duplicated_spans(docs, spans=spans)
         assert sorted(map(tuple, got.collect())) == want
     # k/min_count are detector-only knobs: with spans given they are
     # ignored, not silently re-applied

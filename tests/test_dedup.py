@@ -297,18 +297,16 @@ def test_exact_shingle_jaccard_ground_truth(spark):
     assert mh <= set(exact)
 
 
-def test_eager_variants_bound_cache_lifetime(spark):
-    """Cache-lifetime contract of the multi-consumer detectors since the
-    r21 optimization pass: NONE of them touch the session CacheManager.
-    Multi-consumer sharing is a per-call lazy ``localCheckpoint``
-    (minhash candidates, simhash banded table, tfidf weight table) or
-    exchange reuse via canonicalization (winnow), so the lazy path must
-    leave the cache manager EMPTY — a persist() entry keyed on the
-    canonicalized input plan would silently serve REPEAT invocations
-    over the same input from cache (unmeasured warm paths) and stack one
-    entry per distinct input until session end. ``eager=True`` (result
-    materialization) returns identical rows and also leaves the cache
-    manager empty."""
+def test_detectors_leave_cache_manager_empty(spark):
+    """Cache-lifetime contract of the multi-consumer detectors: NONE of
+    them touch the session CacheManager. Multi-consumer sharing is a
+    per-call lazy ``localCheckpoint`` (minhash candidates, simhash banded
+    table, tfidf weight table, winnow fingerprints), so building and
+    running each detector must leave the cache manager EMPTY — a
+    persist() entry keyed on the canonicalized input plan would silently
+    serve REPEAT invocations over the same input from cache (unmeasured
+    warm paths) and stack one entry per distinct input until session
+    end."""
     from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.operators import (
         search,
         textstats,
@@ -325,20 +323,15 @@ def test_eager_variants_bound_cache_lifetime(spark):
     )
     cm = spark._jsparkSession.sharedState().cacheManager()
     ops = [
-        lambda **kw: simhash_near_pairs(docs, **kw),
-        lambda **kw: search.tfidf_cosine_pairs(docs, threshold=0.8, **kw),
-        lambda **kw: minhash_dedup_pairs(docs, threshold=0.5, **kw),
-        lambda **kw: textstats.winnow_overlap_pairs(docs, window=8, **kw),
+        lambda: simhash_near_pairs(docs),
+        lambda: search.tfidf_cosine_pairs(docs, threshold=0.8),
+        lambda: minhash_dedup_pairs(docs, threshold=0.5),
+        lambda: textstats.winnow_overlap_pairs(docs, window=8),
     ]
     for op in ops:
         spark.catalog.clearCache()
-        lazy = op()
-        want = sorted(map(tuple, lazy.collect()))
-        assert cm.isEmpty()  # lazy path: no cache-manager entry either
-
-        got = op(eager=True)
-        assert cm.isEmpty()  # eager: nothing persisted survives the call
-        assert sorted(map(tuple, got.collect())) == want
+        op().collect()
+        assert cm.isEmpty()
     spark.catalog.clearCache()
 
 
@@ -348,29 +341,40 @@ def _fmt_plan(df):
     )
 
 
-def test_hash_near_pairs_salted_parity_and_plan(spark, docs):
+def test_hash_near_pairs_salted_parity_and_plan(spark, docs, tmp_path):
     """The salted shuffle band join (the 100 TB path — a corpus-sized
     banded table cannot broadcast) emits the IDENTICAL pair set as the
     broadcast form, with no broadcast join in its plan and the salt in
-    the join key."""
-    bc = dedup.simhash_near_pairs(docs, band_join="broadcast")
-    sa = dedup.simhash_near_pairs(docs, band_join="salted")
-    rows_bc = sorted((r.id_a, r.id_b, r.hamming) for r in bc.collect())
-    rows_sa = sorted((r.id_a, r.id_b, r.hamming) for r in sa.collect())
+    the join key. Each form is forced through the broadcast threshold the
+    size-driven choice reads, over a parquet copy of ``docs`` (a known
+    size estimate)."""
+    docs.write.parquet(str(tmp_path / "docs"))
+    pq_docs = spark.read.parquet(str(tmp_path / "docs"))
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(1 << 40))
+        bc = dedup.simhash_near_pairs(pq_docs)
+        rows_bc = sorted((r.id_a, r.id_b, r.hamming) for r in bc.collect())
+        assert "__salt" not in _fmt_plan(bc)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+        sa = dedup.simhash_near_pairs(pq_docs)
+        rows_sa = sorted((r.id_a, r.id_b, r.hamming) for r in sa.collect())
+        plan = _fmt_plan(sa)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert rows_sa == rows_bc
     assert rows_bc  # parity over a non-empty pair set
-    plan = _fmt_plan(sa)
     assert "BroadcastHashJoin" not in plan
     assert "__salt" in plan
 
 
 def test_hash_near_pairs_auto_band_join_thresholds(spark, docs, monkeypatch):
-    """``band_join="auto"`` switches on the leaf-relation size estimate vs
+    """The band-join form switches on the leaf-relation size estimate vs
     the session's autoBroadcastJoinThreshold — the same line past which
     the planner itself would stop broadcasting. Parquet input: a known
     (file-size) estimate. A Python-built LocalRelation has NO size
-    estimate (LogicalRDD → defaultSizeInBytes = Long.Max), and auto must
-    treat unknown as not-broadcastable — the scale-safe reading."""
+    estimate (LogicalRDD → defaultSizeInBytes = Long.Max), and the switch
+    must treat unknown as not-broadcastable — the scale-safe reading."""
     pq_docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")

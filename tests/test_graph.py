@@ -31,31 +31,45 @@ def _uf_components(edges: list[tuple[int, int]]) -> dict[int, int]:
     return out
 
 
-def _check(spark, edges: list[tuple[int, int]]) -> None:
+def _regimes(monkeypatch):
+    """Run the caller's loop body once per CC regime. Every graph here is
+    far below the default edge budget, so it alone would only ever run
+    the small regime (window stars, semi-join probe); a budget of 1
+    forces the big one (groupBy+join stars, aggregate probe, coalesce
+    sizing) — the path a corpus-scale graph takes."""
+    for budget in (graph.ROWS_PER_PARTITION, 1):
+        monkeypatch.setattr(graph, "ROWS_PER_PARTITION", budget)
+        yield budget
+
+
+def _check(spark, monkeypatch, edges: list[tuple[int, int]]) -> None:
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r.node: r.component
-        for r in graph.connected_components(df).collect()
-    }
-    assert got == _uf_components(edges)
+    want = _uf_components(edges)
+    for budget in _regimes(monkeypatch):
+        got = {
+            r.node: r.component
+            for r in graph.connected_components(df).collect()
+        }
+        assert got == want, budget
 
 
-def test_cc_two_triangles_and_bridge(spark):
-    _check(spark, [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (3, 10)])
+def test_cc_two_triangles_and_bridge(spark, monkeypatch):
+    _check(spark, monkeypatch, [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (3, 10)])
 
 
-def test_cc_long_chain(spark):
+def test_cc_long_chain(spark, monkeypatch):
     """A path graph needs multiple star rounds — exercises the iteration."""
-    _check(spark, [(i, i + 1) for i in range(40)])
+    _check(spark, monkeypatch, [(i, i + 1) for i in range(40)])
 
 
-def test_cc_star_and_singletons(spark):
-    _check(spark, [(100, i) for i in range(5)] + [(7, 8), (20, 21)])
+def test_cc_star_and_singletons(spark, monkeypatch):
+    _check(spark, monkeypatch, [(100, i) for i in range(5)] + [(7, 8), (20, 21)])
 
 
-def test_cc_pseudorandom(spark):
+def test_cc_pseudorandom(spark, monkeypatch):
     """Deterministic pseudo-random graph, including duplicate and reversed
-    edges, against union-find."""
+    edges, against union-find: CC runs no dedup pass before round 1, so
+    this pins that the repeats change nothing in either regime."""
     edges = []
     x = 7
     for _ in range(120):
@@ -66,7 +80,8 @@ def test_cc_pseudorandom(spark):
         if a != b:
             edges.append((a, b))
     edges += [(b, a) for a, b in edges[:10]]
-    _check(spark, edges)
+    edges += edges[10:20]
+    _check(spark, monkeypatch, edges)
 
 
 def test_keep_canonical(spark):
@@ -83,7 +98,7 @@ def test_keep_canonical(spark):
     assert kept == [0, 1, 2, 4, 7]
 
 
-def test_cc_adversarial_chain_logarithmic_rounds(spark):
+def test_cc_adversarial_chain_logarithmic_rounds(spark, monkeypatch):
     """Worst-case diameter: a 2048-node path collapses in O(log n) rounds
     (Kiveris et al. bound), not O(diameter) — the property that makes the
     alternating-star algorithm usable on billion-node near-dup graphs."""
@@ -95,17 +110,19 @@ def test_cc_adversarial_chain_logarithmic_rounds(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src long, dst long"
     )
-    stats: dict = {}
-    comp = connected_components(edges, stats=stats)
-    rows = comp.collect()
-    assert len(rows) == n
-    assert {r.component for r in rows} == {0}
-    # log2(2048)=11; each alternating round roughly squares star reach.
-    # +fixpoint-detection round; bound generous but far below diameter.
-    assert stats["rounds"] <= 16, stats
+    for budget in _regimes(monkeypatch):
+        stats: dict = {}
+        comp = connected_components(edges, stats=stats)
+        rows = comp.collect()
+        assert len(rows) == n
+        assert {r.component for r in rows} == {0}
+        # log2(2048)=11; each alternating round roughly squares star
+        # reach. +fixpoint-detection round; bound generous but far below
+        # diameter.
+        assert stats["rounds"] <= 16, (budget, stats)
 
 
-def test_cc_adversarial_star_of_stars(spark):
+def test_cc_adversarial_star_of_stars(spark, monkeypatch):
     """Hub-of-hubs (heavy skew: one node with 512 spokes, each spoke a
     sub-hub of 8): converges in a handful of rounds and one component."""
     from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.operators.graph import (
@@ -122,12 +139,13 @@ def test_cc_adversarial_star_of_stars(spark):
             edges.append((hub, nid))
             nid += 1
     df = spark.createDataFrame(edges, "src long, dst long")
-    stats: dict = {}
-    comp = connected_components(df, stats=stats)
-    rows = comp.collect()
-    assert len(rows) == nid
-    assert {r.component for r in rows} == {0}
-    assert stats["rounds"] <= 6, stats
+    for budget in _regimes(monkeypatch):
+        stats: dict = {}
+        comp = connected_components(df, stats=stats)
+        rows = comp.collect()
+        assert len(rows) == nid
+        assert {r.component for r in rows} == {0}
+        assert stats["rounds"] <= 6, (budget, stats)
 
 
 def test_pagerank_symmetric_cycle(spark):

@@ -5,9 +5,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.schemas import (
+    TOPIC_MESSAGES_SCHEMA,
+)
 from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.sources import (
     fixtures,
-    frames_source,
 )
 from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.streaming import (
     pipeline as sp,
@@ -115,7 +117,7 @@ def test_tick_exactly_once_and_failure_marking(spark, tmp_path):
             for k in good
         ]
         sdf = spark.createDataFrame(
-            pd.concat(frames), frames_source.TOPIC_MESSAGES_DDL
+            pd.concat(frames), TOPIC_MESSAGES_SCHEMA
         )
         sdf.write.mode("append").parquet(out)
         return failed

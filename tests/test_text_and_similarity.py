@@ -226,33 +226,13 @@ def test_lsh_topk_neighbors_are_exact_cosines(spark, emb):
         assert r.cosine == pytest.approx(round(_cos(a, b), 6), abs=1e-6)
 
 
-def test_lsh_topk_late_attach_parity(spark):
-    """The late_attach=True form (candidates/dedup over ids only, vectors
-    joined back at verify — the 100 TB exchange layout) returns row-for-row
-    the same result as the default early form: same pairs, same ranks,
-    bit-equal cosines (same vectors, same double arithmetic)."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    early = similarity.lsh_topk(emb, dim=64, k=5, n_tables=4, n_bits=8)
-    late = similarity.lsh_topk(
-        emb, dim=64, k=5, n_tables=4, n_bits=8, late_attach=True
-    )
-    rows_e = sorted(map(tuple, early.collect()))
-    rows_l = sorted(map(tuple, late.collect()))
-    assert rows_e == rows_l
-    # the late plan's candidate dedup must not carry the vectors: no
-    # embedding column below the pair-level HashAggregate
-    plan = late._jdf.queryExecution().optimizedPlan().toString()
-    agg_lines = [
-        ln for ln in plan.splitlines() if "Aggregate" in ln and "query_id" in ln
-    ]
-    assert agg_lines and all("qv" not in ln for ln in agg_lines)
-
-
 def test_lsh_topk_late_attach_autoswitch(spark, monkeypatch):
-    """``late_attach=None`` (the default) picks the form from Catalyst's
+    """lsh_topk picks where the vectors enter the plan from Catalyst's
     corpus-size estimate vs LATE_ATTACH_BYTES: early below the line (this
-    corpus), late above it (threshold forced to 1 byte) — and the
-    auto-picked late form stays row-identical to early."""
+    corpus), late above it (threshold forced to 1 byte) and late when the
+    size is unknown (the scale-safe reading). The late form's candidate
+    dedup carries ids only, no vectors, and it returns row-for-row the
+    early form's result: same pairs, same ranks, bit-equal cosines."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     early = similarity.lsh_topk(emb, dim=64, k=5, n_tables=4, n_bits=8)
 
@@ -266,15 +246,20 @@ def test_lsh_topk_late_attach_autoswitch(spark, monkeypatch):
         assert lines
         return any("qv" in ln for ln in lines)
 
-    # below the threshold the default is the early form (vectors ride the
-    # candidate dedup)
+    # below the threshold: the early form (vectors ride the candidate
+    # dedup)
     assert _agg_has_qv(early)
-    monkeypatch.setattr(similarity, "LATE_ATTACH_BYTES", 1)
-    auto_late = similarity.lsh_topk(emb, dim=64, k=5, n_tables=4, n_bits=8)
+    want = sorted(map(tuple, early.collect()))
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "LATE_ATTACH_BYTES", 1)
+        auto_late = similarity.lsh_topk(emb, dim=64, k=5, n_tables=4, n_bits=8)
     assert not _agg_has_qv(auto_late)
-    assert sorted(map(tuple, auto_late.collect())) == sorted(
-        map(tuple, early.collect())
-    )
+    assert sorted(map(tuple, auto_late.collect())) == want
+    # unknown size (the estimate failed): late, same rows
+    monkeypatch.setattr(similarity, "input_size_bytes", lambda df: None)
+    unknown = similarity.lsh_topk(emb, dim=64, k=5, n_tables=4, n_bits=8)
+    assert not _agg_has_qv(unknown)
+    assert sorted(map(tuple, unknown.collect())) == want
 
 
 def test_ivf_index_lifecycle(spark, tmp_path):

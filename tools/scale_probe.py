@@ -235,20 +235,15 @@ def main() -> None:
         ] = round(bt, 3)
         return {
             "exact_dedup_groups": lambda: dedup.exact_dedup_groups(docs),
-            # eager=True on every persisting detector: the probe is
-            # exactly the long-lived-session-over-distinct-inputs case the
-            # bounded variant exists for — lazily, each multiple would park
-            # its own MEMORY_AND_DISK entries (k=1,2,5 replicas) in the
-            # cache manager and distort the k=10 timings with eviction
-            # pressure, AND the min-of-2 re-run would read the cached
-            # intermediate instead of re-running the pipeline (measured:
-            # minhash k=10 12.35 s lazy vs the re-run's honest number)
+            # The pair detectors' results are materialized inside the
+            # timed call (localCheckpoint(eager=True)): the protocol the
+            # committed SCALE_PROBE.json figures were taken under.
             "minhash_dedup_pairs": lambda: dedup.minhash_dedup_pairs(
-                spread, threshold=0.8, eager=True
-            ),
+                spread, threshold=0.8
+            ).localCheckpoint(eager=True),
             "simhash_near_pairs": lambda: dedup.simhash_near_pairs(
-                docs, eager=True
-            ),
+                docs
+            ).localCheckpoint(eager=True),
             "lsh_topk": lambda: similarity.lsh_topk(
                 emb, dim=64, k=5, queries=queries0
             ),
@@ -263,8 +258,8 @@ def main() -> None:
             ),
             "near_dup_clusters": lambda: graph.connected_components(
                 dedup.minhash_dedup_pairs(
-                    spread, threshold=0.8, eager=True
-                ),
+                    spread, threshold=0.8
+                ).localCheckpoint(eager=True),
                 src="id_a",
                 dst="id_b",
             ),
@@ -300,11 +295,11 @@ def main() -> None:
             # df-ceiling-pruned inverted-index self-join; rotated replicas
             # share no 16-char substrings, so true pairs stay linear in k
             "winnow_overlap_pairs": lambda: textstats.winnow_overlap_pairs(
-                docs, eager=True
-            ),
-            "winnow_guaranteed_pairs": lambda: (
-                textstats.winnow_overlap_pairs(docs, window=8, eager=True)
-            ),
+                docs
+            ).localCheckpoint(eager=True),
+            "winnow_guaranteed_pairs": lambda: textstats.winnow_overlap_pairs(
+                docs, window=8
+            ).localCheckpoint(eager=True),
             # ExactSubstr span mining: overlapping-gram hash window +
             # islands merge; rotated replicas share no 8-token grams, so
             # duplicated positions (and spans) stay linear in k
@@ -341,8 +336,7 @@ def main() -> None:
             results.setdefault(name, {"sec": {}})["sec"][str(k)] = dt
             print(f"  k={k:>2} {name:24s} {dt:7.2f}s", file=sys.stderr)
         # drop anything a lazy operator parked for this multiple's inputs
-        # before the next multiple is timed (bounded-memory protocol; the
-        # eager detectors already cleaned up after themselves)
+        # before the next multiple is timed (bounded-memory protocol)
         spark.catalog.clearCache()
 
     shutil.rmtree(hnsw_tmp, ignore_errors=True)
