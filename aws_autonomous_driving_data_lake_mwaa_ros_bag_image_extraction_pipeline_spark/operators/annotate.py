@@ -26,10 +26,10 @@ model is real and content-derived: a pure-numpy color-blob detector
 emits one Instance per connected component — labels change when pixels
 change. Its kernel is whole-array numpy, one pass per frame: the class
 image by channel comparisons, then the 4-connected components of all four
-classes at once (``_components``: row runs, overlap edges, root-hooking
-union-find), so no Python loop runs per row or per pixel. It is
-deliberately simple (no learned weights ship with the package); swap in a
-real network via ``model_fn``.
+classes at once (``_components``: row runs, overlap edges, and the
+package's one union-find, ``graph.union_find``), so no Python loop runs
+per row or per pixel. It is deliberately simple (no learned weights ship
+with the package); swap in a real network via ``model_fn``.
 """
 
 from __future__ import annotations
@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 
 from ..functions import png
 from ..schemas import LABELS_TABLE_SCHEMA
+from .graph import union_find
 
 ANNOTATED_SCHEMA = (
     "bag_id string, camera string, frame_index int, annotated binary"
@@ -182,14 +183,10 @@ def _components(classes: np.ndarray) -> np.ndarray:
       that it touches are one contiguous index range, found with
       ``searchsorted`` on the flat ``(row, x)`` start keys; only the
       same-class ones become edges;
-    - union-find by root hooking: every edge between two different roots
-      hooks the larger root under the smaller (``np.minimum.at``), then
-      pointer jumping flattens every tree to its root; repeat until no
-      edge joins two roots. Hooking roots, not nodes, merges whole trees
-      each round; hooking nodes needs a round per step of the longest
-      path, which on a vertical serpentine is most of the image. A
-      component's root is its smallest run index, i.e. its first run in
-      raster order;
+    - ``graph.union_find`` over the runs (root hooking, so a vertical
+      serpentine, whose longest path is most of the image, still closes
+      in a few rounds): a component's root is its smallest run index,
+      i.e. its first run in raster order;
     - boxes and areas: ``ufunc.at`` / ``bincount`` over the run table.
     """
     h, w = classes.shape
@@ -224,21 +221,7 @@ def _components(classes: np.ndarray) -> np.ndarray:
     same = cls[a] == cls[b]
     a, b = a[same], b[same]
 
-    parent = np.arange(n)
-    while a.size:
-        ra, rb = parent[a], parent[b]
-        apart = ra != rb
-        if not apart.any():
-            break
-        a, b, ra, rb = a[apart], b[apart], ra[apart], rb[apart]
-        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
-        while True:
-            grand = parent[parent]
-            if (grand == parent).all():
-                break
-            parent = grand
-
-    roots, comp = np.unique(parent, return_inverse=True)
+    roots, comp = np.unique(union_find(n, a, b), return_inverse=True)
     k = roots.size
     y0 = np.full(k, h, dtype=np.int64)
     bx0 = np.full(k, w, dtype=np.int64)

@@ -250,12 +250,11 @@ def minhash_dedup_pairs(
     pair (semi-join first): at scale candidates are a vanishing fraction of
     the corpus, so the n-gram work never runs corpus-wide a second time.
 
-    ``cands`` is locally checkpointed (lazy): it feeds THREE consumers
-    (both id projections of the semi-join filter and the final verify
-    join), and each re-evaluation would re-run the corpus-wide shingle →
-    signature → band self-join — the whole candidate-generation cost,
-    twice more (measured 1.8 s → 1.4 s at sf0.1; at lake scale the delta
-    is the full detector pass ×2). ``localCheckpoint`` rather than
+    ``cands`` is locally checkpointed (lazy): it feeds TWO consumers
+    (the semi-join filter's id list, one explode of both id columns, and
+    the final verify join), and a re-evaluation would re-run the
+    corpus-wide shingle → signature → band self-join — the whole
+    candidate-generation cost. ``localCheckpoint`` rather than
     ``persist``: a fresh RDD per CALL, shared by every consumer within
     the call and freed by the ContextCleaner on GC — where a persist()
     entry is keyed on the canonicalized plan in the session CacheManager
@@ -266,11 +265,9 @@ def minhash_dedup_pairs(
     """
     sh_long = _shingle_long(docs, id_col, text_col, shingle_len)
     cands = share(_candidates_from(sh_long, id_col, num_hashes, bands))
-    cand_ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .union(cands.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
+    cand_ids = cands.select(
+        F.explode(F.array("id_a", "id_b")).alias(id_col)
+    ).distinct()
     cand_docs = docs.join(cand_ids, id_col, "left_semi")
     sh_small = _shingle_table(cand_docs, id_col, text_col, shingle_len)
     return _jaccard_from(sh_small, cands, id_col).filter(

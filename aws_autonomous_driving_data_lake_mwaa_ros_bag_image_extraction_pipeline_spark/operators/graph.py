@@ -3,36 +3,71 @@
 The dedup operators (minhash / simhash / ngram-jaccard) emit PAIRS; dropping
 duplicates needs CLUSTERS (transitive closure) so exactly one canonical
 document survives per group. Closure is iterative — outside a single SQL
-statement's reach — so this implements the alternating large-star /
-small-star algorithm (Kiveris et al., "Connected Components in MapReduce and
-Beyond", ACM SoCC 2014): converges in O(log² n) rounds, each round is two
+statement's reach. An edge set that fits one partition's budget
+(``ROWS_PER_PARTITION``) is collected and closed on the driver by
+``union_find``, one whole-array numpy pass. A bigger one runs the
+alternating large-star / small-star algorithm (Kiveris et al., "Connected
+Components in MapReduce and Beyond", ACM SoCC 2014) until it reaches its
+fixpoint or shrinks into the budget: O(log² n) rounds, each two
 groupBy+join pairs co-partitioned on the node key, and the edge set never
 grows beyond the input — the published shape for trillion-edge graphs.
 
-Driver involvement is one tiny convergence checksum per round (count +
-hash-sum, two numbers); a per-round checkpoint (``_caching.share``)
-truncates the lineage so the plan doesn't double each iteration — local by
-default, and automatically RELIABLE (``.checkpoint()`` to the
-fault-tolerant store) once ``spark.sparkContext.setCheckpointDir`` is set.
+Driver involvement in a star round is one aggregate probe (edge count +
+star-forest violation count, two longs); a per-round checkpoint
+(``_caching.share``) truncates the lineage so the plan doesn't double each
+iteration — local by default, and automatically RELIABLE (``.checkpoint()``
+to the fault-tolerant store) once ``spark.sparkContext.setCheckpointDir``
+is set.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ._caching import share
 
-# Edge budget of one partition: each round's edge set is coalesced to
-# ``n_edges // ROWS_PER_PARTITION + 1`` partitions, and a round whose input
-# fits the budget runs the one-exchange window forms of both stars.
+# Edge budget of one partition: an edge set that fits it is closed on the
+# driver, and each star round's output is coalesced to
+# ``n_edges // ROWS_PER_PARTITION + 1`` partitions.
 ROWS_PER_PARTITION = 1_000_000
 # Bound on the alternating-star rounds (the loop converges in O(log² n));
 # reaching it raises rather than iterating forever.
 MAX_ROUNDS = 50
 
 
-def _large_star(e_down: DataFrame, small: bool = False) -> DataFrame:
+def union_find(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Connected components of the nodes ``0 .. n-1`` joined by the edges
+    ``(a[i], b[i])``: returns ``parent``, where ``parent[x]`` is the
+    smallest node of x's component.
+
+    Root hooking: every edge between two different roots hooks the larger
+    root under the smaller (``np.minimum.at``), then pointer jumping
+    flattens every tree to its root; repeat until no edge joins two roots.
+    Hooking roots, not nodes, merges whole trees each round; hooking nodes
+    needs a round per step of the longest path, which on a chain is the
+    whole graph. A node's parent never exceeds it, so every root is the
+    smallest node of its tree. Whole-array numpy: no Python loop runs per
+    node or edge."""
+    parent = np.arange(n)
+    while a.size:
+        ra, rb = parent[a], parent[b]
+        apart = ra != rb
+        if not apart.any():
+            break
+        a, b, ra, rb = a[apart], b[apart], ra[apart], rb[apart]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            grand = parent[parent]
+            if (grand == parent).all():
+                break
+            parent = grand
+    return parent
+
+
+def _large_star(e_down: DataFrame) -> DataFrame:
     """Connect every neighbor v > u to m(u) = min(Γ(u) ∪ {u}).
 
     ``e_down`` is a down-edge set (v < u on every row) — the loop
@@ -41,39 +76,17 @@ def _large_star(e_down: DataFrame, small: bool = False) -> DataFrame:
     ``connected_components``). The symmetric neighborhood view is a
     shuffle-free union of the two orientations: they are DISJOINT row
     sets (one has v < u, the other v > u), so no distinct is needed —
-    the per-round ``_sym`` union+distinct exchange this replaces was pure
-    overhead (min-aggregations are duplicate-insensitive anyway, and the
+    min-aggregations are duplicate-insensitive anyway, and the
     up-orientation rows are exactly one row per unordered edge, which is
-    all the v > u emission below consumes).
+    all the v > u emission below consumes.
 
     No trailing distinct: two sources (or a repeated input row) can emit
     the same (v, m), but the consumer ``_small_star`` is
     duplicate-tolerant and ends in the round's one distinct.
-
-    ``small``: the loop passes True when the driver-known edge count of
-    this round's input fits ``ROWS_PER_PARTITION`` — the whole graph is
-    one partition's worth of data, so the min-per-node is computed with a
-    window over the SAME exchange the neighbor rows ride (one exchange,
-    no join) instead of groupBy+join (two exchanges). The window form is
-    NOT skew-safe in general (a hot node's neighborhood lands on one
-    task, and AQE skew-splitting covers joins, not windows), so big
-    rounds keep the groupBy+join+AQE path; as a 100 TB graph collapses
-    toward its star-forest fixpoint the later, tiny rounds switch to the
-    low-latency form. Both forms emit the same rows.
     """
     nbrs = e_down.union(
         e_down.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    if small:
-        w = Window.partitionBy("u")
-        return (
-            nbrs.withColumn(
-                "m", F.least(F.min("v").over(w), F.col("u"))
-            )
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-        )
     mins = nbrs.groupBy("u").agg(F.min("v").alias("mn"))
     mins = mins.select("u", F.least("u", "mn").alias("m"))
     return (
@@ -85,7 +98,7 @@ def _large_star(e_down: DataFrame, small: bool = False) -> DataFrame:
     )
 
 
-def _small_star(e_down: DataFrame, small: bool = False) -> DataFrame:
+def _small_star(e_down: DataFrame) -> DataFrame:
     """Within each node's smaller neighborhood, connect all to the minimum.
 
     ``e_down`` holds only down-edges (v < u), so each node's SMALLER
@@ -93,21 +106,7 @@ def _small_star(e_down: DataFrame, small: bool = False) -> DataFrame:
     symmetrization needed at all (an up-orientation row (b, a) with
     a > b contributes a to Γ(b) as a LARGER neighbor, which small-star
     ignores). Duplicate input rows are tolerated: they cannot change the
-    min and the trailing distinct clears them from the output.
-
-    ``small``: window-over-one-exchange form for driver-known-small
-    rounds (see ``_large_star``); the (u, m) rows it unions carry
-    per-edge duplicates where the groupBy form had one row per u, but
-    the trailing distinct makes the output sets identical."""
-    if small:
-        w = Window.partitionBy("u")
-        d = e_down.withColumn("m", F.min("v").over(w))
-        rewired = d.select(
-            F.col("v").alias("u"), F.col("m").alias("v")
-        ).where(F.col("u") != F.col("v"))
-        return rewired.union(
-            d.select(F.col("u"), F.col("m").alias("v"))
-        ).distinct()
+    min and the trailing distinct clears them from the output."""
     mins = e_down.groupBy("u").agg(F.min("v").alias("m"))
     rewired = (
         e_down.join(mins, "u")
@@ -115,6 +114,29 @@ def _small_star(e_down: DataFrame, small: bool = False) -> DataFrame:
         .where(F.col("u") != F.col("v"))
     )
     return rewired.union(mins.select(F.col("u"), F.col("m").alias("v"))).distinct()
+
+
+def _closed_on_driver(e: DataFrame) -> DataFrame:
+    """(node, component) of the down-edge set ``e``, collected as Arrow and
+    closed by ``union_find``. ``np.unique`` compacts the ids to indices in
+    id order, so the smallest index of a component is its smallest id; the
+    result is a local relation typed like the input's ids."""
+    t = e.toArrow()
+    ids, idx = np.unique(
+        np.concatenate([t["u"].to_numpy(), t["v"].to_numpy()]),
+        return_inverse=True,
+    )
+    n = t.num_rows
+    parent = union_find(ids.size, idx[:n], idx[n:])
+    id_type = t.schema.field("u").type
+    return e.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "node": pa.array(ids, id_type),
+                "component": pa.array(ids[parent], id_type),
+            }
+        )
+    )
 
 
 def connected_components(
@@ -126,18 +148,23 @@ def connected_components(
     """(node, component) for every node appearing in ``edges``; the component
     id is the smallest node id in the component.
 
-    Alternating large-star/small-star until the edge set reaches its fixpoint
-    (a forest of stars: every edge points child → component root). The
-    convergence probe is an aggregate checksum — two longs per round cross
-    the driver, never data — and doubles as a free cardinality estimate: each
-    round's edge set is coalesced to ``count / ROWS_PER_PARTITION``
-    partitions, so a near-dup graph that shrinks to thousands of edges stops
-    paying 100 TB-scale task-scheduling overhead (a round is ~10 stages;
-    at the parent's partitioning that was the dominant cost on small graphs),
-    while a graph that stays huge keeps its parallelism.
+    The edge set is counted once. While the known edge count is above
+    ``ROWS_PER_PARTITION``, alternating large-star/small-star rounds
+    shrink it; each round ends in an aggregate probe — two longs cross the
+    driver, never data — whose edge count is the next known count and sizes
+    the next round's coalesce (``count / ROWS_PER_PARTITION`` partitions),
+    so a graph that stays huge keeps its parallelism. A round that reaches
+    the fixpoint (a forest of stars: every edge points child → component
+    root) labels the nodes from that forest in Spark. An edge set that fits
+    the budget — before round 1, or after any round — is collected and
+    closed on the driver (``_closed_on_driver``): star rounds preserve both
+    the components and the node set, so any round's edge set has the
+    input's answer. A near-dup graph of thousands of edges therefore costs
+    two Spark jobs (the count and the collect) and no star round.
 
-    Pass ``stats={}`` to get ``stats["rounds"]`` back — the observed
-    round count (adversarial-topology tests assert the O(log n) bound).
+    Pass ``stats={}`` to get ``stats["rounds"]`` back — the star rounds
+    run (adversarial-topology tests assert the O(log n) bound; 0 when the
+    input fits the budget).
 
     Edges with a NULL endpoint are excluded (explicitly — the inequality
     predicate would drop them anyway, but silently): an edge to an
@@ -146,11 +173,11 @@ def connected_components(
 
     Reversed and repeated input edges need no dedup pass before round 1
     (at corpus scale that would be a full shuffle+aggregate of the edge
-    set): orientation is a narrow projection, both stars tolerate
-    duplicate rows, and round 1 ends in small-star's distinct, so every
-    round's output is the same edge set whether or not the input repeated
-    an edge. Only the initial count, which sizes round 1, sees the
-    repeats.
+    set): orientation is a narrow projection, both stars and the union-find
+    tolerate duplicate rows, and round 1 ends in small-star's distinct, so
+    every round's output is the same edge set whether or not the input
+    repeated an edge. Only the initial count, which gates and sizes round
+    1, sees the repeats.
     """
     e = (
         # orient every edge DOWN (u > v): the loop invariant that lets both
@@ -166,97 +193,66 @@ def connected_components(
         .where(F.col("u") != F.col("v"))
     )
     # checkpoint once: the input is typically an expensive detector plan
-    # (minhash/simhash), and round 0 would otherwise replay it per lineage
-    # re-walk. LAZY: the count below materializes it, so the detector runs
-    # exactly once but costs no standalone job (one driver action per
-    # round total — at sf-scale the loop was dominated by job-launch
-    # overhead, two actions per round, not by the tiny shuffles).
+    # (minhash/simhash), and the collect or round 1 would otherwise replay
+    # it. LAZY: the count below materializes it, so the detector runs
+    # exactly once but costs no standalone job. The count runs over the
+    # plan's row RDD, one job: ``DataFrame.count()`` is an aggregate, which
+    # adaptive execution runs as two (its shuffle-map stage, then the result).
     e = share(e)
-
-    def _parts_for(n: int) -> int:
-        return max(1, min(n // ROWS_PER_PARTITION + 1, 4096))
-
-    # Materialize the (lazily checkpointed) input and learn its size in ONE
-    # job — the count rides the materialization the first round would have
-    # paid anyway, and knowing n BEFORE round 1 lets the loop pick the
-    # round-1 operator form and coalesce target instead of flying blind at
-    # the session default until the first probe returns.
-    n_edges = e.count()
-    parts = _parts_for(n_edges)
-    small = n_edges <= ROWS_PER_PARTITION
+    n_edges = e._jdf.queryExecution().toRdd().count()
     rounds = 0
-    for _ in range(MAX_ROUNDS):
+    forest = False
+    while not forest and n_edges > ROWS_PER_PARTITION:
+        if rounds == MAX_ROUNDS:
+            raise RuntimeError(
+                f"connected_components: no fixpoint in {MAX_ROUNDS} rounds"
+            )
         rounds += 1
-        e = _small_star(_large_star(e, small), small)
-        e = e.coalesce(parts)  # narrow — merges, never reshuffles
-        # Lazy: the convergence action right below materializes the
-        # checkpoint (the probe runs over e's own RDD, so the full rows
-        # persist as a side effect) — one job per round, not two.
-        e = share(e)
+        parts = min(n_edges // ROWS_PER_PARTITION + 1, 4096)
+        # coalesce is narrow — merges, never reshuffles. Lazy checkpoint:
+        # the probe right below materializes it (it runs over e's own RDD,
+        # so the full rows persist as a side effect) — one job per round.
+        e = share(_small_star(_large_star(e)).coalesce(parts))
         # Convergence: small_star emits only down-edges (child > parent),
         # and a down-edge set is a star forest — the algorithm's fixpoint —
         # iff no node is both a child (left) and a parent (right). Testing
-        # that DIRECTLY detects the fixpoint on the round that REACHES it,
-        # where the previous two-long checksum needed one extra full
-        # confirm round to observe equality (Kiveris et al. §3: both star
-        # operations leave a star forest unchanged, so breaking here is
-        # exactly the checksum fixpoint, one round sooner).
-        if small:
-            # Small regime is STICKY (the edge set never grows beyond the
-            # input — Kiveris et al.), so the next round's coalesce target
-            # stays 1 partition's worth and the probe doesn't need the
-            # edge count at all: a left-semi join of children against the
-            # parent set, isEmpty() — the broadcast build replaces the
-            # agg probe's explode + groupBy exchange, and the take(1)
-            # short-circuits on the first violation. Materializing e's
-            # checkpoint still rides this one action.
-            bad = not e.join(
-                e.select(F.col("v").alias("u")), "u", "left_semi"
-            ).isEmpty()
-            if not bad:
-                break
-        else:
-            # Big rounds keep the aggregate probe: one groupBy on the node
-            # id — same key distribution as the round's own shuffles — and
-            # its edge count sizes the next round's coalesce.
-            probe = (
-                e.select(
-                    F.explode(
-                        F.array(
-                            F.struct(
-                                F.col("u").alias("n"),
-                                F.lit(1).alias("l"),
-                                F.lit(0).alias("r"),
-                            ),
-                            F.struct(
-                                F.col("v").alias("n"),
-                                F.lit(0).alias("l"),
-                                F.lit(1).alias("r"),
-                            ),
-                        )
-                    ).alias("s")
-                )
-                .select("s.*")
-                .groupBy("n")
-                .agg(F.sum("l").alias("ls"), F.max("r").alias("rr"))
+        # that DIRECTLY detects the fixpoint on the round that REACHES it
+        # (Kiveris et al. §3: both star operations leave a star forest
+        # unchanged). One groupBy on the node id — same key distribution
+        # as the round's own shuffles.
+        probe = (
+            e.select(
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.col("u").alias("n"),
+                            F.lit(1).alias("l"),
+                            F.lit(0).alias("r"),
+                        ),
+                        F.struct(
+                            F.col("v").alias("n"),
+                            F.lit(0).alias("l"),
+                            F.lit(1).alias("r"),
+                        ),
+                    )
+                ).alias("s")
             )
-            row = probe.agg(
-                F.sum("ls").alias("n_edges"),
-                F.sum(
-                    F.when(
-                        (F.col("ls") > 0) & (F.col("rr") > 0), 1
-                    ).otherwise(0)
-                ).alias("bad"),
-            ).collect()[0]
-            if not row.bad:  # star forest (NULL n_edges ⇒ empty: done too)
-                break
-            n_edges = row.n_edges or 0
-            parts = _parts_for(n_edges)
-            small = n_edges <= ROWS_PER_PARTITION
-    else:
-        raise RuntimeError(f"connected_components: no fixpoint in {MAX_ROUNDS} rounds")
+            .select("s.*")
+            .groupBy("n")
+            .agg(F.sum("l").alias("ls"), F.max("r").alias("rr"))
+        )
+        row = probe.agg(
+            F.sum("ls").alias("n_edges"),
+            F.sum(
+                F.when((F.col("ls") > 0) & (F.col("rr") > 0), 1).otherwise(0)
+            ).alias("bad"),
+        ).collect()[0]
+        forest = not row.bad
+        n_edges = row.n_edges or 0  # NULL ⇒ empty (a forest too)
     if stats is not None:
         stats["rounds"] = rounds
+    if not forest:
+        return _closed_on_driver(e)
 
     # At the fixpoint the down-edge set is a star forest over EXACTLY the
     # input's node set: both star operations preserve the node inventory
@@ -267,11 +263,9 @@ def connected_components(
     # (u, m) row and every v either rewires to (v, m) or IS m and survives
     # as the parent), and a size-m component's star has m-1 edges, so no
     # component ever empties. The output therefore derives from the final
-    # edge set alone: children label with their (unique at fixpoint; min
-    # for MAX_ROUNDS safety) parent, parents label with themselves — no
-    # separate node inventory off the input, no final left join (two
-    # exchanges and a join removed from every invocation; at corpus scale
-    # the inventory was a full union+distinct pass over the edge set).
+    # edge set alone: children label with their (unique at fixpoint)
+    # parent, parents label with themselves — no separate node inventory
+    # off the input, no final left join.
     labels = e.groupBy("u").agg(F.min("v").alias("component")).select(
         F.col("u").alias("node"), "component"
     )
@@ -350,9 +344,9 @@ def pagerank(
     destination key (map-side combined). The node count and the dangling
     mass ride as broadcast one-row aggregates — no driver-side scalars, no
     collect. At 100 TB: pre-partition ``edges`` by ``src`` once and every
-    iteration's join co-locates; iterations are a linear chain, so
-    checkpoint every ~5 rounds to truncate lineage (same contract as
-    connected_components).
+    iteration's join co-locates. Each iteration's ranks are shared
+    (``_caching.share``, the same lazy checkpoint as connected_components'
+    rounds), which truncates the lineage.
 
     The fixed-iteration form is the batch twin of an incremental-update
     scheme; for rank CONVERGENCE run more rounds — 3 is enough for the
@@ -411,4 +405,7 @@ def pagerank(
                 ).alias("pr"),
             )
         )
+        # the next iteration reads ranks twice (contributions and dangling
+        # mass): without a checkpoint the plan doubles every iteration
+        ranks = share(ranks)
     return ranks

@@ -1101,8 +1101,9 @@ def q_minhash_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _d_cc_prefix() -> str:
     """Recursive transitive closure over the minhash near-dup pairs: the
-    oracle twin of graph.connected_components (which runs the iterative
-    alternating-star algorithm — same fixpoint, different engine shape)."""
+    oracle twin of graph.connected_components (a driver-side union-find or
+    the iterative alternating-star algorithm — same closure, different
+    engine shape)."""
     return f"""
     WITH RECURSIVE pairs AS (SELECT id_a, id_b FROM ({_d_minhash_sql()}) mh),
     e AS (SELECT id_a AS u, id_b AS v FROM pairs
@@ -1128,13 +1129,14 @@ def _minhash_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
 )
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate CLUSTERS from minhash pairs via alternating large-star/
-    small-star connected components (Kiveris et al. 2014) — the iterative
-    step that turns pair detection into droppable duplicate groups. O(log² n)
-    rounds of co-partitioned groupBy+join; only a two-long convergence probe
-    (edge count + star-forest violation count) crosses the driver per round.
-    The oracle computes the same fixpoint as a DuckDB recursive CTE
-    closure."""
+    """Near-duplicate CLUSTERS from minhash pairs via
+    ``graph.connected_components`` — the step that turns pair detection
+    into droppable duplicate groups. The pair set fits one partition's
+    edge budget, so it is counted, collected and closed on the driver by
+    ``graph.union_find`` (two Spark jobs, no star round); a corpus-scale
+    pair set runs alternating large-star/small-star rounds (Kiveris et
+    al. 2014) until it fits or reaches its fixpoint. The oracle computes
+    the same closure as a DuckDB recursive CTE."""
     from ..operators import graph
 
     comp = graph.connected_components(

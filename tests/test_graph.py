@@ -33,10 +33,11 @@ def _uf_components(edges: list[tuple[int, int]]) -> dict[int, int]:
 
 def _regimes(monkeypatch):
     """Run the caller's loop body once per CC regime. Every graph here is
-    far below the default edge budget, so it alone would only ever run
-    the small regime (window stars, semi-join probe); a budget of 1
-    forces the big one (groupBy+join stars, aggregate probe, coalesce
-    sizing) — the path a corpus-scale graph takes."""
+    far below the default edge budget, so it alone would only ever close
+    the edge set on the driver (``union_find``, no star round); a budget
+    of 1 forces the star rounds to the distributed fixpoint (groupBy+join
+    stars, aggregate probe, coalesce sizing, star-forest labelling) — the
+    path a corpus-scale graph takes."""
     for budget in (graph.ROWS_PER_PARTITION, 1):
         monkeypatch.setattr(graph, "ROWS_PER_PARTITION", budget)
         yield budget
@@ -82,6 +83,62 @@ def test_cc_pseudorandom(spark, monkeypatch):
     edges += [(b, a) for a, b in edges[:10]]
     edges += edges[10:20]
     _check(spark, monkeypatch, edges)
+
+
+def test_cc_mid_loop_driver_handoff(spark, monkeypatch):
+    """A budget between the input's edge count and a later round's: the
+    star rounds run until the edge set fits, then the driver closes it.
+    A 2048-node chain given in both orientations counts 4094 input rows
+    and 2047 edges after round 1's distinct (a connected graph keeps at
+    least n - 1 edges, so a plain chain would never fit a smaller
+    budget); the star loop alone needs about 11 rounds on it, so one
+    round means the driver finished. Star rounds preserve the components
+    and the node set, so the rows equal the union-find reference."""
+    n = 2048
+    edges = [(i, i + 1) for i in range(n - 1)]
+    edges += [(b, a) for a, b in edges]
+    monkeypatch.setattr(graph, "ROWS_PER_PARTITION", 3000)
+    stats: dict = {}
+    comp = graph.connected_components(
+        spark.createDataFrame(edges, "src long, dst long"), stats=stats
+    )
+    assert {r.node: r.component for r in comp.collect()} == _uf_components(edges)
+    assert stats["rounds"] == 1, stats
+
+
+def test_cc_degenerate_edges_and_int_ids(spark, monkeypatch):
+    """Only NULL endpoints or self-loops give no rows; an ``int`` edge
+    list gives ``int`` node/component columns. Both regimes."""
+    degenerate = spark.createDataFrame(
+        [(None, 1), (2, None), (None, None), (3, 3)], "src long, dst long"
+    )
+    ints = spark.createDataFrame([(5, 4), (4, 6), (9, 8)], "src int, dst int")
+    for budget in _regimes(monkeypatch):
+        none = graph.connected_components(degenerate)
+        assert none.collect() == [], budget
+        assert [f.dataType.simpleString() for f in none.schema] == ["bigint"] * 2
+        comp = graph.connected_components(ints)
+        assert {r.node: r.component for r in comp.collect()} == {
+            4: 4, 5: 4, 6: 4, 8: 8, 9: 8
+        }, budget
+        assert [f.dataType.simpleString() for f in comp.schema] == ["int"] * 2
+
+
+def test_cc_small_graph_runs_two_jobs(spark):
+    """Under the default budget a small graph runs no star round and two
+    Spark jobs: the count and the Arrow collect. A star round, probe or
+    extra action added back to the small path fails here."""
+    sc = spark.sparkContext
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "src long, dst long")
+    stats: dict = {}
+    sc.setJobGroup("cc-small", "cc-small")
+    try:
+        comp = graph.connected_components(edges, stats=stats)
+    finally:
+        sc.setJobGroup(None, None)
+    assert stats["rounds"] == 0
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-small")) <= 2
+    assert sorted(comp.collect()) == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
 
 
 def test_keep_canonical(spark):
