@@ -559,75 +559,6 @@ def embedding_dup_pairs_exact(
     ).filter(F.col("cosine") >= threshold)
 
 
-def embedding_dup_pairs_numpy(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact all-pairs cosine via Arrow batches × a broadcast matrix.
-
-    Same result as ``embedding_dup_pairs_exact`` with a ~50× smaller
-    constant: each partition's rows are one BLAS matmul against the full
-    normalized matrix instead of per-pair interpreted array expressions.
-    The matrix is collected and broadcast — bounded to corpora that fit an
-    executor (~10⁵ × dim doubles); beyond that, exact all-pairs is the
-    wrong tool regardless (use ``embedding_dup_pairs``).
-    """
-    import numpy as np
-    import pandas as pd
-
-    # complete cases, same convention as the relational paths: NULL
-    # vectors would crash the numpy conversion, and zero-norm vectors
-    # can't cosine-match anything (0/0 would silently NaN them here
-    # where the exact path NULL-scores them)
-    emb = emb.filter(
-        F.col(vec_col).isNotNull()
-        & ~F.exists(F.col(vec_col), lambda x: x.isNull())
-    )
-    rows = emb.select(id_col, vec_col).collect()
-    id_type0 = dict(emb.dtypes)[id_col]
-    if not rows:  # 0-row collect: np.linalg.norm(axis=1) would raise
-        return emb.sparkSession.createDataFrame(
-            [], f"id_a {id_type0}, id_b {id_type0}, cosine double"
-        )
-    ids = np.array([r[0] for r in rows])
-    mat = np.array([r[1] for r in rows], dtype="float64")
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    live = norms[:, 0] > 0
-    ids, mat = ids[live], mat[live] / norms[live]
-    sc = emb.sparkSession.sparkContext
-    b_ids, b_mat = sc.broadcast(ids), sc.broadcast(mat)
-
-    id_type = dict(emb.dtypes)[id_col]
-    schema = f"id_a {id_type}, id_b {id_type}, cosine double"
-
-    def _pairs(batches):
-        all_ids, all_mat = b_ids.value, b_mat.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            cn = np.linalg.norm(cm, axis=1, keepdims=True)
-            bl = cn[:, 0] > 0  # zero-norm rows can't match (0/0 → NaN)
-            if not bl.any():
-                continue
-            cm = cm[bl] / cn[bl]
-            sims = cm @ all_mat.T
-            my_ids = pdf[id_col].to_numpy()[bl]
-            rr, cc = np.where(sims >= threshold)
-            keep = my_ids[rr] < all_ids[cc]
-            yield pd.DataFrame(
-                {
-                    "id_a": my_ids[rr[keep]],
-                    "id_b": all_ids[cc[keep]],
-                    "cosine": sims[rr[keep], cc[keep]],
-                }
-            )
-
-    return emb.select(id_col, vec_col).mapInPandas(_pairs, schema=schema)
-
-
 def semantic_dedup_survivors(
     emb: DataFrame,
     threshold: float = 0.4,

@@ -6,14 +6,14 @@
   lands in one bucket per hash table; candidate comparison happens only
   within buckets. Hyperplanes are derived deterministically from md5 so runs
   are reproducible without a random seed exchange.
-- pandas_topk: Arrow/numpy batch path for very wide vectors — same contract,
-  vectorized matmul per partition.
+- ivf_topk, pq_topk, lsh_multiprobe_topk, hnsw_topk: inverted-file,
+  product-quantization, multi-probe LSH and graph indexes, each with a
+  persisted build / search / append lifecycle.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -473,54 +473,6 @@ def ivf_topk(
     )
     wr = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(wr)).filter(F.col("rank") <= k)
-
-
-def pandas_topk(
-    corpus: DataFrame,
-    queries_pdf: pd.DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-batched numpy path: per-partition matmul against the broadcast
-    query matrix, local top-k, then global top-k merge. Use when vectors are
-    wide enough that per-element codegen loses to BLAS."""
-    import numpy as np
-
-    qids = queries_pdf[id_col].to_numpy()
-    qm = np.vstack(queries_pdf[vec_col].to_numpy()).astype("float64")
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-
-    id_type = dict(corpus.dtypes)[id_col]
-    schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
-
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-            sims = cm @ qm.T  # (n_corpus, n_queries)
-            nids = pdf[id_col].to_numpy()
-            out_q, out_n, out_s = [], [], []
-            for qi in range(sims.shape[1]):
-                col = sims[:, qi]
-                mask = nids != qids[qi]
-                order = np.argsort(-col[mask])[:k]
-                sel = np.where(mask)[0][order]
-                out_q.extend([qids[qi]] * len(sel))
-                out_n.extend(nids[sel])
-                out_s.extend(col[sel])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cosine": out_s}
-            )
-
-    local = corpus.select(id_col, vec_col).mapInPandas(_score, schema=schema)
-    # Round BEFORE ranking (same as brute_force_topk) so near-equal scores at
-    # the k boundary produce the same neighbor set as the exact path/oracle.
-    rounded = local.withColumn("cosine", F.round("cosine", 6))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return rounded.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 # --- Persisted IVF index lifecycle ------------------------------------------

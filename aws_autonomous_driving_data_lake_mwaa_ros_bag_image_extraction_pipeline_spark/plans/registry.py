@@ -2103,8 +2103,7 @@ def q_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact embedding near-dup pairs: the O(n^2) oracle baseline, kept
     NON-headline by design — the bench headline is the LSH-bucketed scale
     path ``embedding_dup_pairs_lsh`` below, which is the plan that survives
-    100x. ``dedup.embedding_dup_pairs_numpy`` remains a single-box speed
-    helper."""
+    100x."""
     pairs = dedup.embedding_dup_pairs_exact(
         _t(spark, sf_dir, "embeddings"), threshold=0.4
     )

@@ -24,11 +24,14 @@ Reference semantics being re-expressed:
   the same way — clear its status — just as a reference bag whose tag went
   stale is re-run by clearing the tag.
 
-Scale notes: the manifest log grows one tiny row per transition — the
-driver-side fold and the Spark ``current_manifest`` are each one pass over
-it, and ``compact_manifest`` rewrites it to one row per key when the log
-gets long. Failure isolation is per bag (one bag = one unit of work,
-matching the reference).
+Scale notes: the manifest log grows one tiny row per transition. Every
+reader goes through one driver-side last-writer-wins fold (``_fold_log``,
+one pyarrow pass over the log): ``manifest_statuses`` returns it as a
+dict, ``current_manifest`` / ``manifest_at`` as an arrow-backed local
+relation (collecting it runs no Spark job), and ``compact_manifest``
+writes it back as a one-row-per-key snapshot when the log gets long.
+Failure isolation is per bag (one bag = one unit of work, matching the
+reference).
 """
 
 from __future__ import annotations
@@ -38,7 +41,7 @@ import os
 import shutil
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import TERMINAL_OR_ACTIVE
@@ -123,13 +126,6 @@ def _entry_data_path(manifest_dir: str, version: int, entry: dict) -> str:
     )
 
 
-def commit_data_path(manifest_dir: str, version: int) -> str:
-    """Public resolution of a committed version's data dir."""
-    return _entry_data_path(
-        manifest_dir, version, _read_entry(manifest_dir, version)
-    )
-
-
 def _claim_commit(
     manifest_dir: str, action: str, data_rel: str, base: int | None = None
 ) -> int:
@@ -176,37 +172,38 @@ def _claim_commit(
             pass
 
 
-def _stage_rows(
-    spark: SparkSession | None, manifest_dir: str, rows_or_df
-) -> str:
-    """Write commit rows to a unique staging dir; returns the relative
-    pointer for the log entry. A DataFrame (the Spark compactor's snapshot)
-    is written by Spark; row tuples are written driver-side via pyarrow —
-    the manifest is tiny metadata (a handful of rows per transition), so
-    status writers don't need a JVM or a Spark job, exactly as Delta's log
-    writes aren't Spark jobs."""
+def _arrow_log_schema():
+    """``MANIFEST_LOG_SCHEMA`` in arrow: ``updated_at`` is a UTC instant."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            ("key", pa.string()),
+            ("status", pa.string()),
+            ("updated_at", pa.timestamp("us", tz="UTC")),
+        ]
+    )
+
+
+def _stage_rows(manifest_dir: str, rows) -> str:
+    """Write commit rows — (key, status, updated_at) tuples, a naive
+    ``updated_at`` read as UTC — to a unique staging dir with pyarrow;
+    returns the relative pointer for the log entry. The manifest is tiny
+    metadata (a handful of rows per transition), so writers need no JVM
+    and no Spark job, exactly as Delta's log writes aren't Spark jobs."""
     import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     rel = f"data/c-{uuid.uuid4().hex}"
     path = os.path.join(manifest_dir, rel)
-    if isinstance(rows_or_df, DataFrame):
-        rows_or_df.write.mode("overwrite").parquet(path)
-    else:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        rows = rows_or_df
-        os.makedirs(path, exist_ok=True)
-        table = pa.table(
-            {
-                "key": pa.array([r[0] for r in rows], pa.string()),
-                "status": pa.array([r[1] for r in rows], pa.string()),
-                "updated_at": pa.array(
-                    [r[2] for r in rows], pa.timestamp("us", tz="UTC")
-                ),
-            }
-        )
-        pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+    os.makedirs(path, exist_ok=True)
+    schema = _arrow_log_schema()
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema
+    )
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
     return rel
 
 
@@ -225,7 +222,7 @@ def append_status(
     rows = [(k, status, now) for k in keys]
     if not rows:
         return
-    rel = _stage_rows(spark, manifest_dir, rows)
+    rel = _stage_rows(manifest_dir, rows)
     _claim_commit(manifest_dir, "append", rel)
 
 
@@ -237,238 +234,167 @@ def clear_status(
     append_status(spark, manifest_dir, keys, None)
 
 
+def _latest_snapshot(
+    entries: dict[int, dict], bound: int
+) -> tuple[int, int] | None:
+    """(base, version) of the snapshot commit at or below ``bound`` with
+    the highest base (then the highest version), or None. Its rows cover
+    every commit ≤ base; older snapshots are strict subsets."""
+    return max(
+        (
+            (e.get("base", v - 1), v)
+            for v, e in entries.items()
+            if v <= bound and e["action"] == "snapshot"
+        ),
+        default=None,
+    )
+
+
 def _log_paths(
     manifest_dir: str, version: int
 ) -> list[tuple[int, str]]:
     """(rank, data dir) pairs a reader at ``version`` must union — rank
     is the commit version (a snapshot ranks at its BASE), ascending, and
-    is the LWW tie-break order. Content: the snapshot ≤
-    version with the HIGHEST base (its rows cover every commit ≤ base),
-    plus every append commit in (base, version]. Keying on the
-    snapshot's ``base`` — the head its compactor actually read — rather
-    than its commit number is what makes a racing compactor harmless: an
-    append that claimed a number after base but before the snapshot's
-    own number is outside the snapshot's coverage and stays in the
-    reader's union. Older snapshots in range are strict subsets of this
-    set and are skipped."""
-    versions = [v for v in _versions(manifest_dir) if v <= version]
-    if not versions:
-        return []
-    entries = {v: _read_entry(manifest_dir, v) for v in versions}
-    snaps = [
-        (e.get("base", v - 1), v)
-        for v, e in entries.items()
-        if e["action"] == "snapshot"
-    ]
-    if snaps:
-        base, sv = max(snaps)
-        keep = [sv] + [
-            v
-            for v, e in entries.items()
-            if v > base and e["action"] == "append"
-        ]
-    else:
-        keep = versions
-    # rank snapshots by their BASE for ordering purposes: a snapshot's
-    # rows fold commits <= base, so any append with version > base must
-    # outrank them in the LWW tie-break
-    rank = {
-        v: (entries[v].get("base", v - 1) if entries[v]["action"] == "snapshot" else v)
-        for v in keep
+    is the LWW tie-break order. Content: the snapshot ≤ version with the
+    HIGHEST base (``_latest_snapshot``), plus every append commit in
+    (base, version]. Keying on the snapshot's ``base`` — the head its
+    compactor actually read — rather than its commit number is what makes
+    a racing compactor harmless: an append that claimed a number after
+    base but before the snapshot's own number is outside the snapshot's
+    coverage, stays in the reader's union and outranks the snapshot's
+    rows on a timestamp tie."""
+    entries = {
+        v: _read_entry(manifest_dir, v)
+        for v in _versions(manifest_dir)
+        if v <= version
     }
+    snap = _latest_snapshot(entries, version)
+    base = snap[0] if snap else -1
+    ranked = [snap] if snap else []
+    ranked += [
+        (v, v)
+        for v, e in entries.items()
+        if v > base and e["action"] == "append"
+    ]
     return [
-        (rank[v], _entry_data_path(manifest_dir, v, entries[v]))
-        for v in sorted(set(keep))
+        (rank, _entry_data_path(manifest_dir, v, entries[v]))
+        for rank, v in sorted(ranked)
     ]
 
 
-def _empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
-    """A 0-row frame of schema ``ddl`` built from arrow: a local relation,
-    so reading it runs no job (a frame built from a Python list is a
-    pickled RDD, one Python-worker job per action)."""
+def _read_log_arrow(sources: list[tuple[int, str]]):
+    """Union the parquet part-files of ``_log_paths``' (rank, data dir)
+    pairs into one arrow table of ``MANIFEST_LOG_SCHEMA`` plus ``__v``,
+    the commit rank each row carries into the fold.
+
+    ``updated_at`` is normalised to timestamp[us, tz=UTC] per file before
+    the concat: pyarrow-staged commits already hold that, while commits
+    that older versions wrote with Spark read back as naive timestamp[ns]
+    holding the UTC wall time — the same instant, but arrow refuses to
+    merge tz-aware with naive columns."""
+    import glob as _glob
+
     import pyarrow as pa
-    from pyspark.sql.types import StructType
+    import pyarrow.parquet as pq
 
-    names = StructType.fromDDL(ddl).names
-    return spark.createDataFrame(pa.table({n: [] for n in names}), ddl)
-
-
-def _log_frame(
-    spark: SparkSession, manifest_dir: str, version: int
-) -> DataFrame:
-    """The raw transition log visible at ``version`` (see ``_log_paths``
-    for the snapshot/append resolution — that's what makes compaction
-    O(live keys) to read while leaving history untouched). Each row
-    carries ``__v`` (its commit's version; a snapshot's rows carry its
-    base) so last-writer-wins can break equal-timestamp ties by COMMIT
-    ORDER — two appends in the same microsecond (e.g. _process_batch's
-    back-to-back status calls, or two racing writers) would otherwise
-    resolve nondeterministically."""
-    sources = _log_paths(manifest_dir, version)
-    if not sources:
-        return _empty_frame(spark, MANIFEST_LOG_SCHEMA + ", __v long")
-    frames = [
-        spark.read.schema(MANIFEST_LOG_SCHEMA)
-        .parquet(path)
-        .withColumn("__v", F.lit(int(v)))
-        for v, path in sources
-    ]
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    return out
+    schema = _arrow_log_schema()
+    tables = []
+    for rank, d in sources:
+        for f in sorted(_glob.glob(os.path.join(d, "*.parquet"))):
+            t = pq.read_table(f, columns=schema.names).cast(schema)
+            rank_col = pa.array([rank] * t.num_rows, pa.int64())
+            tables.append(t.append_column("__v", rank_col))
+    if not tables:
+        return schema.append(pa.field("__v", pa.int64())).empty_table()
+    return pa.concat_tables(tables)
 
 
-def _last_writer_wins(log: DataFrame) -> DataFrame:
-    """One row per key: latest ``updated_at`` wins (event-time LWW — the
-    documented semantic; writers with skewed clocks should use one clock
-    source), with the commit version as the deterministic tie-break."""
-    order = [F.desc("updated_at")]
-    if "__v" in log.columns:
-        order.append(F.desc("__v"))
-    w = Window.partitionBy("key").orderBy(*order)
-    return (
-        log.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", *(["__v"] if "__v" in log.columns else []))
-    )
+def _fold_log(
+    manifest_dir: str, version: int, as_of: dt.datetime | None = None
+):
+    """The ledger's one last-writer-wins fold: over the log visible at
+    ``version`` (rows with ``updated_at <= as_of`` when given), one
+    (key, status, updated_at) row per key — the latest ``updated_at``
+    wins (event-time LWW, the documented semantic; writers with skewed
+    clocks should use one clock source), the commit rank breaks ties (two
+    appends in the same microsecond, e.g. ``_process_batch``'s
+    back-to-back status calls or two racing writers). Runs driver-side
+    over pyarrow: the ledger is tiny driver-written metadata. ``as_of`` is
+    a UTC instant; a naive value counts as UTC, as ``append_status``
+    stamps it. Returns an arrow table of ``MANIFEST_LOG_SCHEMA`` ordered by
+    (updated_at, rank)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-
-def current_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
-    """Last-writer-wins view of the log at the head version:
-    (key, status, updated_at)."""
-    versions = _versions(manifest_dir)
-    if not versions:
-        return _empty_frame(spark, MANIFEST_LOG_SCHEMA)
-    return _last_writer_wins(_log_frame(spark, manifest_dir, versions[-1]))
+    log = _read_log_arrow(_log_paths(manifest_dir, version))
+    if as_of is not None:
+        cut = pa.scalar(as_of, log.schema.field("updated_at").type)
+        log = log.filter(pc.less_equal(log["updated_at"], cut))
+    log = log.sort_by([("updated_at", "ascending"), ("__v", "ascending")])
+    last = {k: i for i, k in enumerate(log["key"].to_pylist())}
+    keep = pa.array(sorted(last.values()), pa.int64())
+    return log.take(keep).drop_columns("__v")
 
 
 def manifest_at(
     spark: SparkSession,
     manifest_dir: str,
     version: int | None = None,
-    as_of: "dt.datetime | None" = None,
+    as_of: dt.datetime | None = None,
 ) -> DataFrame:
     """Time travel: the last-writer-wins view as of a past commit
     ``version`` (every append and every compaction is one version —
-    Delta's ``VERSION AS OF``) or an ``as_of`` timestamp (``TIMESTAMP AS
-    OF``: replay the head log up to that instant)."""
+    Delta's ``VERSION AS OF``; default the head) or an ``as_of`` instant
+    (``TIMESTAMP AS OF``: replay the log up to that instant; naive = UTC).
+    The ``_fold_log`` result as an arrow-backed local relation: collecting
+    it runs no Spark job."""
     versions = _versions(manifest_dir)
-    if not versions:
-        return _empty_frame(spark, MANIFEST_LOG_SCHEMA)
-    if version is not None:
-        if version not in versions:
-            raise ValueError(
-                f"version {version} not on disk (have {versions}; vacuumed?)"
-            )
-        log = _log_frame(spark, manifest_dir, version)
-    else:
-        log = _log_frame(spark, manifest_dir, versions[-1])
-    if as_of is not None:
-        log = log.filter(F.col("updated_at") <= F.lit(as_of))
-    return _last_writer_wins(log)
+    if version is None:
+        version = versions[-1] if versions else -1
+    elif version not in versions:
+        raise ValueError(
+            f"version {version} not on disk (have {versions}; vacuumed?)"
+        )
+    return spark.createDataFrame(
+        _fold_log(manifest_dir, version, as_of), MANIFEST_LOG_SCHEMA
+    )
+
+
+def current_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
+    """Last-writer-wins view of the log at the head version:
+    (key, status, updated_at), an arrow-backed local relation."""
+    return manifest_at(spark, manifest_dir)
 
 
 def compact_manifest(
     spark: SparkSession | None, manifest_dir: str
 ) -> None:
     """Write the one-row-per-key snapshot as the next commit (run when
-    the log gets long). Readers at older versions are untouched — their
-    data dirs remain until ``vacuum_manifest``. Race-safe against
-    concurrent appenders: the entry records ``base`` = the head version
-    this compactor actually read, so an append that claims a number
-    between base and the snapshot's own number stays visible (see
-    ``_log_paths``). With ``spark=None`` the last-writer-wins fold runs
-    driver-side over pyarrow — the snapshot is one row per live key."""
+    the log gets long): ``_fold_log`` at the head, staged with pyarrow.
+    Readers at older versions are untouched — their data dirs remain until
+    ``vacuum_manifest``. Race-safe against concurrent appenders: the entry
+    records ``base`` = the head version this compactor actually read, so
+    an append that claims a number between base and the snapshot's own
+    number stays visible (see ``_log_paths``). ``spark`` is accepted for
+    call-site compatibility and may be None."""
     versions = _versions(manifest_dir)
     if not versions:
         return
     head = versions[-1]
-    if spark is not None:
-        rel = _stage_rows(
-            spark, manifest_dir, current_manifest(spark, manifest_dir)
-        )
-    else:
-        rows = [
-            (r.key, None if _isna(r.status) else r.status,
-             r.updated_at.to_pydatetime().replace(tzinfo=None))
-            for r in _fold_log(manifest_dir, head).itertuples()
-        ]
-        rel = _stage_rows(None, manifest_dir, rows)
+    fold = _fold_log(manifest_dir, head).to_pydict()
+    rel = _stage_rows(manifest_dir, zip(*fold.values()))
     _claim_commit(manifest_dir, "snapshot", rel, base=head)
 
 
 def manifest_statuses(manifest_dir: str) -> dict[str, str | None]:
-    """{key: status} at the head version — the driver-side twin of
-    ``current_manifest`` (a cleared key maps to None). No Spark job: the
-    ledger is tiny driver-written metadata, read with pyarrow."""
+    """{key: status} at the head version (a cleared key maps to None):
+    ``_fold_log`` as a dict, the form ``process_pending`` reads. No
+    Spark job."""
     versions = _versions(manifest_dir)
     if not versions:
         return {}
-    pdf = _fold_log(manifest_dir, versions[-1])
-    return {
-        k: None if _isna(v) else v for k, v in zip(pdf["key"], pdf["status"])
-    }
-
-
-def _fold_log(manifest_dir: str, version: int):
-    """Last-writer-wins over the log visible at ``version``, driver-side:
-    one (key, status, updated_at) pandas row per key, ordered by
-    ``updated_at`` and then by commit rank — ``_last_writer_wins``'s
-    order."""
-    pdf = _read_log_arrow(_log_paths(manifest_dir, version)).to_pandas()
-    return (
-        pdf.sort_values(["updated_at", "__v"], kind="stable")
-        .drop_duplicates("key", keep="last")
-        .drop(columns="__v")
-    )
-
-
-def _isna(x) -> bool:
-    import pandas as pd
-
-    return x is None or (isinstance(x, float) and pd.isna(x))
-
-
-def _read_log_arrow(data_dirs: list[str]):
-    """Union the parquet part-files under commit data dirs into one arrow
-    table (driver-side twin of the Spark multi-path read — works on both
-    pyarrow-staged and Spark-written commits). Given ``_log_paths``'
-    (rank, dir) pairs, each row also carries its commit rank as ``__v``,
-    as ``_log_frame``'s rows do.
-
-    Timestamp columns are normalized to naive microseconds before the
-    concat: Spark-written commits read back as timestamp[ns] naive (UTC
-    wall time under the pinned UTC session), pyarrow-staged commits as
-    timestamp[us, tz=UTC] — the same instant, but arrow refuses to merge
-    tz-aware with naive, so a log mixing Spark and non-Spark writers
-    would crash the driver-side compactor without this cast."""
-    import glob as _glob
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    files: list[tuple[int | None, str]] = []
-    for d in data_dirs:
-        rank, d = d if isinstance(d, tuple) else (None, d)
-        files.extend(
-            (rank, f) for f in sorted(_glob.glob(os.path.join(d, "*.parquet")))
-        )
-    tables = []
-    for rank, f in files:
-        t = pq.read_table(f)
-        schema = t.schema
-        for i, field in enumerate(schema):
-            if pa.types.is_timestamp(field.type):
-                t = t.set_column(
-                    i,
-                    field.name,
-                    t.column(i).cast(pa.timestamp("us")),
-                )
-        if rank is not None:
-            t = t.append_column("__v", pa.array([rank] * t.num_rows, pa.int64()))
-        tables.append(t)
-    return pa.concat_tables(tables, promote_options="permissive")
+    fold = _fold_log(manifest_dir, versions[-1])
+    return dict(zip(fold["key"].to_pylist(), fold["status"].to_pylist()))
 
 
 def vacuum_manifest(
@@ -493,14 +419,9 @@ def vacuum_manifest(
         return
     cutoff = versions[-1] - max(1, keep) + 1  # oldest version kept readable
     entries = {v: _read_entry(manifest_dir, v) for v in versions}
-    snaps = []
-    for v, e in entries.items():
-        if v > cutoff:
-            continue
-        if e["action"] == "snapshot":
-            snaps.append((e.get("base", v - 1), v))
-    if snaps:
-        base, _sv = max(snaps)
+    snap = _latest_snapshot(entries, cutoff)
+    if snap:
+        base = snap[0]
         for v in versions:
             if v <= base:
                 shutil.rmtree(
@@ -513,6 +434,7 @@ def vacuum_manifest(
                     )
                 except FileNotFoundError:
                     pass
+
 
     # Orphan GC (runs even when no snapshot is old enough to advance the
     # base): anything under data/ not referenced by a surviving log entry,

@@ -26,31 +26,30 @@ def test_manifest_last_writer_wins(spark, tmp_path):
     got = {r.key: r.status for r in sp.current_manifest(spark, m).collect()}
     assert got["k1"] is None
     sp.compact_manifest(spark, m)
-    # the snapshot commit holds one row per key
-    log = spark.read.parquet(sp.commit_data_path(m, sp._versions(m)[-1]))
-    assert log.count() == 2
+    # the head reads the snapshot commit alone, and it holds one row per key
+    assert sp._read_log_arrow(sp._log_paths(m, sp._versions(m)[-1])).num_rows == 2
     got = {r.key: r.status for r in sp.current_manifest(spark, m).collect()}
     assert got == {"k1": None, "k2": "in progress"}
 
 
 def test_compaction_never_breaks_open_readers(spark, tmp_path):
-    """Compaction is a new snapshot COMMIT: a reader plan opened before it
-    still resolves afterwards (its data dirs are never touched), the live
-    view reads snapshot + later appends, and vacuum reclaims commits below
-    the snapshot."""
+    """Compaction is a new snapshot COMMIT: a reader opened before it and
+    a version read of the pre-compaction head still resolve afterwards
+    (their data dirs are never touched), the live view reads snapshot +
+    later appends, and vacuum reclaims commits below the snapshot."""
     m = str(tmp_path / "manifest")
     sp.append_status(spark, m, ["k1", "k2"], "in progress")  # v0
     sp.append_status(spark, m, ["k1"], "complete")  # v1
 
-    reader = sp.current_manifest(spark, m)  # lazy plan over v0+v1
+    reader = sp.current_manifest(spark, m)  # opened over v0+v1
     sp.compact_manifest(spark, m)  # v2 = snapshot
     sp.append_status(spark, m, ["k3"], "in progress")  # v3
 
     # pre-compaction reader: v0/v1 data dirs are untouched
-    assert {r.key: r.status for r in reader.collect()} == {
-        "k1": "complete",
-        "k2": "in progress",
-    }
+    before = {"k1": "complete", "k2": "in progress"}
+    assert {r.key: r.status for r in reader.collect()} == before
+    got = {r.key: r.status for r in sp.manifest_at(spark, m, version=1).collect()}
+    assert got == before
     # live view: snapshot + post-compaction append
     want = {"k1": "complete", "k2": "in progress", "k3": "in progress"}
     got = {r.key: r.status for r in sp.current_manifest(spark, m).collect()}
@@ -64,8 +63,9 @@ def test_compaction_never_breaks_open_readers(spark, tmp_path):
 
 def test_manifest_commit_is_atomic_log_rename(spark, tmp_path):
     """A commit is visible iff its log entry exists: an orphan data dir
-    (crash between data write and log rename) is invisible to readers and
-    clobbered by the next commit at that version."""
+    (crash between data write and log rename) is invisible to readers,
+    also after the next commit claims that version with its own data dir
+    (``vacuum_manifest`` reclaims the orphan)."""
     import os
 
     m = str(tmp_path / "manifest")
@@ -81,7 +81,7 @@ def test_manifest_commit_is_atomic_log_rename(spark, tmp_path):
     sp.append_status(spark, m, ["k2"], "in progress")  # commits as v1
     assert sp._versions(m) == [0, 1]
     got = {r.key: r.status for r in sp.current_manifest(spark, m).collect()}
-    assert got == {"k1": "in progress", "k2": "in progress"}  # orphan gone
+    assert got == {"k1": "in progress", "k2": "in progress"}  # still ignored
     assert not os.path.exists(
         os.path.join(sp._log_dir(m), ".tmp-00000001.json")
     )
@@ -172,21 +172,27 @@ def test_replay_by_clearing_status(spark, tmp_path):
     assert got[target] == "complete"
 
 
-def test_manifest_time_travel(spark, tmp_path):
+def _check_time_travel(spark, m: str) -> None:
+    """As-of reads with a naive (UTC) and an aware ``as_of``, version
+    reads before and after compaction, and a missing version."""
     import datetime as dt
     import time
+    from zoneinfo import ZoneInfo
 
-    m = str(tmp_path / "manifest")
     sp.append_status(spark, m, ["k1"], "in progress")
     time.sleep(0.05)
-    t_mid = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    t_mid = dt.datetime.now(dt.timezone.utc)
     time.sleep(0.05)
     sp.append_status(spark, m, ["k1"], "complete")
     sp.append_status(spark, m, ["k2"], "in progress")
 
     # as-of timestamp: k1 still in progress, k2 absent
-    past = {r.key: r.status for r in sp.manifest_at(spark, m, as_of=t_mid).collect()}
-    assert past == {"k1": "in progress"}
+    for as_of in (
+        t_mid.replace(tzinfo=None),
+        t_mid.astimezone(ZoneInfo("America/New_York")),
+    ):
+        past = {r.key: r.status for r in sp.manifest_at(spark, m, as_of=as_of).collect()}
+        assert past == {"k1": "in progress"}, as_of
 
     # version travel: every append is a commit — v2 (pre-compaction head)
     # and v0 (the very first append) both stay readable after compaction
@@ -197,12 +203,36 @@ def test_manifest_time_travel(spark, tmp_path):
     v0 = {r.key: r.status for r in sp.manifest_at(spark, m, version=0).collect()}
     assert v0 == {"k1": "in progress"}
     head = {r.key: r.status for r in sp.current_manifest(spark, m).collect()}
-    assert head["k1"] is None  # the head moved on
+    assert head == {"k1": None, "k2": "in progress"}  # the head moved on
 
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="not on disk"):
+    with pytest.raises(ValueError, match="not on disk"):
         sp.manifest_at(spark, m, version=99)
+
+
+def test_manifest_time_travel(spark, tmp_path):
+    _check_time_travel(spark, str(tmp_path / "manifest"))
+
+
+@pytest.fixture
+def new_york_tz(monkeypatch):
+    """The process's local zone set to America/New_York (UTC-4/-5), so a
+    naive datetime read as local time lands hours away from UTC."""
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_manifest_time_travel_outside_utc(spark, tmp_path, new_york_tz):
+    """``as_of`` is a UTC instant whatever the local zone: a naive value
+    counts as UTC, as ``append_status`` stamps it, and an aware one is
+    converted (regression: the Spark fold passed a naive ``as_of`` to
+    ``F.lit``, which read it as local time, so west of UTC the as-of read
+    saw every commit)."""
+    _check_time_travel(spark, str(tmp_path / "manifest"))
 
 
 def test_streaming_cms_two_ticks_equal_batch(spark, tmp_path):
@@ -379,9 +409,8 @@ def test_manifest_concurrent_writers_torture(spark, tmp_path):
     commit gets a unique contiguous version, every committed version is
     readable, no append is lost to a racing snapshot, and last-writer-wins
     holds against a ground truth rebuilt from ALL append commits."""
-    import json
+    import datetime as dt
     import multiprocessing as mp
-    import os
 
     m = str(tmp_path / "manifest")
     n = 30
@@ -407,14 +436,15 @@ def test_manifest_concurrent_writers_torture(spark, tmp_path):
     # every committed version resolves to complete, readable data
     for v in versions:
         assert sp._read_log_arrow(sp._log_paths(m, v)).num_rows > 0
-    # and the Spark reader agrees at a sample of versions incl. head
+    # and the relation reader resolves a sample of versions incl. head
     for v in {0, versions[len(versions) // 2], versions[-1]}:
         sp.manifest_at(spark, m, version=v).collect()
 
     # ground truth: LWW over the union of ALL append commits
     rows = []
     for v in appends:
-        t = sp._read_log_arrow([sp.commit_data_path(m, v)]).to_pandas()
+        data = sp._entry_data_path(m, v, entries[v])
+        t = sp._read_log_arrow([(v, data)]).to_pandas()
         rows.extend(
             (r.key, r.status, r.updated_at) for r in t.itertuples()
         )
@@ -431,7 +461,8 @@ def test_manifest_concurrent_writers_torture(spark, tmp_path):
         winners = {s for ts, s in cands if ts == t_max}
         status, ts_got = got[k]
         assert status in winners
-        assert ts_got == t_max.to_pydatetime().replace(tzinfo=None)
+        # collect() gives local wall time; compare instants, not wall clocks
+        assert ts_got.astimezone(dt.timezone.utc) == t_max.to_pydatetime()
 
     # a final compaction + vacuum keeps exactly the live state readable
     sp.compact_manifest(spark, m)
@@ -441,42 +472,51 @@ def test_manifest_concurrent_writers_torture(spark, tmp_path):
     }
     assert after == {k: got[k][0] for k in got}
 
-def test_manifest_mixed_writer_compaction(spark, tmp_path):
-    """A log that mixes Spark-written and pyarrow-staged commits must be
-    readable and compactable by BOTH engines: Spark parquet timestamps
-    read back as naive ns, the driver-side staging writes tz-aware us —
-    _read_log_arrow normalizes before the concat (regression: the
-    driver-side compactor crashed with ArrowTypeError on exactly the
-    deployment the spark=None API exists for)."""
-    m = str(tmp_path / "manifest")
-    sp.append_status(spark, m, ["k1", "k2"], "started")  # Spark writer
-    sp.append_status(None, m, ["k2"], "done")  # non-Spark orchestrator
 
-    # driver-side (no-JVM) compaction over the mixed log
+def _spark_commit(spark, m: str, rows) -> None:
+    """An append commit whose parquet Spark wrote, as older versions of
+    the ledger wrote some of theirs: part-files named by Spark, INT96
+    timestamps that pyarrow reads back as naive timestamp[ns]."""
+    import uuid
+
+    rel = f"data/c-{uuid.uuid4().hex}"
+    spark.createDataFrame(rows, sp.MANIFEST_LOG_SCHEMA).write.parquet(f"{m}/{rel}")
+    sp._claim_commit(m, "append", rel)
+
+
+def test_manifest_mixed_writer_compaction(spark, tmp_path):
+    """A log that mixes Spark-written commits (naive ns timestamps) with
+    pyarrow-staged ones (tz-aware us) is readable and compactable:
+    _read_log_arrow normalizes before the concat (regression: the
+    driver-side compactor crashed with ArrowTypeError on such a log)."""
+    import datetime as dt
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    m = str(tmp_path / "manifest")
+    now = dt.datetime.now(dt.timezone.utc)
+    _spark_commit(spark, m, [("k1", "started", now), ("k2", "started", now)])
+    sp.append_status(None, m, ["k2"], "done")
+    spark_dir = sp._entry_data_path(m, 0, sp._read_entry(m, 0))
+    spark_part = glob.glob(os.path.join(spark_dir, "*.parquet"))[0]
+    assert pq.read_schema(spark_part).field("updated_at").type == pa.timestamp("ns")
+
     sp.compact_manifest(None, m)
     want = {"k1": "started", "k2": "done"}
     got = {r.key: r.status for r in sp.current_manifest(spark, m).collect()}
     assert got == want
 
-    # keep mixing after the snapshot; Spark-side compaction of the mix
-    sp.append_status(spark, m, ["k3"], "started")
+    # keep mixing after the snapshot, then compact the mix again
+    _spark_commit(spark, m, [("k3", "started", dt.datetime.now(dt.timezone.utc))])
     sp.compact_manifest(spark, m)
     sp.append_status(None, m, ["k1"], "done")
     want = {"k1": "done", "k2": "done", "k3": "started"}
     got = {r.key: r.status for r in sp.current_manifest(spark, m).collect()}
     assert got == want
-    # arrow reader agrees at head (mixed snapshot + arrow append)
-    t = sp._read_log_arrow(
-        sp._log_paths(m, sp._versions(m)[-1])
-    ).to_pandas()
-    arrow_lww = (
-        t.sort_values("updated_at", kind="mergesort")
-        .drop_duplicates("key", keep="last")
-    )
-    assert {
-        r.key: (None if r.status != r.status else r.status)
-        for r in arrow_lww.itertuples()
-    } == want
+    assert sp.manifest_statuses(m) == want
 
 
 def test_vacuum_reclaims_orphans(tmp_path):
@@ -517,22 +557,21 @@ def test_vacuum_reclaims_orphans(tmp_path):
 
 def test_lww_equal_timestamps_resolve_by_commit_order(spark, tmp_path):
     """Two appends carrying the SAME updated_at must resolve to the later
-    COMMIT deterministically, in both the Spark reader and the driver-side
-    arrow compactor (regression: row_number over updated_at alone picked
-    an arbitrary winner)."""
+    COMMIT deterministically, before and after compaction (regression:
+    row_number over updated_at alone picked an arbitrary winner)."""
     import datetime as dt
 
     m = str(tmp_path / "manifest")
     ts = dt.datetime(2024, 1, 1, 12, 0, 0)
-    rel = sp._stage_rows(None, m, [("k", "first", ts)])
+    rel = sp._stage_rows(m, [("k", "first", ts)])
     sp._claim_commit(m, "append", rel)
-    rel = sp._stage_rows(None, m, [("k", "second", ts)])
+    rel = sp._stage_rows(m, [("k", "second", ts)])
     sp._claim_commit(m, "append", rel)
 
     got = {r.key: r.status for r in sp.current_manifest(spark, m).collect()}
     assert got == {"k": "second"}
 
-    sp.compact_manifest(None, m)  # arrow compactor must agree
+    sp.compact_manifest(None, m)  # the snapshot keeps the commit-order winner
     got = {r.key: r.status for r in sp.current_manifest(spark, m).collect()}
     assert got == {"k": "second"}
 
@@ -543,32 +582,47 @@ def _legacy_commit(m: str, version: int, rows) -> None:
     import json
     import os
 
-    rel = sp._stage_rows(None, m, rows)
+    rel = sp._stage_rows(m, rows)
     os.rename(os.path.join(m, rel), sp._data_path(m, version))
     os.makedirs(sp._log_dir(m), exist_ok=True)
     with open(os.path.join(sp._log_dir(m), f"{version:08d}.json"), "w") as f:
         json.dump({"version": version, "action": "append"}, f)
 
 
-def test_driver_fold_equals_spark_current_manifest(spark, tmp_path):
-    """``manifest_statuses`` (the driver-side fold ``process_pending``
-    reads) equals ``{key: status}`` of the Spark ``current_manifest`` on
-    seeded random logs mixing a legacy data/vNNNNNNNN commit, pyarrow and
-    Spark-written appends, ``clear_status`` (NULL status), commits with
-    equal timestamps, Spark and pyarrow snapshots, and a snapshot that
-    lost the race to an append claimed after its base (the append outranks
-    the snapshot's rows on a timestamp tie)."""
+def _replay_appends(m: str, upto: int) -> dict:
+    """Reference last-writer-wins: every ``append`` commit's rows at or
+    below ``upto``, replayed in (updated_at, version) order, the last row
+    per key winning. Snapshots are ignored: their rows only restate
+    appends."""
+    rows = []
+    for v in sp._versions(m):
+        e = sp._read_entry(m, v)
+        if v <= upto and e["action"] == "append":
+            t = sp._read_log_arrow([(v, sp._entry_data_path(m, v, e))])
+            rows += [(r["updated_at"], v, r["key"], r["status"]) for r in t.to_pylist()]
+    state = {}
+    for _, _, key, status in sorted(rows, key=lambda r: r[:2]):
+        state[key] = status
+    return state
+
+
+def test_manifest_fold_equals_append_replay(spark, tmp_path):
+    """``manifest_statuses``, ``current_manifest`` and ``manifest_at``
+    equal a plain replay of the append commits on seeded random logs
+    mixing a legacy data/vNNNNNNNN commit, pyarrow and Spark-written
+    appends, ``clear_status`` (NULL status), commits with equal
+    timestamps, snapshots, and a snapshot that lost the race to an append
+    claimed after its base (the append outranks the snapshot's rows on a
+    timestamp tie)."""
     import datetime as dt
     import random
-
-    import pyarrow as pa
 
     statuses = ["in progress", "complete", "failure", None]
     for seed in range(4):
         rng = random.Random(seed)
         m = str(tmp_path / f"m{seed}")
         keys = [f"file:/bags/b{i}.bag" for i in range(6)]
-        t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+        t0 = dt.datetime(2024, 1, 1, 12, 0, 0, tzinfo=dt.timezone.utc)
 
         def rows():
             ts = t0 + dt.timedelta(seconds=rng.randrange(3))  # many ties
@@ -577,50 +631,68 @@ def test_driver_fold_equals_spark_current_manifest(spark, tmp_path):
         _legacy_commit(m, 0, rows())
         for _ in range(14):
             op = rng.randrange(6)
-            if op == 0:
-                sp.compact_manifest(spark, m)
-            elif op == 1:
-                sp.compact_manifest(None, m)
+            if op in (0, 1):  # the spark argument is call-site compatibility
+                sp.compact_manifest(spark if op == 0 else None, m)
             elif op == 2:
                 sp.clear_status(None, m, rng.sample(keys, 2))
-            elif op == 3:  # Spark-written append
-                cols = dict(zip(("key", "status", "updated_at"), zip(*rows())))
-                df = spark.createDataFrame(pa.table(cols), sp.MANIFEST_LOG_SCHEMA)
-                sp._claim_commit(m, "append", sp._stage_rows(spark, m, df))
+            elif op == 3:
+                _spark_commit(spark, m, rows())
             elif op == 4:  # racing compactor: an append claims first
                 head = sp._versions(m)[-1]
-                snap = [
-                    (r.key, None if sp._isna(r.status) else r.status,
-                     r.updated_at.to_pydatetime())
-                    for r in sp._fold_log(m, head).itertuples()
-                ]
-                rel = sp._stage_rows(None, m, snap)
+                snap = list(zip(*sp._fold_log(m, head).to_pydict().values()))
+                rel = sp._stage_rows(m, snap)
                 race = [(k, rng.choice(statuses), ts) for k, _, ts in snap[:2]]
-                sp._claim_commit(m, "append", sp._stage_rows(None, m, race))
+                sp._claim_commit(m, "append", sp._stage_rows(m, race))
                 sp._claim_commit(m, "snapshot", rel, base=head)
             else:
-                sp._claim_commit(m, "append", sp._stage_rows(None, m, rows()))
-        want = {r.key: r.status for r in sp.current_manifest(spark, m).collect()}
+                sp._claim_commit(m, "append", sp._stage_rows(m, rows()))
+        versions = sp._versions(m)
+        want = _replay_appends(m, versions[-1])
         assert sp.manifest_statuses(m) == want, seed
+        got = {r.key: r.status for r in sp.current_manifest(spark, m).collect()}
+        assert got == want, seed
+        for v in rng.sample(versions, 3):
+            got = {r.key: r.status for r in sp.manifest_at(spark, m, version=v).collect()}
+            assert got == _replay_appends(m, v), (seed, v)
     assert sp.manifest_statuses(str(tmp_path / "none")) == {}
 
 
 def test_empty_manifest_is_a_local_relation(spark, tmp_path):
-    """``current_manifest`` over a ledger with no commit is an arrow-backed
-    local relation: collecting it runs no Spark job (a frame built from a
-    Python list runs one Python-worker job), with the declared types."""
+    """``current_manifest`` and ``manifest_at`` are arrow-backed local
+    relations with the declared types, over a ledger with no commit and
+    over a compacted one: collecting them runs no Spark job (a frame
+    built from a Python list runs one Python-worker job; the old Spark
+    fold ran a window over a parquet scan)."""
     sc = spark.sparkContext
-    m = str(tmp_path / "manifest")
-    sc.setJobGroup("empty-manifest", "empty-manifest")
+    empty = str(tmp_path / "empty")
+    full = str(tmp_path / "full")
+    keys = [f"k{i:02d}" for i in range(24)]
+    sp.append_status(None, full, keys, "in progress")
+    sp.append_status(None, full, keys[::2], "complete")
+    sp.compact_manifest(None, full)
+    sp.clear_status(None, full, keys[:3])
+    sp.append_status(None, full, keys[5:9], "failure")
+    sc.setJobGroup("manifest-reads", "manifest-reads")
     try:
-        assert sp.current_manifest(spark, m).collect() == []
-        assert sp.manifest_at(spark, m).collect() == []
+        assert sp.current_manifest(spark, empty).collect() == []
+        assert sp.manifest_at(spark, empty).collect() == []
+        head = sp.current_manifest(spark, full).collect()
+        v1 = sp.manifest_at(spark, full, version=1).collect()
     finally:
         sc.setJobGroup(None, None)
-    assert sc.statusTracker().getJobIdsForGroup("empty-manifest") == []
+    assert sc.statusTracker().getJobIdsForGroup("manifest-reads") == []
+    assert len(head) == 24
+    assert sum(r.status is None for r in head) == 3
+    assert {r.key: r.status for r in v1} == {
+        k: "complete" if i % 2 == 0 else "in progress" for i, k in enumerate(keys)
+    }
     want = spark.createDataFrame([], sp.MANIFEST_LOG_SCHEMA).schema
-    assert sp.current_manifest(spark, m).schema == want
-    assert sp._log_frame(spark, m, 0).dtypes[-1] == ("__v", "bigint")
+    for df in (
+        sp.current_manifest(spark, empty),
+        sp.current_manifest(spark, full),
+        sp.manifest_at(spark, full, version=3),
+    ):
+        assert df.schema == want
 
 
 def test_streaming_chunk_store_uploads_only_the_delta(spark, tmp_path):

@@ -141,26 +141,6 @@ def test_brute_force_topk_matches_python(spark, emb):
                 assert r.cosine == pytest.approx(round(want, 6), abs=1e-6)
 
 
-def test_pandas_topk_agrees_with_brute_force(spark, emb):
-    import pandas as pd
-
-    queries = spark.createDataFrame(VECS[:2], "vec_id long, embedding array<double>")
-    queries_pdf = pd.DataFrame(
-        {"vec_id": [v[0] for v in VECS[:2]], "embedding": [v[1] for v in VECS[:2]]}
-    )
-    bf = {
-        (r.query_id, r.neighbor_id): r.cosine
-        for r in similarity.brute_force_topk(emb, queries, k=2).collect()
-    }
-    pk = {
-        (r.query_id, r.neighbor_id): r.cosine
-        for r in similarity.pandas_topk(emb, queries_pdf, k=2).collect()
-    }
-    assert set(bf) == set(pk)
-    for k in bf:
-        assert bf[k] == pytest.approx(pk[k], abs=1e-6)
-
-
 def test_ivf_topk_recall_and_exact_scores(spark):
     """IVF with full probing (n_probe = n_lists) must equal brute force;
     partial probing returns a subset with exact cosines."""
@@ -766,12 +746,10 @@ def test_bm25_sql_text_path_matches_column_path(spark, monkeypatch):
 
 
 def test_zero_norm_and_null_embeddings_dont_abort_search(spark):
-    """A zero-norm or NULL embedding must not abort the search/dedup job
-    under ANSI mode: norm() yields NULL so degenerate vectors simply
-    never match; the numpy baseline filters them and handles an empty
-    corpus (regression)."""
+    """A zero-norm or NULL embedding must not abort the search job under
+    ANSI mode: norm() yields NULL so degenerate vectors simply never
+    match (regression)."""
     from aws_autonomous_driving_data_lake_mwaa_ros_bag_image_extraction_pipeline_spark.operators import (
-        dedup,
         similarity,
     )
 
@@ -788,19 +766,6 @@ def test_zero_norm_and_null_embeddings_dont_abort_search(spark):
     ).collect()
     matched = {r.neighbor_id for r in got if r.cosine is not None}
     assert 2 in matched and 3 not in matched and 4 not in matched
-
-    pairs = dedup.embedding_dup_pairs_numpy(
-        emb, id_col="doc_id", vec_col="embedding", threshold=0.9
-    ).collect()
-    assert {(r.id_a, r.id_b) for r in pairs} == {(1, 2)}
-
-    empty = spark.createDataFrame([], "doc_id long, embedding array<double>")
-    assert (
-        dedup.embedding_dup_pairs_numpy(
-            empty, id_col="doc_id", vec_col="embedding", threshold=0.9
-        ).count()
-        == 0
-    )
 
 
 def test_winnow_overlap_pairs_catches_lifted_paragraph(spark):

@@ -17,6 +17,9 @@
 set -e
 cd "$(dirname "$0")/.."
 python -m pytest tests/ -q
+# the ledger's as-of and collect() timestamps west of UTC: a naive instant
+# read as local time shows only when the process's zone is not UTC
+TZ=America/New_York python -m pytest tests/test_streaming.py -q -k "manifest or lww or compaction"
 # the benchmark's self-tests: its probes and drivers call the bag decoders
 # and runner.run_once directly
 python -m pytest perfbench -q
