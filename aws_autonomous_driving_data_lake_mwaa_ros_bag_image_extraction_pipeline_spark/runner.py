@@ -8,13 +8,17 @@ draw → tag complete (rosbag_processing.py:131-136, processing.py:30-50,
       terminal/active keys, like the reference's sensor)
       → decode bags: messages + frames → infer (P13) → draw (P12), in
         one Python task per bag
-      → topic landing (K1) · labels → frame_stats aggregate (A1+A2, K4)
-        · labels JSON · annotated binary sink (K7)
+      → topic landing (K1), then at once: labels → frame_stats aggregate
+        (A1+A2, K4) · labels JSON · annotated binary sink (K7)
       → manifest transitions in progress → complete | failure (O1/O2, K8),
         committed driver-side
 
 The empty-discovery branch (O1 ``no_work``) returns before any Spark job,
 and a tick with work runs a fixed number of jobs whatever its bag count.
+Each job is described by its stage (``e1.landing``, ``e1.frame_stats``,
+``e1.labels``, ``e1.annotated``) inside the caller's job group, so the
+status store names what a tick ran; the reference scales out with one
+Fargate task per bag, this tick by running its frame sinks side by side.
 Failures mark ``failure`` per bag instead of the reference's silent
 container-STOP=success (processing.py:154-173). Every stage is a DataFrame
 transform — no XCom, no polling; lineage replaces cross-task value passing
@@ -23,8 +27,12 @@ transform — no XCom, no polling; lineage replaces cross-task value passing
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+from pyspark import SparkContext, inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators import frame_stats, sinks
@@ -52,6 +60,18 @@ class PipelineConfig:
     extra: dict = field(default_factory=dict)
 
 
+@contextmanager
+def _job_description(sc: SparkContext, name: str) -> Iterator[None]:
+    """Jobs this thread starts inside the block carry ``name`` as their
+    description; the caller's description is back afterwards."""
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)
+
+
 def process_bags(
     spark: SparkSession, cfg: PipelineConfig, batch: DataFrame
 ) -> list[str]:
@@ -67,8 +87,14 @@ def process_bags(
     and no PNG is decoded again. The decoded rows are persisted and split
     into the topic landing and the three frame sinks; the slim labels
     projection is persisted too, so the stats and labels sinks never
-    re-read the annotated PNGs. Appends (not overwrites) so each
-    incremental tick adds its bags to the landing tables.
+    re-read the annotated PNGs.
+
+    The landing write runs first and materialises the decode; the
+    frame_stats, labels and annotated writes (and the ``sync_dir`` export
+    when set) then run together, one pool thread each, with the caller's
+    job group and scheduler pool. Starting a frame sink before the decode
+    is cached would let two jobs decode the same bag. The tick waits for
+    every sink, re-raises the first error and only then unpersists.
 
     Failure isolation is the quarantine pattern: a bag that fails to open
     or parse becomes one error row, the whole batch is ONE set of Spark
@@ -84,7 +110,8 @@ def process_bags(
     ``clear_status`` (or a tick retried after a mid-pipeline failure)
     rewrites ITS OWN partitions instead of appending duplicates — a bag
     whose telemetry landed but whose frames stage failed would otherwise
-    double its topic_messages on replay.
+    double its topic_messages on replay. The mode is a per-write option,
+    not the session conf, which every thread of the session shares.
     """
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
@@ -120,42 +147,57 @@ def process_bags(
         .filter(is_msg)
         .select(MESSAGE_COLUMNS)
     )
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        msgs.write.partitionBy(
-            "bag_id", "topic"
-        ).mode("overwrite").option("compression", "snappy").parquet(
-            f"{cfg.output_dir}/topic_messages"
+    sc = spark.sparkContext
+
+    def overwrite(df: DataFrame, *cols: str):
+        return (
+            df.write.partitionBy(*cols)
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
         )
+
+    try:
+        with _job_description(sc, "e1.landing"):
+            overwrite(msgs, "bag_id", "topic").option(
+                "compression", "snappy"
+            ).parquet(f"{cfg.output_dir}/topic_messages")
         metrics = cfg.extra["last_metrics"] = obs.get
         failed = list(metrics["failed_paths"])
 
         stats = frame_stats.pivot_stats(
             labels, vocabulary=frame_stats.vocabulary_of(metrics["label_names"])
         )
-        stats.write.partitionBy("bag_id").mode("overwrite").parquet(
-            f"{cfg.output_dir}/frame_stats"
-        )
-        labels.write.partitionBy("bag_id", "camera").mode("overwrite").json(
-            f"{cfg.output_dir}/labels"
-        )
-
         annotated = frames.select(*keys, "annotated")
-        annotated.write.partitionBy("bag_id", "camera").mode(
-            "overwrite"
-        ).parquet(f"{cfg.output_dir}/annotated")
+        writes = {
+            "e1.frame_stats": lambda: overwrite(stats, "bag_id").parquet(
+                f"{cfg.output_dir}/frame_stats"
+            ),
+            "e1.labels": lambda: overwrite(labels, "bag_id", "camera").json(
+                f"{cfg.output_dir}/labels"
+            ),
+            "e1.annotated": lambda: overwrite(
+                annotated, "bag_id", "camera"
+            ).parquet(f"{cfg.output_dir}/annotated"),
+        }
         if cfg.sync_dir is not None:
-            sinks.export_binary_files(
+            writes["e1.sync"] = lambda: sinks.export_binary_files(
                 annotated.withColumn("filename", sinks.frame_filename()),
                 cfg.sync_dir,
             )
+        # the landing write has materialised the persisted decode, so the
+        # frame sinks only read its cache blocks and can run at once
+        done = []
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            for name, write in writes.items():
+                # the wrapper copies this thread's local properties now:
+                # the caller's job group and pool, described as ``name``
+                with _job_description(sc, name):
+                    done.append(
+                        pool.submit(inheritable_thread_target(spark)(write))
+                    )
+        for f in done:
+            f.result()
     finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
         decoded.unpersist()
         labels.unpersist()
     return failed

@@ -1034,19 +1034,13 @@ def streaming_bag_ingest(
     )
 
     def _fb(batch: DataFrame, _epoch: int) -> None:
-        s = batch.sparkSession
-        prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            for topic in topics:
-                name = topic.strip("/").replace("/", "_")
-                widen_topic(batch, topic).write.partitionBy(
-                    "bag_id"
-                ).mode("overwrite").option("compression", "snappy").parquet(
-                    os.path.join(dest_dir, name)
-                )
-        finally:
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        for topic in topics:
+            name = topic.strip("/").replace("/", "_")
+            widen_topic(batch, topic).write.partitionBy("bag_id").mode(
+                "overwrite"
+            ).option("partitionOverwriteMode", "dynamic").option(
+                "compression", "snappy"
+            ).parquet(os.path.join(dest_dir, name))
 
     q = (
         stream.writeStream.foreachBatch(_fb)

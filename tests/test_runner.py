@@ -340,21 +340,94 @@ def test_e1_frames_match_infer_and_annotate(spark, tmp_path):
     }
 
 
+def _last_job_id(sc) -> int:
+    """The newest job id Spark has assigned so far (ids are consecutive)."""
+    st = sc.statusTracker()
+    last = max(st.getJobIdsForGroup(None), default=-1)
+    while st.getJobInfo(last + 1) is not None:
+        last += 1
+    return last
+
+
+def _tick_under_group(spark, cfg, group: str) -> tuple[list[int], list[int], str]:
+    """Run one tick under the job group ``group`` (described "caller"):
+    every job id started during the tick, the ids Spark filed under the
+    group, and the caller's job description once the tick returned."""
+    sc = spark.sparkContext
+    before = _last_job_id(sc)
+    sc.setJobGroup(group, "caller")
+    try:
+        runner.run_once(spark, cfg)
+        desc = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setJobGroup(None, None)
+    started = list(range(before + 1, _last_job_id(sc) + 1))
+    return started, sorted(sc.statusTracker().getJobIdsForGroup(group)), desc
+
+
 def test_warm_tick_job_count_pinned(spark, tmp_path):
     """A warm E1 tick runs a fixed, small number of Spark jobs: the landing
     write and the frame sinks over one persisted decode, with driver-side
     discovery and ledger commits. A stage added back to the tick (a
     second Python pass over the frames, a join, a Spark ledger read or
-    commit, a Spark listing) fails here, not only in the benchmark."""
-    sc = spark.sparkContext
+    commit, a Spark listing) fails here, not only in the benchmark. Every
+    job the tick starts, those of the frame sinks' pool threads included,
+    is in the caller's job group: a job that lost the group would go
+    uncounted below."""
     fixtures.write_bag_dir(str(tmp_path / "bags"), n_bags=2, tar_gz=(1,))
     runner.run_once(spark, _fixture_cfg(tmp_path, "cold"))
-    sc.setJobGroup("warm-tick", "warm-tick")
-    try:
-        runner.run_once(spark, _fixture_cfg(tmp_path, "warm"))
-    finally:
-        sc.setJobGroup(None, None)
-    assert len(sc.statusTracker().getJobIdsForGroup("warm-tick")) <= JOBS_PER_TICK
+    started, grouped, _ = _tick_under_group(
+        spark, _fixture_cfg(tmp_path, "warm"), "warm-tick"
+    )
+    assert started and grouped == started
+    assert len(grouped) <= JOBS_PER_TICK
+
+
+def test_e1_jobs_named_by_stage(spark, tmp_path):
+    """Each job of a tick is described by its E1 stage (the landing write
+    or one of the three frame sinks) while it stays in the caller's job
+    group, and the caller's own job description is back after the tick."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    fixtures.write_bag_dir(str(tmp_path / "bags"), n_bags=2, tar_gz=(1,))
+    started, grouped, desc = _tick_under_group(
+        spark, _fixture_cfg(tmp_path, "named"), "named-tick"
+    )
+    assert started and grouped == started
+    assert desc == "caller"
+    names = set()
+    for jid in started:
+        d = store.job(jid).description()
+        names.add(d.get() if d.isDefined() else None)
+    assert names == {"e1.landing", "e1.frame_stats", "e1.labels", "e1.annotated"}
+
+
+def test_dynamic_overwrite_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
+    """E1's sinks and ``streaming_bag_ingest``'s topic writes ask for a
+    dynamic partition overwrite per write, never through the session conf:
+    the conf is shared by every thread of the session (the frame sinks run
+    on a pool), so setting and restoring it would race with them and with
+    the caller's own queries."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    keys = []
+    set_conf = RuntimeConfig.set
+
+    def spy(self, k, v):
+        keys.append(k)
+        return set_conf(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    bags = str(tmp_path / "bags")
+    fixtures.write_bag_dir(bags, n_bags=1, tar_gz=())
+    assert set(runner.run_once(spark, _fixture_cfg(tmp_path, "e1")).values()) == {
+        "complete"
+    }
+    sp.streaming_bag_ingest(
+        spark, bags, str(tmp_path / "lake"), str(tmp_path / "ck"), ["/imu"]
+    )
+    assert spark.read.parquet(str(tmp_path / "lake" / "imu")).count() > 0
+    assert key not in keys
 
 
 def test_no_work_tick_runs_no_spark_job(spark, tmp_path):
